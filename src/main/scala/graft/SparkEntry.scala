@@ -237,20 +237,21 @@ object SparkEntry {
           meta, Seq("series_name"), Start, End, stepSeconds = 3600L)
       )
     },
-    // A10b/A11b: same resamples through the custom physical operator
-    // (ResampleAlignExec: one exchange + one sort + single pass)
+    // A10b/A11b: the A10/A11 resamples under their historical `_exec`
+    // names — both now plan the same ResampleAlignExec operator; the
+    // entries stay so the oracle counts remain comparable
     "ts_resample_stepped_exec" -> { (s, dir) =>
       ntz(
-        TimeSeriesOps.resampleExec(
+        TimeSeriesOps.resampleStepped(
           evRange(s, dir, new Timestamp(0L), End).select(col("series_name"), col("ts"), col("value")),
-          Seq("series_name"), linear = false, Start, End, stepSeconds = 3600L)
+          Seq("series_name"), Start, End, stepSeconds = 3600L)
       )
     },
     "ts_resample_linear_exec" -> { (s, dir) =>
       ntz(
-        TimeSeriesOps.resampleExec(
+        TimeSeriesOps.resampleLinear(
           ev(s, dir).select(col("series_name"), col("ts"), col("value")),
-          Seq("series_name"), linear = true, Start, End, stepSeconds = 3600L)
+          Seq("series_name"), Start, End, stepSeconds = 3600L)
       )
     },
     // A18: metadata-driven physical-limit outlier screen

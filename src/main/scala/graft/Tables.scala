@@ -4,14 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.model.Time.micros
+import graft.sources.SourceFrames
+
 /** Loaders for the driver-generated test tables.
   *
-  * All reads stay declarative (`spark.read.parquet`) so Catalyst keeps
-  * predicate pushdown, column pruning and partition pruning. The only
-  * normalization done eagerly is the `events.ts` timestamp conversion,
-  * which adapts to how the file stores time (see [[events]]).
+  * All reads stay declarative (parquet relations through the
+  * [[graft.sources.SourceFrames]] memo, so an unchanged table is listed
+  * but not re-inferred) and Catalyst keeps predicate pushdown, column
+  * pruning and partition pruning. The only normalization done eagerly
+  * is the `events.ts` timestamp conversion, which adapts to how the
+  * file stores time (see [[events]]).
   */
 object Tables {
+
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    SourceFrames.load(spark, "parquet", Map.empty, path)
 
   /** `events.ts` has been generated in different physical types across
     * data drops; normalize all of them to the session-µs TimestampType
@@ -27,7 +35,7 @@ object Tables {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    normalizeTs(parquet(spark, s"$sfDir/events.parquet"))
   }
 
   private def normalizeTs(raw: DataFrame): DataFrame =
@@ -54,10 +62,10 @@ object Tables {
       end: java.sql.Timestamp,
   ): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = parquet(spark, s"$sfDir/events.parquet")
     val filtered = raw.schema("ts").dataType match {
       case LongType =>
-        raw.where(col("ts") >= lit(start.getTime * 1000000L) && col("ts") < lit(end.getTime * 1000000L))
+        raw.where(col("ts") >= lit(micros(start) * 1000L) && col("ts") < lit(micros(end) * 1000L))
       case TimestampNTZType =>
         def asNtz(t: java.sql.Timestamp) =
           java.time.LocalDateTime.ofInstant(t.toInstant, java.time.ZoneOffset.UTC)
@@ -70,7 +78,7 @@ object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else parquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.SeriesDictionary
+import graft.model.{SeriesDictionary, Time}
 
 /** Time-series operators over the canonical frame `(tags…, ts, value[, quality])`.
   *
@@ -127,8 +127,8 @@ object TimeSeriesOps {
       end: Timestamp,
       intervalCount: Int,
   ): DataFrame = {
-    val startUs = start.getTime * 1000L
-    val endUs = end.getTime * 1000L
+    val startUs = Time.micros(start)
+    val endUs = Time.micros(end)
     val span = endUs - startUs
     // floor() keeps the bucket math bit-identical to a C-engine oracle:
     // the products stay < 2^53 so the double division is exact.
@@ -156,11 +156,11 @@ object TimeSeriesOps {
 
   /** Regular-grid resample with STEPPED interpolation
     * (kukur/base.py:145): value at grid time t = last observed value at
-    * ts <= t, null before the first point.
-    *
-    * Implemented as grid ∪ data + one window `last(ignoreNulls)` pass —
-    * a single sort-shuffle partitioned by series, linear in
-    * (points + grid), no range-join blowup at scale.
+    * ts <= t, null before the first point. Grid points are
+    * `start + k·step` in [start, end), one set per series present in
+    * `df`; values resample as doubles, duplicate timestamps collapse
+    * to their max value and null values are invisible. Planned through
+    * [[resample]].
     */
   def resampleStepped(
       df: DataFrame,
@@ -168,29 +168,13 @@ object TimeSeriesOps {
       start: Timestamp,
       end: Timestamp,
       stepSeconds: Long,
-  ): DataFrame = {
-    val grid = seriesGrid(df, tagCols, start, end, stepSeconds)
-    val data = dedupTs(df.where(col("ts") < lit(end)), tagCols)
-      .select(tagCols.map(col) :+ col("ts") :+ col("value").as("v") :+ lit(0).as("is_grid"): _*)
-    val gridRows = grid.select(tagCols.map(col) :+ col("ts") :+ lit(null).cast("double").as("v") :+ lit(1).as("is_grid"): _*)
-    // Data sorts before grid at equal ts so a point exactly on a grid
-    // time is included (matches ASOF >= semantics).
-    val w = Window
-      .partitionBy(tagCols.map(col): _*)
-      .orderBy(col("ts"), col("is_grid"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    data
-      .unionByName(gridRows)
-      .withColumn("value", last(col("v"), ignoreNulls = true).over(w))
-      .where(col("is_grid") === 1)
-      .select(tagCols.map(col) :+ col("ts") :+ col("value"): _*)
-  }
+  ): DataFrame = resample(df, tagCols, linear = false, start, end, stepSeconds)
 
   /** Regular-grid resample with LINEAR interpolation (kukur/base.py:145):
     * v(t) = v0 + (v1 - v0) * (t - t0) / (t1 - t0) between the
-    * neighbouring points, the exact boundary value on a sample, null
-    * outside the observed range. Same union+window shape as stepped —
-    * two window passes (prev/next), still one sort.
+    * neighbouring points, the exact value on a sample, null outside the
+    * observed range. Same grid and point rules as [[resampleStepped]];
+    * points after `end` still serve as right neighbours.
     */
   def resampleLinear(
       df: DataFrame,
@@ -198,53 +182,8 @@ object TimeSeriesOps {
       start: Timestamp,
       end: Timestamp,
       stepSeconds: Long,
-  ): DataFrame = {
-    val grid = seriesGrid(df, tagCols, start, end, stepSeconds)
-    val data = dedupTs(df, tagCols).select(
-      tagCols.map(col) :+ col("ts") :+ col("value").as("v") :+ lit(0).as("is_grid"): _*
-    )
-    val gridRows = grid.select(
-      tagCols.map(col) :+ col("ts") :+ lit(null).cast("double").as("v") :+ lit(1).as("is_grid"): _*
-    )
-    val both = data.unionByName(gridRows)
-    val part = Window.partitionBy(tagCols.map(col): _*)
-    // Both neighbours come from *running* frames (unboundedPreceding →
-    // currentRow), which Spark evaluates in O(n); an unbounded-following
-    // frame with ignoreNulls degrades to O(n²) per partition.
-    // prev: data point at ts <= t (data before grid on ties)
-    val wPrev = part.orderBy(col("ts"), col("is_grid")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // next: data point at ts >= t — running last() over ts DESC, with
-    // data before grid on ties so an exact hit resolves to that point
-    // for both neighbours (interpolating to v0).
-    val wNext = part.orderBy(col("ts").desc, col("is_grid")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // `v.isNotNull` keeps null data values out of the neighbour structs:
-    // a null point is invisible to interpolation (same contract as
-    // stepped's last(ignoreNulls) and the ResampleAlignExec operator) —
-    // without it the struct wrapper defeats ignoreNulls (non-null struct
-    // with null v) and a null point would black-hole its neighbourhood.
-    val isPoint = col("is_grid") === 0 && col("v").isNotNull
-    val prevStruct = last(when(isPoint, struct(unix_micros(col("ts")).as("us"), col("v"))), ignoreNulls = true).over(wPrev)
-    val nextStruct = last(when(isPoint, struct(unix_micros(col("ts")).as("us"), col("v"))), ignoreNulls = true).over(wNext)
-    both
-      .withColumn("prev", prevStruct)
-      .withColumn("next", nextStruct)
-      .where(col("is_grid") === 1)
-      .withColumn(
-        "value",
-        when(col("prev").isNull || col("next").isNull, lit(null).cast("double"))
-          .when(col("next.us") === col("prev.us"), col("prev.v"))
-          .otherwise(
-            col("prev.v") + (col("next.v") - col("prev.v")) *
-              (unix_micros(col("ts")) - col("prev.us")).cast("double") /
-              (col("next.us") - col("prev.us")).cast("double")
-          ),
-      )
-      .select(tagCols.map(col) :+ col("ts") :+ col("value"): _*)
-  }
+  ): DataFrame = resample(df, tagCols, linear = true, start, end, stepSeconds)
 
-  /** Collapse duplicate timestamps per series deterministically (max
-    * value wins) so resampling and as-of alignment are well-defined.
-    */
   /** Metadata-driven resample: the reference's InterpolationType is a
     * PER-SERIES metadata field (base.py:145, fields.py), so a client
     * resampling a mixed batch interpolates each series per ITS declared
@@ -253,7 +192,7 @@ object TimeSeriesOps {
     * plan, everything else (STEPPED or undeclared) defaults to stepped
     * — kukur's default for non-continuous data. Both branches filter by
     * a broadcast semi/anti join (no shuffle of the data side beyond
-    * each resample's own single sort) and union.
+    * each resample's own exchange + sort) and union.
     */
   def resampleByMetadata(
       df: DataFrame,
@@ -272,16 +211,13 @@ object TimeSeriesOps {
       .unionByName(resampleStepped(stp, tagCols, start, end, stepSeconds))
   }
 
-  private def dedupTs(df: DataFrame, tagCols: Seq[String]): DataFrame =
-    df.groupBy((tagCols.map(col) :+ col("ts")): _*)
-      .agg(max(col("value")).as("value"))
-
-  /** Whole-operator resample via the custom physical operator
-    * (graft.plans.ResampleAlignExec): one exchange + one sort + one
-    * forward pass, versus the window formulation's union + two sorts.
-    * Identical semantics to [[resampleLinear]] / [[resampleStepped]].
+  /** The one resample plan: the custom physical operator
+    * (graft.plans.ResampleAlignExec) asks for one exchange by series and
+    * one sort by (series, ts), then a single forward pass per partition
+    * emits the whole grid — O(points + grid), no grid union, no window
+    * sort. Bounds are passed µs-exact ([[Time.micros]]).
     */
-  def resampleExec(
+  private def resample(
       df: DataFrame,
       tagCols: Seq[String],
       linear: Boolean,
@@ -298,37 +234,12 @@ object TimeSeriesOps {
         org.apache.spark.sql.GraftSqlBridge.logicalPlan(child),
         tagCols.size,
         linear,
-        start.getTime * 1000L,
-        end.getTime * 1000L,
+        Time.micros(start),
+        Time.micros(end),
         stepSeconds * 1000000L,
       ),
     )
   }
-
-  /** One grid row per (series, step) over [start, end). Built from
-    * `sequence`+`explode` against the distinct series set — the per-row
-    * array stays bounded because callers size step vs range; for
-    * unbounded ranges use Simulators.timeRange (spark.range-based).
-    */
-  private def seriesGrid(
-      df: DataFrame,
-      tagCols: Seq[String],
-      start: Timestamp,
-      end: Timestamp,
-      stepSeconds: Long,
-  ): DataFrame =
-    df.select(tagCols.map(col): _*)
-      .distinct()
-      .withColumn(
-        "ts",
-        explode(
-          sequence(
-            lit(start),
-            lit(new Timestamp(end.getTime - 1L)),
-            expr(s"interval $stepSeconds seconds"),
-          )
-        ),
-      )
 
   /** As-of join: for every left row, the most recent right value with
     * `right.ts <= left.ts` per key (STEPPED alignment, the Timeseer-style

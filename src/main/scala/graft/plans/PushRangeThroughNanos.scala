@@ -102,12 +102,15 @@ object PushRangeThroughNanos extends Rule[LogicalPlan] {
 
 object GraftOptimizations {
 
-  /** Install graft's optimizer rules into a live session (idempotent). */
+  /** Install graft's optimizer rules and planner strategies into a live
+    * session (idempotent).
+    */
   def install(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(PushRangeThroughNanos)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ (PushRangeThroughNanos: Rule[LogicalPlan])
     }
+    ResampleAlign.install(spark)
     GraftFunctions.register(spark)
   }
 }

@@ -12,16 +12,17 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * physical operator for grid interpolation (SURVEY A10/A11, kukur
   * InterpolationType semantics).
   *
-  * The built-in formulation (union grid rows + two window passes with
-  * opposite orderings) is correct but sorts the unioned frame twice.
-  * This operator declares `requiredChildDistribution` (cluster by
-  * series tags) and `requiredChildOrdering` (tags, ts) — Catalyst
-  * inserts exactly one exchange + one sort — and then a single forward
-  * pass per partition emits the whole grid: O(points + grid), no grid
-  * union, no second sort. Semantics are identical to the window
-  * version, including duplicate-timestamp collapse (max value wins),
-  * nulls outside the observed range (LINEAR) and carry-forward
-  * (STEPPED).
+  * This is graft's only resample plan
+  * (`TimeSeriesOps.resampleStepped` / `resampleLinear`). It declares
+  * `requiredChildDistribution` (cluster by series tags) and
+  * `requiredChildOrdering` (tags, ts) — Catalyst inserts exactly one
+  * exchange + one sort — and then a single forward pass per partition
+  * emits the whole grid: O(points + grid), no grid union, no window
+  * sort. It collapses duplicate timestamps (max value wins), ignores
+  * null values, leaves nulls outside the observed range (LINEAR) and
+  * carries forward (STEPPED). A union + window formulation of the same
+  * semantics lives in the test sources as the reference the specs
+  * compare against.
   *
   * Child schema contract: tag columns ++ (ts timestamp, value double),
   * ts and value last. Output schema = child schema, one row per

@@ -137,10 +137,7 @@ object ArrowIpcSource {
     case (x: Float4Vector, a: Float) => x.setSafe(i, a)
     case (x: BitVector, a: Boolean) => x.setSafe(i, if (a) 1 else 0)
     case (x: VarCharVector, a: String) => x.setSafe(i, a.getBytes("UTF-8"))
-    // getTime carries the ms part of nanos already; the extra term is
-    // the µs remainder within the millisecond (getNanos ∈ [0, 1e9))
-    case (x: TimeStampMicroVector, a: java.sql.Timestamp) =>
-      x.setSafe(i, a.getTime * 1000L + a.getNanos / 1000L % 1000L)
+    case (x: TimeStampMicroVector, a: java.sql.Timestamp) => x.setSafe(i, graft.model.Time.micros(a))
     case _ => throw new UnsupportedOperationException(s"cannot write $value to ${v.getClass}")
   }
 

@@ -42,8 +42,10 @@ final case class SourceConfig(
       * concat_tables (kukur/source/__init__.py:462). "auto" (the
       * config-file default) resolves from the loaded schema — free for
       * self-describing formats, but CSV pays a schema-inference pass
-      * over the data first; at corpus scale declare `value_type`
-      * explicitly in the config and skip that read.
+      * over the data. [[SourceFrames]] keeps the inferred frame, so
+      * that pass runs once per change of the source's file listing,
+      * not once per read; at corpus scale declare `value_type`
+      * explicitly in the config and skip it altogether.
       */
     valueType: String = "double",
     /** dir layout only: how the series key is encoded in the path.
@@ -104,17 +106,18 @@ final case class DirPartition(key: String, base64: Boolean = false)
 
 final class ConfiguredSource(cfg: SourceConfig) {
 
-  private def reader(spark: SparkSession, header: Boolean = cfg.csvHeader, infer: Boolean = false) = {
-    val r = spark.read.format(cfg.fileFormat)
+  /** Reader options of this source's format; all of them shape the
+    * loaded schema, so they key the [[SourceFrames]] memo.
+    */
+  private def readerOptions(spark: SparkSession, header: Boolean = cfg.csvHeader, infer: Boolean = false): Map[String, String] =
     if (cfg.fileFormat == "csv") {
-      val base = r.option("header", header.toString).option("sep", cfg.csvSeparator)
+      val base = Map("header" -> header.toString, "sep" -> cfg.csvSeparator)
       val enc = cfg.fileEncoding.fold(base) { e =>
         MetadataSource.enableJavaCharsets(spark, e)
-        base.option("encoding", e)
+        base + ("encoding" -> e)
       }
-      if (infer) enc.option("inferSchema", "true") else enc
-    } else r
-  }
+      if (infer) enc + ("inferSchema" -> "true") else enc
+    } else Map.empty
 
   /** Load one path in this source's file format. CSV/parquet/JSON/ORC
     * go through `spark.read`; the Arrow IPC formats (`feather` = file
@@ -131,7 +134,7 @@ final class ConfiguredSource(cfg: SourceConfig) {
         // reference's own fixtures — fails Spark's native footer
         // round-trip; same probe-and-reroute as Inspect.readDataset
         OrcInstantSource.read(spark, path)
-      case _ => reader(spark, header, infer).load(path)
+      case _ => SourceFrames.load(spark, cfg.fileFormat, readerOptions(spark, header, infer), path)
     }
 
   private def stripBom(df: DataFrame): DataFrame = MetadataSource.stripBomHeader(df)
@@ -281,7 +284,7 @@ final class ConfiguredSource(cfg: SourceConfig) {
     case Some("name")   => readDirKeyed(spark, base64 = false)
     case Some(other)    => throw new IllegalArgumentException(s"unknown path encoding: $other")
     case None =>
-      val raw = reader(spark).option("basePath", cfg.path).load(cfg.path)
+      val raw = SourceFrames.load(spark, cfg.fileFormat, readerOptions(spark) + ("basePath" -> cfg.path), cfg.path)
       val base = withQuality(raw).withColumn("ts", normalizeTs(col(mapped("ts"))))
       val cols = cfg.tagColumns.map(col) ++ Seq(col("ts"), dirValue(raw)) ++
         (if (cfg.qualityGood.nonEmpty) Seq(col("quality")) else Nil)

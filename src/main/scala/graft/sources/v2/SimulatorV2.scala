@@ -153,12 +153,11 @@ class SimulatorScanBuilder(cfg: SimulatorV2Config)
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = SimulatorSource.schema
 
-  // Full-µs conversion: getTime is ms only — sub-ms lives in getNanos,
-  // and since claimed filters are REMOVED from Spark's post-scan
-  // residual, truncating here would silently move the boundary for a
-  // sub-millisecond literal. floorDiv keeps pre-epoch instants exact.
+  // Full-µs conversion: claimed filters are REMOVED from Spark's
+  // post-scan residual, so truncating here would silently move the
+  // boundary for a sub-millisecond literal.
   private def toUs(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp => Some(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
+    case t: java.sql.Timestamp => Some(graft.model.Time.micros(t))
     case i: java.time.Instant  => Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
     case _                     => None
   }

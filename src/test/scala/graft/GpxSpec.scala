@@ -57,7 +57,7 @@ class GpxSpec extends AnyFunSuite {
     // columns; the derived totals below re-run the reference's own
     // ECEF-chord/cumsum formula (kukur/source/gpx/__init__.py:131-166)
     // over the same fixture
-    val df = GpxSource.read(spark, "/root/reference/tests/test_data/gpx").orderBy("seq")
+    val df = GpxSource.read(spark, s"${ReferenceCheckout.root}/tests/test_data/gpx").orderBy("seq")
     val rows = df.collect()
     assert(rows.length == 2263)
     assert(df.columns.toSet.intersect(Set("ele", "lon", "lat")) == Set("ele", "lon", "lat"))

@@ -22,7 +22,7 @@ import graft.sources.DataFusionSource
 class ReferenceDataFusionSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private val RefRoot = "/root/reference"
+  private lazy val RefRoot = ReferenceCheckout.root
   private var g: Graft = _
 
   override def beforeAll(): Unit = {

@@ -27,7 +27,7 @@ import graft.model.SeriesSelector
 class ReferenceDeltaFixturesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private val RefRoot = "/root/reference"
+  private lazy val RefRoot = ReferenceCheckout.root
   private var g: Graft = _
 
   override def beforeAll(): Unit = {

@@ -19,7 +19,7 @@ import graft.sources.{Inspect, XlsxLite, XlsxSource}
 class ReferenceExcelFixtureSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val Fixture = "/root/reference/tests/test_data/excel/data.xlsx"
+  private def Fixture = s"${ReferenceCheckout.root}/tests/test_data/excel/data.xlsx"
   private def fixtureBytes: Array[Byte] = Files.readAllBytes(java.nio.file.Paths.get(Fixture))
 
   // ---- the reference's own test cases -------------------------------
@@ -64,7 +64,7 @@ class ReferenceExcelFixtureSpec extends AnyFunSuite {
   }
 
   test("inspect folder listing marks workbooks excel-workbook") {
-    val rows = Inspect.listPath(spark, "/root/reference/tests/test_data/excel").collect()
+    val rows = Inspect.listPath(spark, s"${ReferenceCheckout.root}/tests/test_data/excel").collect()
     val wb = rows.find(_.getString(0).endsWith("data.xlsx"))
     assert(wb.exists(_.getString(1) === "excel-workbook"))
   }

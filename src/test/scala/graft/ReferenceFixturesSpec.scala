@@ -33,7 +33,7 @@ import graft.sources.{GraftConfig, MetadataSource}
 class ReferenceFixturesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private val RefRoot = "/root/reference"
+  private lazy val RefRoot = ReferenceCheckout.root
   private var g: Graft = _
   private var configPath: String = _
 

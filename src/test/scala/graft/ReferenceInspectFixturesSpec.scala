@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Inspect
@@ -13,10 +14,15 @@ import graft.sources.Inspect
   * via ArrowIpcSource, ndjson, orc, csv dialects) and column
   * projection.
   */
-class ReferenceInspectFixturesSpec extends AnyFunSuite {
+class ReferenceInspectFixturesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private val Data = "/root/reference/tests/test_data"
+  private lazy val Data = s"${ReferenceCheckout.root}/tests/test_data"
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    ReferenceCheckout.root
+  }
 
   test("test_inspect_filesystem: a feather dir lists two ARROW resources") {
     val rows = Inspect.listPath(spark, s"$Data/feather/dir").orderBy("path").collect()

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import java.time.Instant
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{PluginSource, SeriesKey}
@@ -18,10 +19,15 @@ import graft.sources.{PluginSource, SeriesKey}
   * other. Cancels (not fails) if the container lacks python3+pyarrow,
   * which the plugin needs to emit its IPC responses.
   */
-class ReferencePluginFixtureSpec extends AnyFunSuite {
+class ReferencePluginFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private val Script = "/root/reference/tests/test_data/plugin/plugin.py"
+  private lazy val Script = s"${ReferenceCheckout.root}/tests/test_data/plugin/plugin.py"
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    ReferenceCheckout.root
+  }
 
   private def pythonWithPyarrow: Boolean =
     try {

@@ -89,7 +89,7 @@ class SourcesSpec extends AnyFunSuite {
     // like Inspect does
     val src = new ConfiguredSource(
       SourceConfig(
-        path = "/root/reference/tests/test_data/orc/row.orc",
+        path = s"${ReferenceCheckout.root}/tests/test_data/orc/row.orc",
         fileFormat = "orc",
         dataFormat = "row",
         tagColumns = Seq("series name"),
@@ -284,6 +284,22 @@ class SourcesSpec extends AnyFunSuite {
     assert(out(0).getDouble(1) == 0.0) // midnight is period-aligned (86400 % 1200 == 0)
     assert(out(1).getDouble(1) == 5.0)
     assert(out(20).getDouble(1) == 0.0) // reset after 20 steps
+  }
+
+  test("simulators start µs-exactly: no point before a sub-millisecond start") {
+    // start x.000500: truncated to x.000, the `us >= start` filter
+    // admitted the tick at x.000, which lies before the window
+    val (start, end) = (t("2024-01-01T00:00:00.000500Z"), t("2024-01-01T00:00:05Z"))
+    val signals = Seq(
+      "counter" -> Simulators.counter(spark, start, end, 0.0, 100.0, 5.0, 1L),
+      "sine" -> Simulators.sine(spark, start, end, 60.0, 0.0, 1.0, 0.0, 1L),
+      "white noise" -> Simulators.whiteNoise(spark, start, end, 50.0, 10.0, 1L),
+    )
+    for ((name, df) <- signals) {
+      val ts = df.collect().map(_.getTimestamp(0))
+      assert(ts.length == 5, s"$name: ${ts.toSeq}")
+      assert(ts.forall(!_.before(start)), s"$name: ${ts.toSeq}")
+    }
   }
 
   test("simulator white noise is deterministic with plausible moments") {

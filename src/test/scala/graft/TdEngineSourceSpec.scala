@@ -479,7 +479,7 @@ class TdEngineSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- config + facade ----
 
   test("the reference's own tdengine.toml parses: 3 sources, fixture queries intact") {
-    val declared = graft.sources.GraftConfig.load("/root/reference/tests/test_data/tdengine/tdengine.toml")
+    val declared = graft.sources.GraftConfig.load(s"${ReferenceCheckout.root}/tests/test_data/tdengine/tdengine.toml")
     assert(declared.size == 3)
     val td = declared.collect { case t: graft.sources.GraftConfig.DeclaredTdEngine => t }
     assert(td.map(_.name).toSet == Set("tdengine", "tdengine-local", "tdengine-linux"))

@@ -54,6 +54,21 @@ class TimeSeriesOpsSpec extends AnyFunSuite {
     assert(byRole("last")._1 == t("2024-01-01T03:00:00Z"))
   }
 
+  test("plotData buckets µs-exactly: a point before a sub-millisecond window end stays in the last bucket") {
+    // end x.000999: truncated to x.000, the span shrank and the point at
+    // x.000500 landed in bucket `intervalCount`, one past the last
+    val pts = Seq(
+      ("a", t("2024-01-01T00:00:00Z"), 2.0),
+      ("a", t("2024-01-01T00:00:01.000500Z"), 1.0),
+    ).toDF("series_name", "ts", "value")
+    val out = TimeSeriesOps
+      .plotData(pts, Seq("series_name"), t("2024-01-01T00:00:00Z"), t("2024-01-01T00:00:01.000999Z"), 4)
+      .collect()
+    val buckets = out.map(r => r.getTimestamp(3) -> r.getLong(1)).toMap
+    assert(buckets.values.forall(b => b >= 0 && b < 4), buckets)
+    assert(buckets(t("2024-01-01T00:00:01.000500Z")) == 3L)
+  }
+
   test("resampleStepped carries last value forward, null before first point") {
     val out = TimeSeriesOps
       .resampleStepped(series.where($"series_name" === "a"), Seq("series_name"), t("2023-12-31T23:00:00Z"), t("2024-01-01T04:00:00Z"), 3600L)

@@ -27,7 +27,7 @@ class TomlLiteFuzzSpec extends AnyFunSuite {
   test("every .toml the reference ships parses") {
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files
-      .walk(java.nio.file.Paths.get("/root/reference"))
+      .walk(java.nio.file.Paths.get(ReferenceCheckout.root))
       .iterator()
       .asScala
       .filter(_.toString.endsWith(".toml"))
@@ -45,7 +45,7 @@ class TomlLiteFuzzSpec extends AnyFunSuite {
 
   test("corpus spot checks: known values from distinct fixture families") {
     def parse(p: String) = TomlLite.parse(java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
-    val root = "/root/reference"
+    val root = ReferenceCheckout.root
     // Kukur.toml: include globs + flags
     val kukur = parse(s"$root/Kukur.toml")
     assert(kukur.path("include").get(0).path("glob").asText().nonEmpty)

@@ -26,7 +26,7 @@ def merge_queries(base: dict, new: dict) -> dict:
     return out
 
 
-def merge_cells(base, new, key):
+def merge_cells(base, new):
     """Per-(factor, query) min for scale/ann sections."""
     if not new:
         return base
@@ -48,17 +48,20 @@ def merge_cells(base, new, key):
 
 def main():
     anchor_path = "tools/bench_anchor.json"
-    anchor = json.load(open(anchor_path))
+    with open(anchor_path) as f:
+        anchor = json.load(f)
     for path in sys.argv[1:]:
-        new = json.load(open(path))
+        with open(path) as f:
+            new = json.load(f)
         before_total = sum(v for v in anchor["queries"].values() if v > 0)
         anchor["queries"] = merge_queries(anchor["queries"], new.get("queries", {}))
-        anchor["scale"] = merge_cells(anchor.get("scale"), new.get("scale"), "scale")
-        anchor["ann_scale"] = merge_cells(anchor.get("ann_scale"), new.get("ann_scale"), "ann")
+        anchor["scale"] = merge_cells(anchor.get("scale"), new.get("scale"))
+        anchor["ann_scale"] = merge_cells(anchor.get("ann_scale"), new.get("ann_scale"))
         after_total = sum(v for v in anchor["queries"].values() if v > 0)
         print(f"merged {path}: main-suite anchor total {before_total:.1f} -> {after_total:.1f} s")
     anchor["value"] = round(sum(v for v in anchor["queries"].values() if v > 0), 3)
-    json.dump(anchor, open(anchor_path, "w"))
+    with open(anchor_path, "w") as f:
+        json.dump(anchor, f)
     print(f"anchor total now {anchor['value']} s over {len(anchor['queries'])} queries")
 
 
