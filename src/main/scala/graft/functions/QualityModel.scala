@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * probability a threshold gate can cut.
   *
   * Training is FULL-BATCH gradient descent, which on Spark is the
-  * scale-correct choice: each iteration is ONE partial-aggregatable
-  * pass (per-feature gradient sums as `floor(term · 1e9)` longs —
+  * scale-correct choice: each iteration is ONE `treeAggregate` over
+  * the persisted [[TrainSample]] with the weights in the task closure
+  * (per-feature gradient sums as `floor(term · 1e9)` longs —
   * order-independent, so the learned weights are bit-identical on any
-  * partitioning), and only 2·(d+1) scalars ever reach the driver per
+  * partitioning), and only d + 2 scalars ever reach the driver per
   * iteration. Mini-batch SGD would be neither deterministic nor
   * cheaper here: the corpus scan dominates, not the update count.
   * d = 5 features + bias; iterations and learning rate are fixed
@@ -47,42 +48,53 @@ object QualityModel {
       label: Column,
       iterations: Int = 30,
       learningRate: Double = 2.0,
-  ): Array[Double] = {
-    val d = features.size
-    var w = Array.fill(d + 1)(0.0)
-    val frame = scored.select(features :+ label.cast("double").as("__y"): _*).toDF(
-      (0 until d).map(i => s"__x$i") :+ "__y": _*
-    )
-    val cached = frame.cache()
-    try {
-      // Materialize the cache at the source's parallelism (the regex
-      // feature computation above wants every core), then run the
-      // iteration jobs over a row-count-adaptive coalesce: the GD frame
-      // is d+1 doubles per row, so at bench scale it is a few hundred
-      // KB spread over 32 partitions — 30 sequential jobs of 33 tiny
-      // tasks each, pure scheduler overhead (guide §2.2: fewer, larger
-      // tasks). ~20k rows per task (the same constant as
-      // VectorFunctions.iterFrame) keeps a bench-sized sample one task
-      // per pass while a 1M-row corpus still fans each GD pass out to
-      // 50+ tasks; results are unchanged on any partitioning
-      // (order-independent scaled-integer gradient sums).
-      val rows = cached.count()
-      val gdParts = math.max(1L, math.min(rows / 20000L + 1L, 10000L)).toInt
-      val gdFrame = cached.coalesce(gdParts)
+  ): Array[Double] =
+    descend(scored.select(features :+ label.cast("double"): _*), iterations, learningRate)
+
+  /** Gradient descent over a frame of d feature columns then the 0/1
+    * label (all numeric); returns d weights then the bias. Per step:
+    * `z = Σ x_i·w_i + b` in feature order, `err = 1 / (1 + exp(−z)) − y`
+    * (StrictMath, as Spark's `exp`), gradient sums of
+    * `floor(err·x_i·1e9)` and `floor(err·1e9)` with `Math.addExact` (the
+    * ANSI `sum(bigint)` contract). A row with any null adds nothing to
+    * the sums but counts in `n`, as SQL `count(1)` over null-propagating
+    * terms does; with no complete row the weights stay 0.
+    */
+  private[graft] def descend(frame: DataFrame, iterations: Int, learningRate: Double): Array[Double] = {
+    val d = frame.columns.length - 1
+    require(d >= 1, "gradient descent needs at least one feature column")
+    TrainSample.features(frame) { train =>
+      var w = Array.fill(d + 1)(0.0)
       for (_ <- 1 to iterations) {
-        val z = (0 until d).map(i => col(s"__x$i") * lit(w(i))).reduce(_ + _) + lit(w(d))
-        val err = lit(1.0) / (lit(1.0) + exp(-z)) - col("__y")
-        val aggs = (0 until d).map(i => sum(floor(err * col(s"__x$i") * lit(1e9)).cast("long")).as(s"g$i")) ++
-          Seq(sum(floor(err * lit(1e9)).cast("long")).as("gb"), count(lit(1)).as("n"))
-        val row = gdFrame.agg(aggs.head, aggs.tail: _*).first()
-        val n = math.max(row.getLong(d + 1), 1L).toDouble
-        w = Array.tabulate(d + 1) { j =>
-          val g = row.getLong(j) / 1e9 / n
-          w(j) - learningRate * g
-        }
+        val wi = w
+        val g = train.treeAggregate(new Array[Long](d + 2))(
+          (acc, x) => {
+            if (x != null) {
+              var z = x(0) * wi(0)
+              var i = 1
+              while (i < d) {
+                z += x(i) * wi(i)
+                i += 1
+              }
+              z += wi(d)
+              val err = 1.0 / (1.0 + StrictMath.exp(-z)) - x(d)
+              i = 0
+              while (i < d) {
+                acc(i) = Math.addExact(acc(i), TrainSample.scaled(err * x(i), 1e9))
+                i += 1
+              }
+              acc(d) = Math.addExact(acc(d), TrainSample.scaled(err, 1e9))
+            }
+            acc(d + 1) += 1
+            acc
+          },
+          TrainSample.mergeExact,
+        )
+        val n = math.max(g(d + 1), 1L).toDouble
+        w = Array.tabulate(d + 1)(j => wi(j) - learningRate * (g(j) / 1e9 / n))
       }
       w
-    } finally cached.unpersist(blocking = true)
+    }
   }
 
   /** Score with trained weights: adds `p_good` (round 6) and the

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -96,7 +98,7 @@ object VectorFunctions {
       .withColumn("cosine", qcCosine)
     scored
       .groupBy(col("query_id"), col("query_label"))
-      .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), col("neg_label")).as("__tk"))
+      .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), Some(col("neg_label"))).as("__tk"))
       .select(col("query_id"), col("query_label"), posexplode(col("__tk")).as(Seq("__r", "__e")))
       .select(
         col("query_id"),
@@ -134,7 +136,7 @@ object VectorFunctions {
       .withColumn("cosine", qcCosine)
     scored
       .groupBy(col("query_id"), col("label"))
-      .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), col("n_label")).as("__tk"))
+      .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), Some(col("n_label"))).as("__tk"))
       // agreement over the neighbors that EXIST (size of the retained
       // top-k, ≤ k when the group is small): with fewer than k
       // candidates a literal-k denominator would flag
@@ -160,8 +162,8 @@ object VectorFunctions {
     * across the probe arms. `finish` shapes the scored frame
     * (query_id, qe, q_label, neighbor_id, ce, n_label, cosine); its
     * result is localCheckpoint-materialized so BOTH cached embedding
-    * copies release before returning (the trainSample race
-    * discipline — this lifecycle is the fragile part, kept in ONE
+    * copies release before returning (blocking, as [[TrainSample]]
+    * releases — this lifecycle is the fragile part, kept in ONE
     * place).
     */
   private def ivfScored(
@@ -230,7 +232,7 @@ object VectorFunctions {
       scored =>
         scored
           .groupBy(col("query_id"), col("q_label").as("label"))
-          .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), col("n_label")).as("__tk"))
+          .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), Some(col("n_label"))).as("__tk"))
           .withColumn("n_same", size(filter(col("__tk"), e => e.getField("p0") === col("label"))).cast("long"))
           .withColumn("__n_nb", size(col("__tk")).cast("long"))
           .select(
@@ -268,7 +270,7 @@ object VectorFunctions {
       pairPred = col("q_label") =!= col("n_label")) { scored =>
       scored
         .groupBy(col("query_id"), col("q_label"))
-        .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), col("n_label")).as("__tk"))
+        .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), Some(col("n_label"))).as("__tk"))
         .select(col("query_id"), col("q_label"), posexplode(col("__tk")).as(Seq("__r", "__e")))
         .select(
           col("query_id"),
@@ -375,10 +377,11 @@ object VectorFunctions {
     * sorts more than k elements per group (guide §2.3/§5). Entry i of
     * the returned array is the row that held row_number i + 1; the
     * ordering (incl. ±0.0/NaN and tie-break on id) is pinned to the
-    * window sort's by TopKAggSpec.
+    * window sort's by TopKAggSpec. TopKPairs carries at most one
+    * payload column, hence the Option.
     */
-  private def topK(k: Int, asc: Boolean, score: Column, id: Column, payload: Column*): Column =
-    nat(graft.plans.TopKPairs(ex(score), ex(id), payload.map(ex), k, asc).toAggregateExpression())
+  private def topK(k: Int, asc: Boolean, score: Column, id: Column, payload: Option[Column] = None): Column =
+    nat(graft.plans.TopKPairs(ex(score), ex(id), payload.map(ex).toSeq, k, asc).toAggregateExpression())
 
   /** Nearest-centroid struct `(d, cell)` — native argmin with the
     * arithmetic and ordering of the historical
@@ -404,85 +407,75 @@ object VectorFunctions {
   private def assignCell(frame: DataFrame, centroids: Array[Array[Double]]): DataFrame =
     frame.withColumn("cell", cellAssign(col("embedding"), centroids).getField("cell"))
 
-  /** Deterministic k-means over `(vec_id, embedding)`: init = the
-    * `nCells` lowest vec_ids, per-(cell, position) means via scaled-
-    * integer sums (one hash aggregate per pass, order-independent —
-    * identical centroids on every run and partitioning), empty cells
-    * keep their centroid. Only nCells × dim summary rows ever reach
-    * the driver; training runs on the `trainLimit` lowest ids (train
-    * small, index everything — the standard coarse-quantizer recipe).
+  /** The bounded training frame of the vector trainers: the
+    * `trainLimit` lowest vec_ids (train small, index everything — the
+    * standard coarse-quantizer recipe), respread (limit() collapses to
+    * one partition — the sample would materialize single-core
+    * otherwise).
     */
-  /** The cached training sample both quantizer trainers run on: the
-    * `trainLimit` lowest vec_ids, respread (limit() collapses to one
-    * partition — every Lloyd pass would run single-core otherwise).
-    * Callers MUST unpersist it with `blocking = true`: a non-blocking
-    * release followed by re-caching the identical plan (exactly what
-    * back-to-back trainers and bench harness queries do) races the
-    * async block removal and degenerates into lost-block recompute
-    * storms — observed as 10×+ wall-clock variance on identical runs.
-    */
-  private def trainSample(vecs: DataFrame, trainLimit: Int): DataFrame =
-    DedupFunctions
-      .spread(vecs.orderBy("vec_id").limit(trainLimit))
-      .cache()
+  private def trainFrame(vecs: DataFrame, trainLimit: Int): DataFrame =
+    DedupFunctions.spread(vecs.orderBy("vec_id").limit(trainLimit))
 
-  private def trainKmeans(
+  /** The vectors of the `k` lowest vec_ids, ascending — the
+    * deterministic Lloyd init (fewer when the sample is smaller).
+    */
+  private def lowestIds(train: RDD[TrainSample.VecRow], k: Int, what: String): Array[Array[Double]] = {
+    val init = train.takeOrdered(k)(Ordering.by[TrainSample.VecRow, Long](_._1)).map(_._2)
+    require(init.nonEmpty, s"$what needs at least one training vector")
+    if (init.contains(null)) throw new IllegalStateException(s"$what: null embedding among the $k lowest vec_ids")
+    init
+  }
+
+  /** Deterministic k-means over `(vec_id, embedding)` on the
+    * `trainLimit` lowest ids — see [[trainKmeansOn]].
+    */
+  private[graft] def trainKmeans(
       vecs: DataFrame,
       nCells: Int,
       lloydIterations: Int,
       trainLimit: Int,
-  ): Array[Array[Double]] = {
-    val train = trainSample(vecs, trainLimit)
-    val out = trainKmeansOn(train, nCells, lloydIterations)
-    train.unpersist(blocking = true)
-    out
-  }
+  ): Array[Array[Double]] =
+    TrainSample.vectors(trainFrame(vecs, trainLimit))(trainKmeansOn(_, nCells, lloydIterations))
 
-  /** Row-count-adaptive coalesce for the iteration jobs of the bounded
-    * trainers (Lloyd, PQ, GD): the sample is ≤ trainLimit rows, so at
-    * bench scale each of the 5+ sequential per-pass jobs schedules 32
-    * near-empty tasks — pure scheduler overhead (guide §2.2: fewer,
-    * larger tasks). ~20k rows per task keeps a pass one task until the
-    * sample genuinely needs more; the per-pass sums are
-    * order-independent scaled integers, so the result is identical on
-    * any partitioning. The count() also materializes the caller's
-    * cache at the SOURCE parallelism, so the expensive first
-    * evaluation still uses every core.
+  /** Lloyd over a [[TrainSample]]: init = the `nCells` lowest vec_ids;
+    * each pass is one treeAggregate of per-(cell, position)
+    * `floor(x·1e9)` long sums and per-cell counts (order-independent —
+    * identical centroids on every run and partitioning), with the
+    * centroids carried in the task closure and the argmin the
+    * [[graft.plans.CellAssign]] kernel. Only nCells × dim sums reach
+    * the driver; empty cells keep their centroid, null embeddings add
+    * nothing.
     */
-  private def iterFrame(train: DataFrame): DataFrame = {
-    val n = train.count()
-    train.coalesce(math.max(1L, math.min(n / 20000L + 1L, 10000L)).toInt)
-  }
-
-  private def trainKmeansOn(
-      train0: DataFrame,
+  private[graft] def trainKmeansOn(
+      train: RDD[TrainSample.VecRow],
       nCells: Int,
       lloydIterations: Int,
   ): Array[Array[Double]] = {
-    val train = iterFrame(train0)
-    var centroids: Array[Array[Double]] = train
-      .orderBy("vec_id")
-      .limit(nCells)
-      .collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray)
+    var centroids = lowestIds(train, nCells, "k-means")
+    val k = centroids.length
+    val dim = centroids(0).length
     for (_ <- 1 to lloydIterations) {
-      val sums = assignCell(train, centroids)
-        .select(
-          col("cell"),
-          posexplode(expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e9) AS BIGINT))")).as(Seq("pos", "qv")),
-        )
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("qv")).as("s"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
-        .toMap
-      centroids = centroids.zipWithIndex.map { case (old, i) =>
-        old.indices.map { p =>
-          sums.get((i, p)) match {
-            case Some((s, n)) if n > 0 => s.toDouble / 1e9 / n
-            case _                     => old(p) // empty cell keeps its centroid
+      val cents = centroids
+      val acc = train.treeAggregate(new Array[Long](k * dim + k))(
+        (acc, row) => {
+          val v = row._2
+          if (v != null) {
+            val cell = graft.plans.VecKernels.cellAssign(UnsafeArrayData.fromPrimitiveArray(v), cents, false).getInt(1)
+            var p = 0
+            while (p < dim) {
+              acc(cell * dim + p) = Math.addExact(acc(cell * dim + p), TrainSample.scaled(v(p), 1e9))
+              p += 1
+            }
+            acc(k * dim + cell) += 1
           }
-        }.toArray
+          acc
+        },
+        TrainSample.mergeExact,
+      )
+      centroids = Array.tabulate(k) { i =>
+        val n = acc(k * dim + i)
+        if (n > 0) Array.tabulate(dim)(p => acc(i * dim + p).toDouble / 1e9 / n)
+        else cents(i) // empty cell keeps its centroid
       }
     }
     centroids
@@ -808,20 +801,21 @@ object VectorFunctions {
     // the sample sort is the expensive half of training at scale.
     // opqRotate > 0 upgrades the permutation to the full Ge et al.
     // alternating rotation ([[opqTrainRotation]]) seeded from it.
-    val train = trainSample(vecs, trainLimit)
+    val train = trainFrame(vecs, trainLimit)
     val (applyT, books): (Column => Column, Array[Array[Array[Double]]]) =
       if (opqRotate > 0) {
         val (rotM, bks, _) = opqTrainRotation(train, dim, m, codebookSize, lloydIterations, opqRotate)
         ((c: Column) => rotateExpr(rotM, c), bks)
-      } else {
-        val perm: Array[Int] =
-          if (!opq) Array.range(0, dim)
-          else balancedVariancePerm(train, dim, m)
-        def permuted(c: Column): Column =
-          if (!opq) c else array(perm.map(i => element_at(c, i + 1)): _*)
-        (permuted _, trainPqBooksOn(train.withColumn("embedding", permuted(col("embedding"))), m, dsub, codebookSize, lloydIterations))
-      }
-    train.unpersist(blocking = true)
+      } else
+        TrainSample.vectors(train) { sample =>
+          val perm: Array[Int] =
+            if (!opq) Array.range(0, dim)
+            else balancedVariancePerm(sample, dim, m)
+          def permuted(c: Column): Column =
+            if (!opq) c else array(perm.map(i => element_at(c, i + 1)): _*)
+          val view = if (!opq) sample else sample.map { case (id, v) => (id, if (v == null) null else perm.map(i => v(i))) }
+          (permuted _, trainPqBooksOn(view, m, dsub, codebookSize, lloydIterations))
+        }
     // under a full rotation, materialize the rotated corpus once:
     // projection collapse would otherwise inline the d²-op rotation
     // into all m×codebookSize codeword distances of the encode (the
@@ -865,25 +859,34 @@ object VectorFunctions {
     * aggregate (2·dim + 1 scalars) reaches the driver; ties break on
     * dimension/subspace index, so the permutation is deterministic.
     */
-  private def balancedVariancePerm(train: DataFrame, dim: Int, m: Int): Array[Int] = {
+  private[graft] def balancedVariancePerm(train: RDD[TrainSample.VecRow], dim: Int, m: Int): Array[Int] = {
     // scaled-integer moment sums, like every trainer in this file:
     // raw double sums would make the variance order — and therefore
     // the permutation — depend on partition layout through last-ulp
-    // addition-order noise (near-equal variances DO flip)
-    val aggs = (0 until dim).flatMap { i =>
-      val q = floor(element_at(col("embedding"), i + 1).cast("double") * lit(1e6)).cast("long")
-      // factors cast to decimal BEFORE multiplying: a long×long square
-      // overflows silently for components beyond ~3e3 at 1e6 scaling
-      Seq(
-        sum(q.cast("decimal(38,0)")).as(s"s$i"),
-        sum(q.cast("decimal(19,0)") * q.cast("decimal(19,0)")).as(s"q$i"),
-      )
-    } :+ count(lit(1)).as("n")
-    val row = train.agg(aggs.head, aggs.tail: _*).first()
-    val n = math.max(row.getLong(2 * dim), 1L).toDouble
+    // addition-order noise (near-equal variances DO flip). Squares
+    // accumulate exactly at 128 bits: a long×long square overflows for
+    // components beyond ~3e3 at 1e6 scaling. The row count includes
+    // null embeddings, which add no moments.
+    val (sums, rows) = train.treeAggregate((new Decimal38Sums(2 * dim), 0L))(
+      { case ((acc, n), (_, v)) =>
+        if (v != null) {
+          if (v.length < dim) throw new IllegalStateException(s"balancedVariancePerm: embedding dim ${v.length} < $dim")
+          var i = 0
+          while (i < dim) {
+            val q = TrainSample.scaled(v(i), 1e6)
+            acc.add(2 * i, q)
+            acc.addProduct(2 * i + 1, q, q)
+            i += 1
+          }
+        }
+        (acc, n + 1)
+      },
+      { case ((a, na), (b, nb)) => (a.merge(b), na + nb) },
+    )
+    val n = math.max(rows, 1L).toDouble
     val vars = Array.tabulate(dim) { i =>
-      val s = row.getDecimal(2 * i).doubleValue() / 1e6
-      val q = row.getDecimal(2 * i + 1).doubleValue() / 1e12
+      val s = sums.toDouble(2 * i) / 1e6
+      val q = sums.toDouble(2 * i + 1) / 1e12
       q / n - (s / n) * (s / n)
     }
     val dsub = dim / m
@@ -918,14 +921,18 @@ object VectorFunctions {
     * `Σ ‖R·x − ŷ‖²`, so the distortion falls across iterations (up to
     * the finite Lloyd budget per step).
     *
-    * Scale shape: everything distributed is one aggregate over the
-    * bounded training sample — the cross-moment matrix `M = Σ ŷ·xᵀ`
-    * is accumulated as d rows × d scaled-integer decimal sums
-    * (order-independent, like every trainer in this file) after a
-    * d-way explode of the reconstruction, so exactly d·(d+2) summary
-    * scalars reach the driver per iteration. The SVD behind the
-    * Procrustes solve runs on the driver over the d×d moment matrix
-    * via cyclic Jacobi — pure Scala, fixed sweep order, deterministic.
+    * Scale shape: everything distributed is one [[TrainSample]] of
+    * the bounded training frame. Each codebook step is the Lloyd
+    * passes of [[trainPqBooksOn]] over the rotated view, and each
+    * cross-moment step is ONE treeAggregate that rotates, encodes and
+    * decodes every row in the task (the [[graft.plans.VecKernels]]
+    * kernels the SQL expressions call) and accumulates `M = Σ ŷ·xᵀ` as
+    * d × d exact 128-bit sums of `floor(·1e6)` products
+    * (order-independent, like every trainer in this file) next to d
+    * per-component distortion sums, so d·(d+1) summary scalars reach
+    * the driver per iteration. The SVD behind the Procrustes solve
+    * runs on the driver over the d×d moment matrix via cyclic Jacobi —
+    * pure Scala, fixed sweep order, deterministic.
     *
     * Returns (rotation, final codebooks, per-iteration train
     * distortion in 1e-9 units — monotone evidence for the spec).
@@ -940,57 +947,47 @@ object VectorFunctions {
   ): (Array[Array[Double]], Array[Array[Array[Double]]], Array[Double]) = {
     require(iterations >= 1, "opq rotation needs at least one iteration")
     val dsub = dim / m
-    // projection collapse would inline the d²-op rotation HOF into
-    // every downstream reference (64 codeword distances × their code
-    // lookups — multiplicative re-evaluation), so each derived frame
-    // is eagerly materialized once and released when its consumers
-    // finish; the train sample is bounded, so this is bounded state
-    def release(df: DataFrame): Unit =
-      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = true))
-    val perm = balancedVariancePerm(train, dim, m)
-    var rot = Array.tabulate(dim, dim)((j, i) => if (perm(j) == i) 1.0 else 0.0)
-    var books: Array[Array[Array[Double]]] = null
-    val mses = Array.newBuilder[Double]
-    for (_ <- 0 until iterations) {
-      val prepared = train.withColumn("__r", rotateExpr(rot, col("embedding"))).localCheckpoint()
-      books = trainPqBooksOn(prepared.select(col("vec_id"), col("__r").as("embedding")), m, dsub, codebookSize, lloydIterations)
-      val coded = prepared.withColumn("__codes", pqCodesExpr(books, m, dsub, col("__r"))).localCheckpoint()
-      release(prepared)
-      // reconstruction of the rotated vector — native PqDecode (the
-      // codebooks ride as constructor data; the historical spelling
-      // built a d × codebookSize literal tree per reference and
-      // evaluated it interpreted; same lookups, same doubles)
-      val yhat = nat(graft.plans.PqDecode(ex(col("__codes")), books.map(_.map(_.toSeq).toSeq).toSeq))
-      val expl = coded
-        .withColumn("__yhat", yhat)
-        .select(col("embedding"), col("__r"), posexplode(col("__yhat")).as(Seq("__j", "__yj")))
-      val qy = floor(col("__yj") * lit(1e6)).cast("decimal(19,0)")
-      val aggs = (0 until dim).map { i =>
-        val qx = floor(element_at(col("embedding"), i + 1).cast("double") * lit(1e6)).cast("decimal(19,0)")
-        sum(qy * qx).as(s"m$i")
-      } :+ sum(
-        floor(
-          (element_at(col("__r"), col("__j") + 1) - col("__yj")) *
-            (element_at(col("__r"), col("__j") + 1) - col("__yj")) * lit(1e9)
-        ).cast("long")
-      ).as("err")
-      val rows = expl.groupBy(col("__j")).agg(aggs.head, aggs.tail: _*).collect()
-      release(coded)
-      val mm = Array.ofDim[Double](dim, dim)
-      var errSum = 0L
-      rows.foreach { r =>
-        val j = r.getInt(0)
-        (0 until dim).foreach(i => mm(j)(i) = r.getDecimal(i + 1).doubleValue() / 1e12)
-        errSum += r.getLong(dim + 1)
+    TrainSample.vectors(train) { sample =>
+      def rotated(rot: Array[Array[Double]]): RDD[TrainSample.VecRow] =
+        sample.map { case (id, v) =>
+          (id, if (v == null) null else graft.plans.VecKernels.rotate(UnsafeArrayData.fromPrimitiveArray(v), rot, false).toDoubleArray())
+        }
+      val perm = balancedVariancePerm(sample, dim, m)
+      var rot = Array.tabulate(dim, dim)((j, i) => if (perm(j) == i) 1.0 else 0.0)
+      val mses = Array.newBuilder[Double]
+      for (_ <- 0 until iterations) {
+        val r0 = rot
+        val books = trainPqBooksOn(rotated(r0), m, dsub, codebookSize, lloydIterations)
+        val (moments, err) = sample.treeAggregate((new Decimal38Sums(dim * dim), new Array[Long](dim)))(
+          { case (acc @ (mm, err), (_, x)) =>
+            if (x != null) {
+              val r = graft.plans.VecKernels.rotate(UnsafeArrayData.fromPrimitiveArray(x), r0, false)
+              val yhat = graft.plans.VecKernels.pqDecode(graft.plans.VecKernels.pqEncode(r, books, false), books)
+              val qx = Array.tabulate(dim)(i => TrainSample.scaled(x(i), 1e6))
+              var j = 0
+              while (j < dim) {
+                val yj = yhat.getDouble(j)
+                val qy = TrainSample.scaled(yj, 1e6)
+                var i = 0
+                while (i < dim) {
+                  mm.addProduct(j * dim + i, qy, qx(i))
+                  i += 1
+                }
+                val e = r.getDouble(j) - yj
+                err(j) = Math.addExact(err(j), TrainSample.scaled(e * e, 1e9))
+                j += 1
+              }
+            }
+            acc
+          },
+          { case ((ma, ea), (mb, eb)) => (ma.merge(mb), TrainSample.mergeExact(ea, eb)) },
+        )
+        mses += err.sum / 1e9
+        rot = procrustes(Array.tabulate(dim, dim)((j, i) => moments.toDouble(j * dim + i) / 1e12))
       }
-      mses += errSum / 1e9
-      rot = procrustes(mm)
+      // codebooks must match the FINAL rotation the caller encodes with
+      (rot, trainPqBooksOn(rotated(rot), m, dsub, codebookSize, lloydIterations), mses.result())
     }
-    // codebooks must match the FINAL rotation the caller encodes with
-    val rotated = train.withColumn("embedding", rotateExpr(rot, col("embedding"))).localCheckpoint()
-    books = trainPqBooksOn(rotated, m, dsub, codebookSize, lloydIterations)
-    release(rotated)
-    (rot, books, mses.result())
   }
 
   /** Orthogonal Procrustes: the R minimizing ‖R·X − Ŷ‖_F over
@@ -1121,61 +1118,55 @@ object VectorFunctions {
   private def adcExpr(m: Int, codebookSize: Int): Column =
     nat(graft.plans.AdcDistance(ex(col("codes")), ex(col("lut"))))
 
-  /** Deterministic per-subspace Lloyd codebooks (init = subspace slices
-    * of the `codebookSize` lowest train ids; scaled-integer means keyed
-    * by (subspace, code, position) — one aggregate pass refines ALL m
-    * codebooks, only m × codebookSize × dsub summary rows reach the
-    * driver; empty clusters keep their codeword).
+  /** Deterministic per-subspace Lloyd codebooks over a
+    * [[TrainSample]] (init = subspace slices of the `codebookSize`
+    * lowest train ids): each pass is one treeAggregate of
+    * per-(subspace, code, position) `floor(x·1e9)` long sums and
+    * per-(subspace, code) counts with the codebooks carried in the
+    * task closure and the argmin the [[graft.plans.PqEncode]] kernel,
+    * so one pass refines ALL m codebooks and only
+    * m × codebookSize × dsub sums reach the driver. Empty clusters
+    * keep their codeword; null embeddings add nothing.
     */
-  private def trainPqBooksOn(
-      train0: DataFrame,
+  private[graft] def trainPqBooksOn(
+      train: RDD[TrainSample.VecRow],
       m: Int,
       dsub: Int,
       codebookSize: Int,
       lloydIterations: Int,
   ): Array[Array[Array[Double]]] = {
-    val train = iterFrame(train0)
-    var books: Array[Array[Array[Double]]] = {
-      // embedding may be float (raw vectors) or double (residuals)
-      val seed = train
-        .orderBy("vec_id")
-        .limit(codebookSize)
-        .collect()
-        .map(r =>
-          r.getSeq[Any](r.fieldIndex("embedding")).map {
-            case f: Float  => f.toDouble
-            case d: Double => d
-          }.toArray
-        )
-      Array.tabulate(m)(s => seed.map(v => v.slice(s * dsub, (s + 1) * dsub)))
-    }
+    val seed = lowestIds(train, codebookSize, "PQ codebooks")
+    val cs = seed.length
+    var books = Array.tabulate(m)(s => seed.map(v => v.slice(s * dsub, (s + 1) * dsub)))
+    val counts = m * cs * dsub
     for (_ <- 1 to lloydIterations) {
-      val sums = train
-        .withColumn("__codes", pqCodesExpr(books, m, dsub))
-        .select(
-          col("__codes"),
-          posexplode(expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e9) AS BIGINT))")).as(Seq("pos", "qv")),
-        )
-        .select(
-          (col("pos") / dsub).cast("int").as("s"),
-          (col("pos") % dsub).as("p"),
-          element_at(col("__codes"), (col("pos") / dsub).cast("int") + 1).as("c"),
-          col("qv"),
-        )
-        .groupBy(col("s"), col("c"), col("p"))
-        .agg(sum(col("qv")).as("sum"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> (r.getLong(3), r.getLong(4)))
-        .toMap
-      books = Array.tabulate(m) { s =>
-        books(s).zipWithIndex.map { case (old, c) =>
-          old.indices.map { p =>
-            sums.get((s, c, p)) match {
-              case Some((sv, n)) if n > 0 => sv.toDouble / 1e9 / n
-              case _                      => old(p) // empty cluster keeps its codeword
+      val bks = books
+      val acc = train.treeAggregate(new Array[Long](counts + m * cs))(
+        (acc, row) => {
+          val v = row._2
+          if (v != null) {
+            val codes = graft.plans.VecKernels.pqEncode(UnsafeArrayData.fromPrimitiveArray(v), bks, false)
+            var s = 0
+            while (s < m) {
+              val sc = s * cs + codes.getInt(s)
+              var p = 0
+              while (p < dsub) {
+                acc(sc * dsub + p) = Math.addExact(acc(sc * dsub + p), TrainSample.scaled(v(s * dsub + p), 1e9))
+                p += 1
+              }
+              acc(counts + sc) += 1
+              s += 1
             }
-          }.toArray
-        }
+          }
+          acc
+        },
+        TrainSample.mergeExact,
+      )
+      books = Array.tabulate(m, cs) { (s, c) =>
+        val sc = s * cs + c
+        val n = acc(counts + sc)
+        if (n > 0) Array.tabulate(dsub)(p => acc(sc * dsub + p).toDouble / 1e9 / n)
+        else bks(s)(c) // empty cluster keeps its codeword
       }
     }
     books
@@ -1248,11 +1239,25 @@ object VectorFunctions {
       .select(col("vec_id"), col("embedding"))
       .cache()
 
-    // ONE shared training sample for both quantizers: train twice from
-    // the same cached frame, release it once (blocking — see
-    // trainSample's race note)
-    val train = trainSample(vecs, trainLimit)
-    val centroids = trainKmeansOn(train, nCells, lloydIterations)
+    // ONE shared training sample for both quantizers
+    val (centroids, books) = TrainSample.vectors(trainFrame(vecs, trainLimit)) { train =>
+      val cents = trainKmeansOn(train, nCells, lloydIterations)
+      // with residual encoding the codebooks learn the residual
+      // distribution: each Lloyd pass derives cell + residual per row
+      // with the same kernels ResidualVec and CellAssign run
+      val view =
+        if (!residual) train
+        else
+          train.map { case (id, v) =>
+            if (v == null) (id, null)
+            else {
+              val emb = UnsafeArrayData.fromPrimitiveArray(v)
+              val cell = graft.plans.VecKernels.cellAssign(emb, cents, false).getInt(1)
+              (id, graft.plans.VecKernels.residual(emb, cell, cents, false).toDoubleArray())
+            }
+          }
+      (cents, trainPqBooksOn(view, m, dsub, codebookSize, lloydIterations))
+    }
 
     // residual = vector − centroid[cell]: native ResidualVec (the
     // centroid table rides as constructor data, one compiled dim loop
@@ -1260,20 +1265,6 @@ object VectorFunctions {
     // nested element_at literal)
     def resid(vec: Column, cellCol: Column): Column =
       nat(graft.plans.ResidualVec(ex(vec), ex(cellCol), centroids.map(_.toSeq).toSeq))
-
-    val books =
-      if (residual) {
-        // codebooks learn the residual distribution; localCheckpoint
-        // materializes the (small) residual training frame once so the
-        // Lloyd iterations don't re-derive cell + residual per pass
-        val trainRes = assignCell(train, centroids)
-          .select(col("vec_id"), resid(col("embedding"), col("cell")).as("embedding"))
-          .localCheckpoint()
-        val b = trainPqBooksOn(trainRes, m, dsub, codebookSize, lloydIterations)
-        org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(trainRes).foreach(_.unpersist(blocking = true))
-        b
-      } else trainPqBooksOn(train, m, dsub, codebookSize, lloydIterations)
-    train.unpersist(blocking = true)
 
     // inverted file: cell + m byte codes per corpus vector. The
     // repartition is a projection barrier: it materializes the residual
@@ -1417,9 +1408,8 @@ object VectorFunctions {
     val dim = df.select(size(col("embedding"))).first().getInt(0)
     require(k >= 1 && k <= dim, s"k=$k out of range for dim=$dim")
     val vecs = spreadVecs(df).cache()
-    val train = trainSample(vecs, trainLimit)
-    val (mean, cov) = pcaMeanCov(train, dim)
-    train.unpersist(blocking = true)
+    // one aggregate pass over the training frame: nothing to cache
+    val (mean, cov) = pcaMeanCov(trainFrame(vecs, trainLimit), dim)
     val (eigVals, eigVecs) = jacobiEigen(cov)
     val order = (0 until dim).sortBy(i => (-eigVals(i), i)).take(k)
     val comps = order.map { i =>
@@ -1574,7 +1564,7 @@ object VectorFunctions {
       .withColumn("cosine", col("dot").cast("double") / (col("__nq") * col("__nc")))
     pairs
       .groupBy(col("query_id"))
-      .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), col("bucket")).as("__tk"))
+      .agg(topK(k, asc = false, col("cosine"), col("neighbor_id"), Some(col("bucket"))).as("__tk"))
       .select(col("query_id"), posexplode(col("__tk")).as(Seq("__r", "__e")))
       .select(
         col("query_id"),

@@ -154,11 +154,13 @@ class ZipfJoinPlanSpec extends AnyFunSuite {
         // may materialize once per arm — both instances bounded.)
         val nBroadcast = countMatches(plan, """BroadcastExchange""")
         assert(nBroadcast >= 1, plan)
-        // every broadcast is the bounded >= hotMin frequency set; the
-        // hotMin predicate now wraps the collision-certified CASE WHEN
-        // gdf expression, so match the >= cut itself rather than a bare
-        // attribute reference
-        assert(nBroadcast == countMatches(plan, """ >= 100\)"""), plan)
+        // every broadcast is the bounded >= hotMin frequency set: a
+        // Filter whose predicate is the collision-certified gdf (count
+        // when the gram's min and max strings agree, else raise_error)
+        // cut at >= hotMin — the tail arm's `< 100` filter and any other
+        // `>= 100` comparison do not match
+        val hotSet = """Filter \(+CASE WHEN \(__mn#\d+ = __mx#\d+\) THEN __cnt#\d+L ELSE [^\n]*? END >= 100\)"""
+        assert(nBroadcast == countMatches(plan, hotSet), plan)
         assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"), plan)
         // and never a window: per-doc aggregation is a hash aggregate
         assert(!plan.contains("Window"), plan)
