@@ -646,6 +646,9 @@ object DedupFunctions {
         ).as(Seq("off", "gram")),
       )
       .select(col("doc_id"), (col("off") + 1).cast("long").as("start"), col("gram"), xxhash64(col("gram")).as("gh"))
+      // the checkpoint outlives this call: like repeatedSpansChar's, the
+      // caller releases it (Bench/Verify via getPersistentRDDs after
+      // the query)
       .localCheckpoint()
     val checked = grams.groupBy(col("gh")).agg(min(col("gram")).as("__mn"), max(col("gram")).as("__mx"))
     val key = if (checked.where(col("__mn") =!= col("__mx")).isEmpty) "gh" else "gram"

@@ -14,8 +14,11 @@ import org.apache.spark.sql.functions._
   * `spark.read` plan producing the canonical frame
   * `(tags…, field, ts, value[, quality])` for *all* series at once.
   * Layout conversions are plans, not loops: `pivot` becomes a `stack`
-  * unpivot, `dir` becomes partition-discovery (the path key comes back
-  * as a column, with partition pruning for single-series reads).
+  * unpivot, `dir` becomes a partitioned scan — Hive partition discovery
+  * for `series_name=<v>/` dirs, a [[SeriesFileIndex]] (one partition per
+  * series file, the key decoded from its name on the driver) for
+  * filename-keyed dirs — so the path key comes back as a column and a
+  * tag filter opens only the matching series' files.
   */
 final case class SourceConfig(
     path: String,
@@ -109,7 +112,7 @@ final class ConfiguredSource(cfg: SourceConfig) {
   /** Reader options of this source's format; all of them shape the
     * loaded schema, so they key the [[SourceFrames]] memo.
     */
-  private def readerOptions(spark: SparkSession, header: Boolean = cfg.csvHeader, infer: Boolean = false): Map[String, String] =
+  private[graft] def readerOptions(spark: SparkSession, header: Boolean = cfg.csvHeader, infer: Boolean = false): Map[String, String] =
     if (cfg.fileFormat == "csv") {
       val base = Map("header" -> header.toString, "sep" -> cfg.csvSeparator)
       val enc = cfg.fileEncoding.fold(base) { e =>
@@ -291,20 +294,6 @@ final class ConfiguredSource(cfg: SourceConfig) {
       base.select(cols: _*)
   }
 
-  /** Positional naming for headerless dir CSVs — the reference's dir
-    * read contract (csv.py:378): columns are ts, value [, quality],
-    * the series key lives only in the path.
-    */
-  private def dirPositional(loaded: DataFrame): DataFrame =
-    if (cfg.fileFormat == "csv" && !cfg.csvHeader && cfg.columnMapping.isEmpty) {
-      val names = Seq("ts", "value") ++ (if (cfg.qualityGood.nonEmpty) Seq("quality") else Nil)
-      require(
-        loaded.columns.length == names.length,
-        s"headerless dir csv at ${cfg.path} has ${loaded.columns.length} columns; expected ${names.mkString(", ")}",
-      )
-      loaded.toDF(names: _*)
-    } else stripBom(loaded)
-
   private def dirValue(raw: DataFrame): Column = {
     val target = resolveValueType(raw, Seq(mapped("value")))
     expr(fieldSql(mapped("value"), target)).as("value")
@@ -322,59 +311,67 @@ final class ConfiguredSource(cfg: SourceConfig) {
     * key in the path — plain (`<series>.<ext>`, the reference's
     * default dir layout, csv.py:393), base64-encoded
     * (kukur/source/arrow.py:205), or nested per-tag levels
-    * (`partitions`). CSV dirs with one level read as ONE distributed
-    * scan (all strings, no schema conflict; key decoded from
-    * `input_file_name()` — narrow projection, no shuffle). Columnar
-    * containers and nested layouts read per file and promote-union:
-    * per-series schemas may genuinely disagree (a string series beside
-    * a double series — the reference reads one file per selector and
-    * never sees the conflict). The per-file plan is the
-    * REFERENCE-COMPAT path for modest series counts; the Hive layout
-    * (`pathEncoding = None`) is the scale path with real partition
-    * pruning.
+    * (`partitions`).
+    *
+    * Single-level dirs whose files share a schema by construction —
+    * any CSV dir (headerless all-string columns can't conflict) and
+    * base64 dirs of the spark-native formats (the graft-native layout,
+    * written by this engine's own sinks with self-describing uniform
+    * columns) — read as ONE scan over a [[SeriesFileIndex]]: one
+    * partition per series file, the tag decoded from the file name once
+    * on the driver. A tag predicate (`===`, `isin`, `Graft.filterTags`'
+    * string cast) prunes the scan to the matching files, like the
+    * reference's per-selector `open_child`; a full scan reads the files
+    * with no per-row key work.
+    *
+    * Columnar containers of the "name" layout and nested layouts read
+    * per file and promote-union: per-series schemas may genuinely
+    * disagree (a string series beside a double series — the reference
+    * reads one file per selector and never sees the conflict). That
+    * per-file plan is the REFERENCE-COMPAT path for modest series
+    * counts; the Hive layout (`pathEncoding = None`) is the scale path.
+    * Arrow IPC formats and pyarrow's instant-typed ORC decode through
+    * RDDs, with no file index to key, so they read per file too.
     */
   private def readDirKeyed(spark: SparkSession, base64: Boolean): DataFrame = {
     val levels = dirLevels(base64)
-    // ONE distributed scan with the key decoded from input_file_name()
-    // — no per-file plans — whenever the files share a schema by
-    // construction: any single-level CSV dir (headerless all-string
-    // columns can't conflict), and single-level BASE64 dirs of any
-    // format (the graft-native layout, written by this engine's own
-    // sinks with self-describing uniform columns). The reference's
-    // "name" layout over columnar files keeps per-file reads: its
-    // semantics are positional with genuinely per-series schemas.
     val sparkNative = Set("csv", "parquet", "json", "orc").contains(cfg.fileFormat)
-    // Arrow IPC formats decode via RDDs where input_file_name() is
-    // empty — they always take the per-file path
-    if (levels.lengthCompare(1) == 0 && sparkNative && (cfg.fileFormat == "csv" || levels.head.base64)) {
-      val loaded = loadPath(spark, cfg.path, infer = cfg.valueType == "auto")
-      val raw = if (cfg.fileFormat == "csv") dirPositional(loaded) else stripBom(loaded)
-      val fileName = regexp_extract(input_file_name(), "([^/]+)\\.[A-Za-z0-9]+$", 1)
-      val series =
-        if (levels.head.base64) {
-          // NO url_decode: it is x-www-form-urlencoded and would turn a
-          // literal '+' — a standard base64 alphabet character that
-          // input_file_name() leaves unencoded — into a space,
-          // corrupting the key. Only %XX escapes need undoing; base64
-          // names never contain '%', so a targeted rewrite is safe.
-          decode(unbase64(regexp_replace(fileName, "%2[Bb]", "+")), "UTF-8")
-        } else {
-          // plain names: undo input_file_name()'s URI escapes (%20 for
-          // a space, …) after protecting any literal '+' from
-          // url_decode's form-encoding rule
-          url_decode(regexp_replace(fileName, "\\+", "%2B"))
-        }
-      val base = withQuality(raw)
-        .withColumn(levels.head.key, series)
-        .withColumn("ts", normalizeTs(col(mapped("ts"))))
-      val cols = Seq(col(levels.head.key), col("ts"), dirValue(raw)) ++
-        (if (cfg.qualityGood.nonEmpty) Seq(col("quality")) else Nil)
-      base.select(cols: _*)
+    if (
+      levels.lengthCompare(1) == 0 && sparkNative && (cfg.fileFormat == "csv" || levels.head.base64) &&
+      !(cfg.fileFormat == "orc" && OrcInstantSource.needsInstantReader(spark, cfg.path))
+    ) {
+      val level = levels.head
+      canonicalKeyed(
+        SourceFrames.loadSeriesFiles(spark, cfg.fileFormat, readerOptions(spark, infer = cfg.valueType == "auto"), cfg.path, level),
+        level.key,
+      )
     } else {
       val files = listSeriesFiles(spark, levels)
       require(files.nonEmpty, s"dir source at ${cfg.path} has no series files")
       ConfiguredSource.promoteUnion(files.map { case (tags, p) => seriesFileFrame(spark, tags, p) })
     }
+  }
+
+  /** The canonical frame of a one-scan keyed dir: `loaded` holds the
+    * files' columns, then the decoded `tag` column. Headerless CSV
+    * columns are named by position — the reference's dir read contract
+    * (csv.py:378): ts, value [, quality], the series key lives only in
+    * the path.
+    */
+  private[graft] def canonicalKeyed(loaded: DataFrame, tag: String): DataFrame = {
+    val raw =
+      if (cfg.fileFormat == "csv" && !cfg.csvHeader && cfg.columnMapping.isEmpty) {
+        val names = Seq("ts", "value") ++ (if (cfg.qualityGood.nonEmpty) Seq("quality") else Nil)
+        val fileCols = loaded.columns.length - 1
+        require(
+          fileCols == names.length,
+          s"headerless dir csv at ${cfg.path} has $fileCols columns; expected ${names.mkString(", ")}",
+        )
+        loaded.toDF(names :+ tag: _*)
+      } else stripBom(loaded)
+    val cols = Seq(col(tag), normalizeTs(col(mapped("ts"))).as("ts"), dirValue(raw)) ++
+      (if (cfg.qualityGood.nonEmpty) Seq(col("quality")) else Nil)
+    withQuality(raw).select(cols: _*)
   }
 
   /** Enumerate `(tag values, file path)` for every series file under a

@@ -55,9 +55,13 @@ object OrcInstantSource {
   /** Whether `uri` (a file or a dir of .orc files) carries a
     * TIMESTAMP_INSTANT column and therefore needs THIS reader instead
     * of `spark.read.orc` — one driver-side footer probe, shared by
-    * Inspect and ConfiguredSource.
+    * Inspect and ConfiguredSource, kept by [[SourceFrames.probe]] while
+    * the listing of `uri` is unchanged.
     */
-  def needsInstantReader(spark: SparkSession, uri: String): Boolean = {
+  def needsInstantReader(spark: SparkSession, uri: String): Boolean =
+    SourceFrames.probe(spark, uri, "orc-instant")(footerHasInstant(spark, uri))
+
+  private def footerHasInstant(spark: SparkSession, uri: String): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
     val path = new Path(uri)
     val fs = path.getFileSystem(conf)

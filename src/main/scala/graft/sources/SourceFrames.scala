@@ -8,10 +8,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** The one memo for file-source frames: every `spark.read…load(path)`
   * of graft's file sources (ConfiguredSource, Tables) goes through
-  * [[load]].
+  * [[load]] or, for a filename-keyed dir, [[loadSeriesFiles]].
   *
   * A fresh load pays a file listing, a Spark job for parquet-footer or
   * CSV-header inference and, with `inferSchema`, a full CSV pass — all
@@ -19,12 +24,14 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * instead.
   *
   * Contract:
-  *   - Key: (session, qualified path, format, reader options). The
-  *     options are part of the key because they shape the schema.
+  *   - Key: (session, qualified path, format, reader options, series
+  *     key level). The options are part of the key because they shape
+  *     the schema.
   *   - Every call lists the path once — the leaf files' path, length
   *     and modification time form the fingerprint. This is the listing
   *     Spark's file index would make for a fresh load, so a hit costs
-  *     no more storage calls than a miss did before.
+  *     no more storage calls than a miss did before. A filename-keyed
+  *     dir's [[SeriesFileIndex]] is built from that same listing.
   *   - Same fingerprint: the kept relation is returned with fresh
   *     attribute ids, so two reads of one source still self-join like
   *     two independent loads. No Spark job runs.
@@ -36,40 +43,114 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *   - Sessions never share a relation (it carries its session's
   *     conf). Entries of a session go when its SparkContext stops, and
   *     at most `MaxEntries` are kept, least recently used first out.
+  *
+  * [[probe]] keeps a driver-side yes/no answer about a path (the ORC
+  * instant-type footer probe) under the same fingerprint rule.
   */
 object SourceFrames {
 
-  private final case class Key(session: SparkSession, path: String, format: String, options: Map[String, String])
-  private final case class Entry(fingerprint: Vector[(String, Long, Long)], relation: LogicalPlan with MultiInstanceRelation)
+  private type Fingerprint = Vector[(String, Long, Long)]
+  private final case class Key(
+      session: SparkSession,
+      path: String,
+      format: String,
+      options: Map[String, String],
+      level: Option[DirPartition],
+  )
+  private final case class Entry(fingerprint: Fingerprint, relation: LogicalPlan with MultiInstanceRelation)
+  private final case class Listing(path: String, roots: Vector[FileStatus], files: Vector[FileStatus]) {
+    lazy val fingerprint: Fingerprint = files.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+  }
 
   private val MaxEntries = 256
 
-  // access-ordered: the eldest entry is the least recently read
-  private val memo = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[Key, Entry]): Boolean = this.size() > MaxEntries
-  }
+  private def lru[K, V]: java.util.LinkedHashMap[K, V] =
+    // access-ordered: the eldest entry is the least recently read
+    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = this.size() > MaxEntries
+    }
+  private val memo = lru[Key, Entry]
+  private val probes = lru[(String, String), (Fingerprint, Boolean)]
   private val watched = java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkContext, java.lang.Boolean])
 
   /** `spark.read.format(format).options(options).load(path)`, memoized
     * under the contract above.
     */
-  def load(spark: SparkSession, format: String, options: Map[String, String], path: String): DataFrame = {
-    def fresh() = spark.read.format(format).options(options).load(path)
+  def load(spark: SparkSession, format: String, options: Map[String, String], path: String): DataFrame =
+    memoized(spark, format, options, path, None)
+
+  /** A filename-keyed dir — one file per series directly under `path`,
+    * the `level.key` tag in each file name — as one relation over a
+    * [[SeriesFileIndex]]: the files' columns, inferred from the series
+    * files as a plain load infers them, plus the tag as a string
+    * partition column. Memoized like [[load]]; a miss infers the schema
+    * from the memo's own listing, with no second one.
+    */
+  def loadSeriesFiles(spark: SparkSession, format: String, options: Map[String, String], path: String, level: DirPartition): DataFrame =
+    memoized(spark, format, options, path, Some(level))
+
+  /** `answer(path)`, kept while the listing fingerprint of `path` is
+    * unchanged. `name` tells apart the probes of one path.
+    */
+  def probe(spark: SparkSession, path: String, name: String)(answer: => Boolean): Boolean =
     Try(listing(spark, path)).toOption.flatten match {
-      case None => fresh()
-      case Some((resolved, fingerprint)) =>
-        val key = Key(spark, resolved, format, options)
-        synchronized(Option(memo.get(key))).filter(_.fingerprint == fingerprint) match {
+      case None => answer
+      case Some(l) =>
+        val key = (name, l.path)
+        synchronized(Option(probes.get(key))).filter(_._1 == l.fingerprint) match {
+          case Some((_, kept)) => kept
+          case None =>
+            val fresh = answer
+            synchronized(probes.put(key, (l.fingerprint, fresh)))
+            fresh
+        }
+    }
+
+  private def memoized(
+      spark: SparkSession,
+      format: String,
+      options: Map[String, String],
+      path: String,
+      level: Option[DirPartition],
+  ): DataFrame = {
+    def plain() = spark.read.format(format).options(options).load(path)
+    Try(listing(spark, path)).toOption.flatten match {
+      case None =>
+        val df = plain()
+        require(level.isEmpty, s"no series files at $path")
+        df
+      case Some(l) =>
+        val key = Key(spark, l.path, format, options, level)
+        synchronized(Option(memo.get(key))).filter(_.fingerprint == l.fingerprint) match {
           case Some(kept) => GraftSqlBridge.ofRows(spark, kept.relation.newInstance())
           case None =>
-            val df = fresh()
+            val df = level.fold(plain())(seriesFiles(spark, format, options, l, _))
             GraftSqlBridge.logicalPlan(df) match {
-              case r: MultiInstanceRelation => remember(key, Entry(fingerprint, r))
+              case r: MultiInstanceRelation => remember(key, Entry(l.fingerprint, r))
               case _ =>
             }
             df
         }
     }
+  }
+
+  /** The relation a plain load of a spark-native `format` resolves,
+    * over a [[SeriesFileIndex]] of the listing instead of Spark's own.
+    */
+  private def seriesFiles(spark: SparkSession, format: String, options: Map[String, String], l: Listing, level: DirPartition): DataFrame = {
+    val index = SeriesFileIndex(l.roots, l.files, level)
+    val fileFormat: FileFormat = format match {
+      case "csv"     => new CSVFileFormat
+      case "parquet" => new ParquetFileFormat
+      case "json"    => new JsonFileFormat
+      case "orc"     => new OrcFileFormat
+      case other     => throw new IllegalArgumentException(s"no file index for format $other")
+    }
+    val dataSchema = fileFormat
+      .inferSchema(spark, options, index.files)
+      .getOrElse(throw new IllegalArgumentException(s"unable to infer the $format schema of the series files at ${l.path}"))
+    val relation = HadoopFsRelation(index, index.partitionSchema, GraftSqlBridge.asNullable(dataSchema), None, fileFormat, options)(spark)
+    GraftSqlBridge.ofRows(spark, LogicalRelation(relation))
   }
 
   /** Entries currently kept (for specs). */
@@ -90,19 +171,16 @@ object SourceFrames {
     watched.remove(sc)
   }
 
-  /** The qualified path and the fingerprint of its leaf files, or None
-    * when the path (or glob) matches nothing.
+  /** The qualified path, its roots and its leaf files (sorted by path),
+    * or None when the path (or glob) matches nothing.
     */
-  private def listing(spark: SparkSession, path: String): Option[(String, Vector[(String, Long, Long)])] = {
+  private def listing(spark: SparkSession, path: String): Option[Listing] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val roots = Option(fs.globStatus(p)).map(_.toVector).getOrElse(Vector.empty)
     def leaves(st: FileStatus): Vector[FileStatus] =
       if (st.isDirectory) fs.listStatus(st.getPath).toVector.flatMap(leaves) else Vector(st)
     if (roots.isEmpty) None
-    else {
-      val files = roots.flatMap(leaves).map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-      Some(fs.makeQualified(p).toString -> files.sortBy(_._1))
-    }
+    else Some(Listing(fs.makeQualified(p).toString, roots, roots.flatMap(leaves).sortBy(_.getPath.toString)))
   }
 }

@@ -15,6 +15,12 @@ object GraftSqlBridge {
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 
+  /** `schema` with every field, nested ones too, nullable — what a
+    * file relation's data schema is declared as (Spark keeps
+    * `StructType.asNullable` package-private).
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** The materialized RDD behind a `localCheckpoint()`ed frame, if any.
     * `Dataset.unpersist` cannot release checkpoint storage (it only
     * clears CacheManager entries), so iterative algorithms need the

@@ -5,9 +5,14 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.hive.ql.exec.vector.{BytesColumnVector, DoubleColumnVector, TimestampColumnVector}
+import org.apache.orc.{OrcFile, TypeDescription}
 import org.apache.spark.graft.ListenerTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,6 +158,96 @@ class SourceFramesSpec extends AnyFunSuite {
     val ids = (df: DataFrame) => df.queryExecution.analyzed.output.map(_.exprId).toSet
     assert((ids(a) intersect ids(b)).isEmpty)
     assert(a.join(b, a("k") === b("k") && a("v") < b("v")).select(a("name"), b("name")).as[(String, String)].collect().toSeq == Seq(("a", "b")))
+  }
+
+  test("a second read of an unchanged filename-keyed dir launches no Spark job; series file changes show on the next read") {
+    val csvDir = Paths.get(tmp())
+    Files.writeString(csvDir.resolve("a.csv"), "2024-01-01 00:00:00,1.0\n")
+    Files.writeString(csvDir.resolve("b.csv"), "2024-01-01 00:00:01,2.0\n")
+    val csv = new ConfiguredSource(
+      SourceConfig(path = csvDir.toString, fileFormat = "csv", dataFormat = "dir", csvHeader = false, valueType = "auto",
+        pathEncoding = Some("name"))
+    )
+    val parquetDir = Paths.get(tmp())
+    val stage = tmp()
+    Seq((java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0)).toDF("ts", "value").coalesce(1).write.parquet(s"$stage/p")
+    val part = Files.list(Paths.get(s"$stage/p")).filter(_.toString.endsWith(".parquet")).findFirst().get
+    def b64(s: String) = java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+    Files.copy(part, parquetDir.resolve(s"${b64("x")}.parquet"))
+    val parquet = new ConfiguredSource(SourceConfig(path = parquetDir.toString, dataFormat = "dir", pathEncoding = Some("base64")))
+    for ((name, src) <- Seq("plain csv" -> csv, "base64 parquet" -> parquet)) {
+      val (first, firstJobs) = jobsOf(spark)(src.read(spark))
+      assert(firstJobs > 0, s"$name: a first read infers its schema")
+      val (second, jobs) = jobsOf(spark)(src.read(spark))
+      assert(jobs == 0, s"$name: second read launched $jobs jobs")
+      assert(relationOf(second) eq relationOf(first), name)
+      assert(second.collect().toSet == first.collect().toSet, name)
+    }
+    def series(src: ConfiguredSource) =
+      src.read(spark).select("series_name", "value").as[(String, Double)].collect().toSeq.sorted
+    // rewrite a series file with another length
+    Files.writeString(csvDir.resolve("a.csv"), "2024-01-01 00:00:00,1.0\n2024-01-01 00:00:02,3.0\n")
+    assert(series(csv) == Seq(("a", 1.0), ("a", 3.0), ("b", 2.0)))
+    // add one
+    Files.writeString(csvDir.resolve("c.csv"), "2024-01-01 00:00:03,4.0\n")
+    assert(series(csv) == Seq(("a", 1.0), ("a", 3.0), ("b", 2.0), ("c", 4.0)))
+    // delete one: the kept index would open the deleted file
+    Files.delete(csvDir.resolve("a.csv"))
+    assert(series(csv) == Seq(("b", 2.0), ("c", 4.0)))
+    assert(csv.read(spark).where($"series_name" === "b").count() == 1)
+    Files.copy(part, parquetDir.resolve(s"${b64("y")}.parquet"))
+    assert(series(parquet) == Seq(("x", 1.0), ("y", 1.0)))
+    Files.delete(parquetDir.resolve(s"${b64("x")}.parquet"))
+    assert(series(parquet) == Seq(("y", 1.0)))
+  }
+
+  test("a path probe's answer is kept while the listing is unchanged") {
+    val dir = tmp()
+    writeCsv(s"$dir/part-0.csv", Seq(("a", "2024-01-01 00:00:00", 1.0)))
+    val asked = new AtomicInteger
+    def probe() = SourceFrames.probe(spark, dir, "spec") { asked.incrementAndGet(); true }
+    assert(probe() && probe())
+    assert(asked.get == 1)
+    writeCsv(s"$dir/part-1.csv", Seq(("b", "2024-01-01 00:00:00", 2.0)))
+    assert(probe() && asked.get == 2)
+  }
+
+  test("the ORC instant-type reroute follows a swap of the file") {
+    val dir = tmp()
+    val file = Paths.get(dir, "row.orc")
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    // what pyarrow writes for tz-aware timestamps: TIMESTAMP_INSTANT
+    def writeInstant(): Unit = {
+      val schema = TypeDescription.fromString("struct<series_name:string,ts:timestamp with local time zone,value:double>")
+      val writer = OrcFile.createWriter(new HPath(file.toString), OrcFile.writerOptions(new Configuration()).setSchema(schema))
+      val batch = schema.createRowBatch()
+      batch.cols(0).asInstanceOf[BytesColumnVector].setVal(0, "instant".getBytes("UTF-8"))
+      batch.cols(1).asInstanceOf[TimestampColumnVector].set(0, ts)
+      batch.cols(2).asInstanceOf[DoubleColumnVector].vector(0) = 1.5
+      batch.size = 1
+      writer.addRowBatch(batch)
+      writer.close()
+    }
+    val stage = tmp()
+    Seq(("plain", ts, 2.5), ("plain", ts, 3.5)).toDF("series_name", "ts", "value").coalesce(1).write.orc(s"$stage/o")
+    val plainPart = Files.list(Paths.get(s"$stage/o")).filter(_.toString.endsWith(".orc")).findFirst().get
+    def swap(write: => Unit): Unit = {
+      Files.list(Paths.get(dir)).iterator().asScala.toList.foreach(Files.delete)
+      write
+    }
+    val src = new ConfiguredSource(SourceConfig(path = dir, fileFormat = "orc"))
+    def read(): (Boolean, Seq[(String, Double)]) = {
+      val df = src.read(spark)
+      val rerouted = GraftSqlBridge.logicalPlan(df).collectFirst { case _: LogicalRDD => true }.isDefined
+      (rerouted, df.select("series_name", "value").as[(String, Double)].collect().toSeq.sorted)
+    }
+    writeInstant()
+    assert(read() == (true, Seq(("instant", 1.5))))
+    assert(read() == (true, Seq(("instant", 1.5))))
+    swap(Files.copy(plainPart, file))
+    assert(read() == (false, Seq(("plain", 2.5), ("plain", 3.5))))
+    swap(writeInstant())
+    assert(read() == (true, Seq(("instant", 1.5))))
   }
 
   test("stopping a session drops its memo entries") {

@@ -11,9 +11,16 @@ trusted, which feeding fresh runs through this script does.)
 
 Usage: python3 tools/update_anchor.py NEW_BENCH_JSON [NEW_BENCH_JSON ...]
 Writes tools/bench_anchor.json in place and prints a delta summary.
+
+A merged anchor describes no single run, so the fields that stamp one
+run (its load average at start and end, its contention flag, its tail
+re-measures and its dirty queries) are dropped.
 """
 import json
 import sys
+
+# top-level fields of a bench artifact that describe the one run it came from
+RUN_FIELDS = ("load_start", "load_end", "contended", "remeasured_n", "remeasure", "dirty_n", "dirty")
 
 
 def merge_queries(base: dict, new: dict) -> dict:
@@ -60,6 +67,8 @@ def main():
         after_total = sum(v for v in anchor["queries"].values() if v > 0)
         print(f"merged {path}: main-suite anchor total {before_total:.1f} -> {after_total:.1f} s")
     anchor["value"] = round(sum(v for v in anchor["queries"].values() if v > 0), 3)
+    for field in RUN_FIELDS:
+        anchor.pop(field, None)
     with open(anchor_path, "w") as f:
         json.dump(anchor, f)
     print(f"anchor total now {anchor['value']} s over {len(anchor['queries'])} queries")
