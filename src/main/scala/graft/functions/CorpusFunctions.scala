@@ -146,6 +146,11 @@ object CorpusFunctions {
     * is a ReusedExchange — ZipfJoinPlanSpec asserts this), so the only
     * re-executed work is the narrow probe pass (broadcast hash lookups
     * + filters) over an input the callers cache or checkpoint.
+    *
+    * `tailJoin = "left"` is for probes that may MISS the frequency
+    * table (cross-corpus LM scoring: unseen bigrams must survive with a
+    * null count, not drop): hot keys broadcast, the tail left-joins,
+    * rows matching neither arm keep their null.
     */
   private[graft] def zipfSplitJoin(
       probe: DataFrame,
@@ -153,6 +158,7 @@ object CorpusFunctions {
       keys: Seq[String],
       cntCol: String,
       hotMin: Long,
+      tailJoin: String = "inner",
   ): DataFrame = {
     // the miss arm sheds EVERY freq payload column (not just cntCol) so
     // multi-payload model tables — e.g. bigramLmKn's (c1, n1p) — re-join
@@ -168,34 +174,7 @@ object CorpusFunctions {
       .unionByName(
         payload
           .foldLeft(probed.where(col(cntCol).isNull))(_.drop(_))
-          .join(freq.where(col(cntCol) < hotMin), keys)
-      )
-  }
-
-  /** LEFT-join variant of [[zipfSplitJoin]] for probes that may MISS
-    * the frequency table (cross-corpus LM scoring: unseen bigrams must
-    * survive with a null count, not drop): hot keys broadcast, the
-    * tail left-joins, rows matching neither arm keep their null.
-    */
-  private[graft] def zipfSplitJoinLeft(
-      probe: DataFrame,
-      freq: DataFrame,
-      keys: Seq[String],
-      cntCol: String,
-      hotMin: Long,
-  ): DataFrame = {
-    val payload = freq.columns.filterNot(keys.contains)
-    require(
-      probe.columns.intersect(payload).isEmpty,
-      s"zipf split join: probe columns [${probe.columns.intersect(payload).mkString(",")}] collide with freq payload columns - the miss-arm shed would silently drop them",
-    )
-    val probed = probe.join(broadcast(freq.where(col(cntCol) >= hotMin)), keys, "left")
-    probed
-      .where(col(cntCol).isNotNull)
-      .unionByName(
-        payload
-          .foldLeft(probed.where(col(cntCol).isNull))(_.drop(_))
-          .join(freq.where(col(cntCol) < hotMin), keys, "left")
+          .join(freq.where(col(cntCol) < hotMin), keys, tailJoin)
       )
   }
 
@@ -406,12 +385,13 @@ object CorpusFunctions {
         ((lit(0.75) * col("nkept").cast("double") + col("cpr").cast("double")) / col("c1").cast("double")) *
         (coalesce(col("cont"), lit(0L)).cast("double") / col("ntot").cast("double"))
     val out =
-      zipfSplitJoinLeft(
-        zipfSplitJoin(zipfSplitJoinLeft(bgs, cbK, Seq("w1", "w2"), "cb", hotMin), c1f, Seq("w1"), "c1", hotMin),
+      zipfSplitJoin(
+        zipfSplitJoin(zipfSplitJoin(bgs, cbK, Seq("w1", "w2"), "cb", hotMin, "left"), c1f, Seq("w1"), "c1", hotMin),
         ctf,
         Seq("w2"),
         "cont",
         hotMin,
+        "left",
       )
         .crossJoin(broadcast(nt))
         .withColumn("p_scaled", floor(lit(1e12) * p))
@@ -690,8 +670,8 @@ object CorpusFunctions {
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .localCheckpoint()
     val out = bgs
-      .transform(p => zipfSplitJoinLeft(p, ref.cb, Seq("w1", "w2"), "cb", 1000L))
-      .transform(p => zipfSplitJoinLeft(p, ref.c1, Seq("w1"), "c1", 1000L))
+      .transform(p => zipfSplitJoin(p, ref.cb, Seq("w1", "w2"), "cb", 1000L, "left"))
+      .transform(p => zipfSplitJoin(p, ref.c1, Seq("w1"), "c1", 1000L, "left"))
       .crossJoin(broadcast(ref.v))
       .withColumn(
         "p_scaled",
@@ -1439,30 +1419,33 @@ object CorpusFunctions {
     * path) → one per-doc aggregate. Novelty is an exact integer ppm —
     * no float, bit-stable across engines and partitionings.
     *
-    * EAGER: this call runs a full Spark job at call time (the
-    * localCheckpoint that lets the cached gram frame release
-    * immediately) and pins the result to executor-local storage — no
-    * lineage recompute on executor loss. Callers at cluster scale who
-    * need fault-tolerant laziness should use [[ngramNoveltyPlan]] and
-    * choose their own materialization (reliable `checkpoint`, a
-    * parquet round-trip, …), releasing the returned gram frame
-    * themselves once the plan is consumed.
+    * EAGER: this call runs its Spark jobs at call time (the
+    * certificate, then the localCheckpoint that lets the cached gram
+    * frame and the certified counts release immediately) and pins the
+    * result to executor-local storage — no lineage recompute on
+    * executor loss. Callers at cluster scale who need fault-tolerant
+    * laziness should use [[ngramNoveltyPlan]] and choose their own
+    * materialization (reliable `checkpoint`, a parquet round-trip, …),
+    * calling the returned release themselves once the plan is consumed.
     */
   def ngramNovelty(df: DataFrame, idCol: Column, text: Column, n: Int = 3, hotMin: Long = 1000L): DataFrame = {
-    val (plan, grams) = ngramNoveltyPlan(df, idCol, text, n, hotMin)
+    val (plan, release) = ngramNoveltyPlan(df, idCol, text, n, hotMin)
     // materialize the small per-doc result so the cached gram frame
-    // (consumed by the df aggregate and both join arms) releases NOW —
-    // in the finally so a failed checkpoint job can't pin the exploded
-    // gram frame for the session's lifetime
+    // (consumed by the df aggregate and both join arms) and the
+    // certified counts release NOW — in the finally so a failed
+    // checkpoint job can't pin them for the session's lifetime
     try plan.localCheckpoint()
-    finally grams.unpersist(blocking = true)
+    finally release()
   }
 
-  /** Un-checkpointed [[ngramNovelty]] plan + the cached gram frame it
-    * rides on. [[ngramNovelty]] materializes and releases both; callers
+  /** Un-checkpointed [[ngramNovelty]] plan + the release of what it
+    * rides on: the cached gram frame and the certified df counts.
+    * [[ngramNovelty]] materializes the plan and releases both; callers
     * who want control over materialization (or reliable checkpointing)
-    * consume the plan and `unpersist` the gram frame themselves. The
-    * plan-shape spec inspects the live plan directly.
+    * consume the plan and then call the release themselves. The
+    * plan-shape spec inspects the live plan directly. Not lazy: the df
+    * counts' certificate job ([[DedupFunctions.certifiedCounts]]) runs
+    * at call time.
     */
   def ngramNoveltyPlan(
       df: DataFrame,
@@ -1470,7 +1453,7 @@ object CorpusFunctions {
       text: Column,
       n: Int = 3,
       hotMin: Long = 1000L,
-  ): (DataFrame, DataFrame) = {
+  ): (DataFrame, () => Unit) = {
     // shingleIndex places the spread() barrier AFTER the word-split
     // projection (its documented rationale: an inlined `__w` re-runs
     // normalize+split per n-gram slot) — reuse it rather than drift
@@ -1479,38 +1462,24 @@ object CorpusFunctions {
       .withColumnRenamed("shingle", "g")
       .withColumn("gh", xxhash64(col("g")))
       .cache()
-    // df aggregate and Zipf join keyed on the 8-byte gram hash instead
-    // of the gram string (guide §2.3 — the same keys-not-payloads
-    // treatment as jaccardPairsPrefix): the probe rows narrow to
-    // (doc_id, gh) and every join/aggregate keys on fixed-width longs.
-    // Unlike jaccard there is no exact verification downstream — a hash
-    // collision would merge two grams' dfs and change n_novel — so
-    // exactness is CERTIFIED inside the df aggregate itself: a
-    // colliding pair of distinct grams necessarily puts both strings
-    // in one gh group, so min(g) == max(g) over every group proves
-    // injectivity (min/max partials combine map-side; strings cross
-    // the exchange once per distinct gh per partition, which is what
-    // the old string-keyed df aggregate shuffled anyway — no extra
-    // pass). The astronomically rare hit (~n²/2⁶⁵) raises a loud
-    // error instead of ever returning a silently wrong count — the
-    // same loud-over-wrong policy the native expressions document.
-    val dfreq = grams
-      .groupBy(col("gh"))
-      .agg(count(lit(1)).as("__cnt"), min(col("g")).as("__mn"), max(col("g")).as("__mx"))
-      .select(
-        col("gh"),
-        when(col("__mn") === col("__mx"), col("__cnt"))
-          .otherwise(raise_error(concat(lit("xxhash64 gram collision: "), col("__mn"), lit(" vs "), col("__mx"))))
-          .as("gdf"),
-      )
-    val out = zipfSplitJoin(grams.select(col("doc_id"), col("gh")), dfreq, Seq("gh"), "gdf", hotMin)
+    // df aggregate and Zipf join keyed on the certified key: there is
+    // no exact verification downstream, so merged counts would change
+    // n_novel. The probe rows narrow to (doc_id, key).
+    val (dfreq, key) =
+      try DedupFunctions.certifiedCounts(grams, "g", "gh", "gdf")
+      catch { case e: Throwable => grams.unpersist(blocking = true); throw e }
+    val out = zipfSplitJoin(grams.select(col("doc_id"), col(key)), dfreq, Seq(key), "gdf", hotMin)
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_ngrams"),
         sum(when(col("gdf") === 1L, 1L).otherwise(0L)).as("n_novel"),
       )
       .withColumn("novelty_ppm", expr("1000000 * n_novel div n_ngrams"))
-    (out, grams)
+    val release = () => {
+      grams.unpersist(blocking = true)
+      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(dfreq).foreach(_.unpersist(blocking = true))
+    }
+    (out, release)
   }
 
   /** Dedup-saturation curve — "how much NEW data does each crawl

@@ -32,6 +32,46 @@ object DedupFunctions {
     if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
   }
 
+  /** Occurrence counts of `valueCol` in `frame`, keyed on its 64-bit
+    * hash `hashCol` whenever that hash is proven injective over this
+    * run's values, else on the value itself. The one place the corpus
+    * aggregates decide between hash and string keys (guide §2.3: an
+    * 8-byte key shuffles, sorts and joins cheaper than a ~26-byte
+    * string).
+    *
+    * The proof: distinct colliding values share one hash group, so
+    * `min(value) ≠ max(value)` in that group. One aggregate by hash
+    * computes each group's count and that flag together (count and
+    * min/max partials combine map-side); it is materialized once and
+    * the flag is read off it. A collision never aborts and never merges
+    * counts: the counts are recomputed keyed on the value.
+    *
+    * Returns `(counts(key, cntCol), key)`, `key` being `hashCol` or
+    * `valueCol`; callers key every downstream join, order and array on
+    * `key`. EAGER: runs the aggregate job and the flag check at call
+    * time. The returned counts are a local checkpoint that the caller
+    * releases (through `GraftSqlBridge.checkpointedRdd`) or leaves to
+    * the query-level sweep of persistent RDDs, like the other
+    * checkpoints in this object; after a collision the hash-keyed one
+    * is released here.
+    */
+  private[graft] def certifiedCounts(
+      frame: DataFrame,
+      valueCol: String,
+      hashCol: String,
+      cntCol: String,
+  ): (DataFrame, String) = {
+    val byHash = frame
+      .groupBy(col(hashCol))
+      .agg(count(lit(1)).as(cntCol), (min(col(valueCol)) =!= max(col(valueCol))).as("__collided"))
+      .localCheckpoint()
+    if (byHash.where(col("__collided")).isEmpty) (byHash.select(col(hashCol), col(cntCol)), hashCol)
+    else {
+      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(byHash).foreach(_.unpersist(blocking = true))
+      (frame.groupBy(col(valueCol)).agg(count(lit(1)).as(cntCol)).localCheckpoint(), valueCol)
+    }
+  }
+
   /** Priority-aware exact dedup across sources: when the same
     * normalized text appears in several corpus sources, keep ONE copy
     * — from the most-preferred source (the "curated dump beats web
@@ -173,19 +213,16 @@ object DedupFunctions {
     val sh = shingleIndex(df, idCol, textCol, n)
       .withColumn("h", xxhash64(col("shingle")))
       .localCheckpoint()
-    // global rarity: document frequency per HASH. A (vanishingly rare)
-    // hash collision merges two shingles' counts — still a consistent
-    // global function of the shingle, so the total order below remains
-    // valid for the prefix property; extra candidates it admits are
-    // removed by exact verification.
-    val dfAgg = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    // rarity order (df, h, shingle): any FIXED total order on shingles
+    // global rarity: document frequency per key, certified so that the
+    // key is the 8-byte hash whenever it is injective over this run's
+    // shingles (see certifiedCounts)
+    val (dfAgg, key) = certifiedCounts(sh, "shingle", "h", "df")
+    // rarity order (df, key): any FIXED total order on shingles
     // supports the AllPairs prefix argument (a J ≥ τ pair provably
-    // shares its order-smallest common shingle in both prefixes); the
-    // string tie-break keeps ranks deterministic even across hash
-    // collisions inside one doc.
-    val withDf = sh.join(dfAgg, "h")
-    val rk = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"), col("shingle"))
+    // shares its order-smallest common shingle in both prefixes), and a
+    // certified key is a total order on shingles
+    val withDf = sh.join(dfAgg, key)
+    val rk = Window.partitionBy(col("doc_id")).orderBy(col("df"), col(key))
     val szW = Window.partitionBy(col("doc_id"))
     // prefix length |S| - ceil(τ|S|) + 1, with ceil(τs) = ceil(num*s/den);
     // sz rides into the candidate join so the length filter runs there,
@@ -194,14 +231,14 @@ object DedupFunctions {
       .withColumn("rk", row_number().over(rk))
       .withColumn("sz", count(lit(1)).over(szW))
       .where(col("rk") <= col("sz") - ceil(col("sz") * numThreshold / denThreshold) + 1)
-      .select(col("doc_id"), col("h"), col("sz"))
-    // candidate pairs on the 8-byte hash, with the length filter
+      .select(col("doc_id"), col(key), col("sz"))
+    // candidate pairs on the key, with the length filter
     // (τ|A| ≤ |B| and τ|B| ≤ |A|, both necessary for J ≥ τ) applied
     // INSIDE the join — zero extra joins, and non-viable pairs never
     // reach the array-carrying verification shuffles
     val cands = prefix
-      .select(col("doc_id").as("doc_a"), col("h"), col("sz").as("n_a"))
-      .join(prefix.select(col("doc_id").as("doc_b"), col("h"), col("sz").as("n_b")), "h")
+      .select(col("doc_id").as("doc_a"), col(key), col("sz").as("n_a"))
+      .join(prefix.select(col("doc_id").as("doc_b"), col(key), col("sz").as("n_b")), key)
       .where(col("doc_a") < col("doc_b") &&
         col("n_a") * numThreshold <= col("n_b") * denThreshold &&
         col("n_b") * numThreshold <= col("n_a") * denThreshold)
@@ -214,32 +251,15 @@ object DedupFunctions {
     // with no shareable shingles can only form intersection-0 pairs,
     // which the (positive) threshold rejects — the inner joins dropping
     // them is exact. At x100 this cut the array-carrying verification
-    // shuffle from the full index to the shared tail.
-    val shared = dfAgg.where(col("df") >= 2).select(col("h"))
-    // The arrays carry the 8-byte HASH, not the shingle string (~26
-    // bytes + offsets): the docSets aggregate and both verification
-    // joins were the largest remaining x100 stages, and they shuffle
-    // ~3× fewer bytes on fixed-width tokens (guide §2.3 keys, not
-    // payloads). Exactness is PROVEN per run, not assumed: intersection
-    // counts on hashes equal counts on strings iff h is injective over
-    // the df ≥ 2 shingles — and any colliding pair of distinct shingles
-    // lands its hash group at df ≥ 2, so checking min(shingle) ==
-    // max(shingle) within every df ≥ 2 hash group covers all
-    // collisions. The check is ONE aggregate over the checkpointed
-    // index (count + min/max partials combine map-side; the df ≥ 2
-    // restriction rides the same aggregate — no join); on the
-    // astronomically rare hit (~n²/2⁶⁵) the query falls back to the
-    // bit-identical string-array formulation instead of ever returning
-    // a wrong count.
-    val collided = sh
-      .groupBy(col("h"))
-      .agg(count(lit(1)).as("__df"), min(col("shingle")).as("__mn"), max(col("shingle")).as("__mx"))
-      .where(col("__df") >= 2 && col("__mn") =!= col("__mx"))
-    val token = if (collided.isEmpty) col("h") else col("shingle")
+    // shuffle from the full index to the shared tail. The arrays carry
+    // the key, so on the hash path they shuffle fixed-width tokens, ~3×
+    // fewer bytes than the shingle strings (guide §2.3 keys, not
+    // payloads).
+    val shared = dfAgg.where(col("df") >= 2).select(col(key))
     val docSets = sh
-      .join(shared, "h")
+      .join(shared, key)
       .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(token)).as("shingles"))
+      .agg(sort_array(collect_list(col(key))).as("shingles"))
     cands
       .join(docSets.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
       .join(docSets.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
@@ -629,14 +649,9 @@ object DedupFunctions {
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String, k: Int = 10): DataFrame = {
     require(k >= 2, "span gram size must be at least 2 words")
     // (doc_id, start, gh) with the gram string alongside: the count
-    // aggregate and the mark join key on the 8-byte hash (guide §2.3);
-    // exactness is proven per run exactly like repeatedSpansChar — a
-    // colliding pair of distinct grams shares one gh group, so
-    // min == max over every group certifies injectivity, and the rare
-    // hit falls back to the string-keyed formulation. Two consumers
-    // (count + probe): eager checkpoint, same rationale as the char
-    // grain (and it stops the whole words/grams projection re-running
-    // for the collision check).
+    // aggregate and the mark join key on the certified key (see
+    // certifiedCounts). Two consumers (counts + probe): eager
+    // checkpoint, same rationale as the char grain.
     val grams = wordsSpread(df, idCol, textCol)
       .where(size(col("__w")) >= k)
       .select(
@@ -646,17 +661,12 @@ object DedupFunctions {
         ).as(Seq("off", "gram")),
       )
       .select(col("doc_id"), (col("off") + 1).cast("long").as("start"), col("gram"), xxhash64(col("gram")).as("gh"))
-      // the checkpoint outlives this call: like repeatedSpansChar's, the
-      // caller releases it (Bench/Verify via getPersistentRDDs after
-      // the query)
+      // the checkpoint (and the certified counts) outlive this call:
+      // like repeatedSpansChar's, the caller releases them (Bench/Verify
+      // via getPersistentRDDs after the query)
       .localCheckpoint()
-    val checked = grams.groupBy(col("gh")).agg(min(col("gram")).as("__mn"), max(col("gram")).as("__mx"))
-    val key = if (checked.where(col("__mn") =!= col("__mx")).isEmpty) "gh" else "gram"
-    val dupGrams = grams
-      .groupBy(col(key))
-      .agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") > 1)
-      .select(col(key))
+    val (counts, key) = certifiedCounts(grams, "gram", "gh", "cnt")
+    val dupGrams = counts.where(col("cnt") > 1).select(col(key))
     val marked = grams
       .join(dupGrams, Seq(key))
       .select(col("doc_id"), col("start"), (col("start") + (k - 1)).as("end"))
@@ -723,20 +733,14 @@ object DedupFunctions {
       .select(col("doc_id"), (col("off") + 1).cast("long").as("start"), col("gram"), xxhash64(col("gram")).as("gh"))
       // two consumers (count aggregate + probe side): eager checkpoint,
       // not cache — same rationale as jaccardPairsPrefix; Bench/Verify
-      // release it via getPersistentRDDs after the query
+      // release it and the certified counts via getPersistentRDDs after
+      // the query
       .localCheckpoint()
-    // count aggregate and Zipf join keyed on the 8-byte gram hash
-    // (guide §2.3 keys-not-payloads): the probe rows narrow to
-    // (doc_id, start, gh). The repeated-mark decision is cnt > 1, so a
-    // hash collision would merge counts and mark spans that never
-    // repeat — exactness is PROVEN per run instead: distinct colliding
-    // grams necessarily share one gh group, so min(gram) == max(gram)
-    // over every group certifies injectivity (one keys-only aggregate,
-    // min/max partials combine map-side); the astronomically rare hit
-    // falls back to the bit-identical string-keyed formulation.
-    val checked = grams.groupBy(col("gh")).agg(min(col("gram")).as("__mn"), max(col("gram")).as("__mx"))
-    val key = if (checked.where(col("__mn") =!= col("__mx")).isEmpty) "gh" else "gram"
-    val freq = grams.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
+    // count aggregate and Zipf join keyed on the certified key (see
+    // certifiedCounts): the repeated-mark decision is cnt > 1, so
+    // merged counts would mark spans that never repeat. The probe rows
+    // narrow to (doc_id, start, key).
+    val (freq, key) = certifiedCounts(grams, "gram", "gh", "cnt")
     val marked = CorpusFunctions
       .zipfSplitJoin(grams.select(col("doc_id"), col("start"), col(key)), freq, Seq(key), "cnt", hotMin)
       .where(col("cnt") > 1)

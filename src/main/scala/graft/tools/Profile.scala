@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
   *   smoke                           driver-like entry() smoke check
   *   minhash [--sf dir]              minhash pipeline stage timings
   *   cc [--sf dir]                   label-propagation round timings
+  *   ccprefix [--sf dir]             prefix-fed dedupGroups timings, lazy vs checkpointed
   *   curate [--sf dir]               clean-corpus stage timings
   *   buckets [--sf dir]              optimized plan of lshBuckets
   */
@@ -159,63 +160,6 @@ object Profile {
           time("pipeline_clean_corpus")(noop(graft.SparkEntry.queries("pipeline_clean_corpus")(spark, sfDir)))
           time("pipeline_curate")(noop(graft.SparkEntry.queries("pipeline_curate")(spark, sfDir)))
         }
-        spark.stop()
-
-      case "prefix" =>
-        // stage-by-stage timing of jaccardPairsPrefix at a scale factor:
-        // the x100 anchor cell reads 161.9 s vs 14.3 s at x30 (11x for
-        // 3.3x data) and this attributes the growth. Replicates the
-        // function's internals verbatim (dev tool, not library surface).
-        val spark = session(32)
-        val factor = flags.collectFirst { case f if f.startsWith("--x=") => f.stripPrefix("--x=").toInt }.getOrElse(30)
-        val dir = graft.tools.ScaleGen.ensure(spark, "/root/testdata/sf0.1", factor, "target/scale")
-        val parts = if (factor <= 10) 32 else 32 * factor / 10
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        println(s"[profile] factor x$factor parts $parts")
-        val docs = graft.Tables.documents(spark, dir)
-        time("docs count")(println("  docs: " + docs.count()))
-        import org.apache.spark.sql.expressions.Window
-        val (num, den) = (4, 5)
-        val sh = graft.functions.DedupFunctions
-          .shingleIndex(docs, "doc_id", "text", 3)
-          .withColumn("h", xxhash64(col("shingle")))
-          .localCheckpoint()
-        time("shingle index ckpt")(println("  sh rows: " + sh.count()))
-        val dfAgg = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        val withDf = sh.join(dfAgg, "h")
-        time("df join")(noop(withDf))
-        val rk = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"), col("shingle"))
-        val szW = Window.partitionBy(col("doc_id"))
-        val prefix = withDf
-          .withColumn("rk", row_number().over(rk))
-          .withColumn("sz", count(lit(1)).over(szW))
-          .where(col("rk") <= col("sz") - ceil(col("sz") * num / den) + 1)
-          .select(col("doc_id"), col("h"), col("sz"))
-          .localCheckpoint()
-        time("prefix (df join + windows) ckpt")(println("  prefix rows: " + prefix.count()))
-        val cands = prefix
-          .select(col("doc_id").as("doc_a"), col("h"), col("sz").as("n_a"))
-          .join(prefix.select(col("doc_id").as("doc_b"), col("h"), col("sz").as("n_b")), "h")
-          .where(col("doc_a") < col("doc_b") &&
-            col("n_a") * num <= col("n_b") * den && col("n_b") * num <= col("n_a") * den)
-          .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
-          .distinct()
-          .localCheckpoint()
-        time("cands self-join ckpt")(println("  cand pairs: " + cands.count()))
-        val docSets = sh
-          .join(dfAgg.where(col("df") >= 2), "h")
-          .groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(col("shingle"))).as("shingles"))
-          .localCheckpoint()
-        time("docSets (df>=2) agg ckpt")(println("  docSets rows: " + docSets.count()))
-        val verified = cands
-          .join(docSets.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-          .join(docSets.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-          .withColumn("intersection", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-          .withColumn("union_size", col("n_a") + col("n_b") - col("intersection"))
-          .where(col("intersection") * den >= col("union_size") * num)
-        time("verify joins")(noop(verified))
-        time("whole query (library path)")(noop(graft.functions.DedupFunctions.jaccardPairsPrefix(docs, "doc_id", "text")))
         spark.stop()
 
       case "buckets" =>
