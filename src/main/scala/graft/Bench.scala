@@ -451,17 +451,16 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.GraftOptimizations.install(spark)
     // Optional query-name args: bench only that subset (profiling aid;
-    // the driver passes none and gets the full suite).
-    val unknown = args.toSeq.filterNot(SparkEntry.queries.contains)
+    // the driver passes none and gets the full suite). An unknown name,
+    // or a headline query missing from the registry, exits 2.
+    val unknown = (args.toSeq ++ headline).filterNot(SparkEntry.queries.contains)
     if (unknown.nonEmpty) {
       System.err.println(s"[bench] ERROR: unknown queries: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
     val names =
       if (args.nonEmpty) args.toSeq
-      else
-        headline.filter(SparkEntry.queries.contains) ++
-          SparkEntry.queries.keys.filterNot(headline.contains).toSeq.sorted
+      else headline ++ SparkEntry.queries.keys.filterNot(headline.contains).toSeq.sorted
     // Untimed warmup at the smallest SF: JIT-compiles every plan shape
     // (first execution of interpreted HOF paths costs ~15s of JVM
     // warmup that a long-running cluster never sees per-query).

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registry query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -9,6 +9,11 @@ object Verify {
     // the driver always calls with two args = full dump)
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
+    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] ERROR: unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

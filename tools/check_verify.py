@@ -84,7 +84,7 @@ def main() -> None:
         why = reasons.get(n, "no oracle")
         print(f"ROWS {n}: {rows} ({why})")
         if n not in reasons:
-            print(f"WARN {n}: rows-only with no named reason in SparkEntry.noOracleReasons")
+            print(f"WARN {n}: rows-only with no NoOracle reason in the query registry")
     print(f"{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
     sys.exit(1 if failures else 0)
 
