@@ -8,8 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.SeriesSelector
-import graft.operators.TimeSeriesOps
-import graft.sources.{AdxConfig, AdxSource, ConfiguredSource, DataFusionConfig, DataFusionSource, ElasticsearchSource, EsConfig, EsOptions, GraftConfig, InfluxConfig, InfluxSource, MetadataConfig, MetadataSource, PiAfConfig, PiAfSource, PiWebApiConfig, PiWebApiSource, PluginSource, RedshiftConfig, RedshiftSource, SeriesKey, SimulatorSignal, Simulators, SourceConfig, TdEngineConfig, TdEngineSource}
+import graft.sources.{AdxSource, DataFusionSource, ElasticsearchSource, FileSource, GraftConfig, InfluxSource, MetadataConfig, MetadataSource, PiAfSource, PiWebApiSource, PluginSource, RedshiftSource, SimulatorSignal, SimulatorSource, SourceConfig, TdEngineSource, TimeSeriesSource}
 
 /** The client facade — graft's equivalent of the reference's Flight API
   * surface (kukur/client.py: search, get_metadata, get_data,
@@ -22,211 +21,66 @@ import graft.sources.{AdxConfig, AdxSource, ConfiguredSource, DataFusionConfig, 
   * the same canonical (ts, value[, quality]) relation, but nothing is
   * materialized until the caller acts on it.
   *
-  * Sources come in three kinds, like the reference's SourceFactory:
-  * file-backed (csv/parquet/json/orc in row/pivot/dir layouts),
-  * external-command plugins, and signal simulators — each registered
-  * programmatically or declared in a config file ([[Graft.fromConfig]]).
+  * Every source kind — file-backed layouts, external-command plugins,
+  * signal simulators and the wire-protocol connectors — implements
+  * [[graft.sources.TimeSeriesSource]], registered programmatically
+  * ([[register]]) or declared in a config file ([[Graft.fromConfig]]).
+  * The facade answers each request through that one contract.
   */
 final class Graft(spark: SparkSession) {
 
   graft.plans.GraftOptimizations.install(spark)
 
-  /** A registered source, by kind — kukur's Source/MetadataSource
-    * pairing (kukur/source/__init__.py:95) for files, PluginSource for
-    * `type = "plugin"`, configured signals for `type = "simulator"`.
+  /** Right: a registration. Left: a type declared in the config with no
+    * connector in this build, which fails at use time — the
+    * reference's lazy SourceFactory.get_source failure.
     */
-  sealed trait Registered
-  final case class FileRegistered(
-      data: ConfiguredSource,
-      dataConfig: SourceConfig,
-      metadata: Seq[MetadataSource] = Nil,
-  ) extends Registered
-  final case class PluginRegistered(plugin: PluginSource) extends Registered
-  final case class SimulatorRegistered(signals: Seq[SimulatorSignal]) extends Registered
-  final case class InfluxRegistered(influx: InfluxSource, metadata: Seq[MetadataSource] = Nil) extends Registered
-  final case class EsRegistered(es: ElasticsearchSource) extends Registered
-  final case class PiRegistered(pi: PiWebApiSource) extends Registered
-  final case class PiAfRegistered(af: PiAfSource) extends Registered
-  final case class AdxRegistered(adx: AdxSource) extends Registered
-  final case class DataFusionRegistered(df: DataFusionSource) extends Registered
-  final case class TdEngineRegistered(td: TdEngineSource, metadata: Seq[MetadataSource] = Nil) extends Registered
-  final case class RedshiftRegistered(rs: RedshiftSource, metadata: Seq[MetadataSource] = Nil) extends Registered
-  final case class UnavailableRegistered(sourceType: String) extends Registered
+  private val sources = mutable.LinkedHashMap.empty[String, Either[String, Graft.Registered]]
 
-  private val sources = mutable.LinkedHashMap.empty[String, Registered]
-
-  def registerSource(
-      name: String,
-      config: SourceConfig,
-      metadata: Seq[MetadataConfig] = Nil,
-  ): this.type = {
-    sources(name) = FileRegistered(new ConfiguredSource(config), config, metadata.map(new MetadataSource(_)))
+  /** Register any source kind; `metadata` extras layer over its own
+    * metadata in [[getMetadata]].
+    */
+  def register(name: String, source: TimeSeriesSource, metadata: Seq[MetadataConfig] = Nil): this.type = {
+    sources(name) = Right(Graft.Registered(source, metadata.map(new MetadataSource(_))))
     this
   }
 
-  def registerPluginSource(name: String, plugin: PluginSource): this.type = {
-    sources(name) = PluginRegistered(plugin)
-    this
-  }
-
-  def registerInfluxSource(name: String, config: InfluxConfig, metadata: Seq[MetadataConfig] = Nil): this.type = {
-    sources(name) = InfluxRegistered(new InfluxSource(config), metadata.map(new MetadataSource(_)))
-    this
-  }
-
-  def registerElasticsearchSource(name: String, config: EsConfig, options: EsOptions): this.type = {
-    sources(name) = EsRegistered(new ElasticsearchSource(config, options))
-    this
-  }
-
-  def registerPiWebApiSource(name: String, config: PiWebApiConfig): this.type = {
-    sources(name) = PiRegistered(new PiWebApiSource(config))
-    this
-  }
-
-  def registerPiAfSource(name: String, config: PiAfConfig): this.type = {
-    sources(name) = PiAfRegistered(new PiAfSource(config))
-    this
-  }
-
-  def registerAdxSource(name: String, config: AdxConfig): this.type = {
-    sources(name) = AdxRegistered(new AdxSource(config))
-    this
-  }
-
-  def registerDataFusionSource(name: String, config: DataFusionConfig): this.type = {
-    sources(name) = DataFusionRegistered(new DataFusionSource(config))
-    this
-  }
-
-  def registerTdEngineSource(name: String, config: TdEngineConfig, metadata: Seq[MetadataConfig] = Nil): this.type = {
-    sources(name) = TdEngineRegistered(new TdEngineSource(config), metadata.map(new MetadataSource(_)))
-    this
-  }
-
-  def registerRedshiftSource(name: String, config: RedshiftConfig, metadata: Seq[MetadataConfig] = Nil): this.type = {
-    sources(name) = RedshiftRegistered(new RedshiftSource(config), metadata.map(new MetadataSource(_)))
-    this
-  }
+  /** A file source; its `metadata` sidecars answer its search too. */
+  def registerSource(name: String, config: SourceConfig, metadata: Seq[MetadataConfig] = Nil): this.type =
+    register(name, new FileSource(config, metadata))
 
   def registerSimulatorSource(name: String, signals: Seq[SimulatorSignal]): this.type = {
     require(signals.nonEmpty, s"simulator source $name needs at least one signal")
-    sources(name) = SimulatorRegistered(signals)
-    this
+    register(name, new SimulatorSource(signals))
   }
 
   def listSources: Seq[String] = sources.keys.toSeq
 
-  private def registered(name: String): Registered =
-    sources.getOrElse(name, throw new IllegalArgumentException(s"unknown source: $name")) match {
-      // declared in the config, but no connector in this build — the
-      // reference's lazy SourceFactory.get_source failure, at use time
-      case u: UnavailableRegistered =>
-        throw new IllegalArgumentException(s"source $name has unsupported type ${u.sourceType}")
-      case r => r
-    }
+  private def registered(name: String): Graft.Registered =
+    sources
+      .getOrElse(name, throw new IllegalArgumentException(s"unknown source: $name"))
+      .fold(typ => throw new IllegalArgumentException(s"source $name has unsupported type $typ"), identity)
 
-  private def fileOnly(name: String, op: String): FileRegistered = registered(name) match {
-    case f: FileRegistered => f
-    case other => throw new IllegalArgumentException(s"$op needs a file-backed source; $name is ${other.getClass.getSimpleName}")
-  }
+  private def source(name: String): TimeSeriesSource = registered(name).source
 
-  /** All series in a source (kukur search). File sources enumerate
-    * distinct tag combinations, plugins answer their `search` action,
-    * simulators list their configured signals.
-    */
-  def search(sourceName: String): DataFrame = registered(sourceName) match {
-    case f: FileRegistered =>
-      // the reference's search answers FROM METADATA whenever the
-      // source has metadata configured (csv.py:130: one Metadata per
-      // metadata row, extras merged by the factory wrapper) and scans
-      // the data only as the fallback — so a search carries the fields
-      // a quality screen needs without touching the corpus
-      if (f.metadata.nonEmpty)
-        MetadataSource.merge(f.dataConfig.tagColumns, f.metadata.map(_.read(spark)))
-      else f.data.search(spark)
-    case p: PluginRegistered => p.plugin.search(spark)
-    case i: InfluxRegistered => i.influx.search(spark)
-    case e: EsRegistered => e.es.search(spark)
-    case pi: PiRegistered => pi.pi.search(spark)
-    case af: PiAfRegistered => af.af.search(spark)
-    case a: AdxRegistered => a.adx.search(spark)
-    case d: DataFusionRegistered => d.df.search(spark)
-    case t: TdEngineRegistered => t.td.search(spark)
-    case r: RedshiftRegistered => r.rs.search(spark)
-    case s: SimulatorRegistered =>
-      import spark.implicits._
-      s.signals.map(sig => (sig.seriesName, sig.signalType)).toDF("series_name", "signal_type")
-  }
+  /** All series in a source (kukur search). */
+  def search(sourceName: String): DataFrame = source(sourceName).search(spark)
 
   /** Canonical data frame for the whole source — file sources only:
-    * plugins and simulators have no "all of it" without a time range.
+    * other kinds have no "all of it" without a time range.
     */
-  def readAll(sourceName: String): DataFrame = fileOnly(sourceName, "readAll").data.read(spark)
-
-  private def filterTags(df: DataFrame, selector: SeriesSelector): DataFrame =
-    selector.tags.foldLeft(df) { case (d, (k, v)) => d.where(col(k).cast("string") === lit(v)) }
-
-  private def selectorSeriesName(selector: SeriesSelector): String =
-    selector.tags.getOrElse(
-      SeriesSelector.SeriesNameTag,
-      selector.tags.getOrElse("series_name", throw new IllegalArgumentException("selector needs a series name tag")),
-    )
-
-  private def simulatorData(
-      s: SimulatorRegistered,
-      selector: SeriesSelector,
-      start: Timestamp,
-      end: Timestamp,
-  ): DataFrame = {
-    val name = selectorSeriesName(selector)
-    val sig = s.signals
-      .find(_.seriesName == name)
-      .getOrElse(throw new IllegalArgumentException(s"no configured signal: $name"))
-    Simulators.generate(spark, sig, start, end).select(lit(name).as("series_name"), col("ts"), col("value"))
+  def readAll(sourceName: String): DataFrame = source(sourceName) match {
+    case f: FileSource => f.data.read(spark)
+    case other =>
+      throw new IllegalArgumentException(s"readAll needs a file-backed source; $sourceName is ${other.getClass.getSimpleName}")
   }
 
-  /** Range data for one series (kukur get_data): tag filter + half-open
-    * time range, both pushed into the scan where the format allows.
-    * Plugin sources issue a `data` request; simulators generate the
-    * configured signal over exactly [start, end).
-    */
+  /** Range data for one series (kukur get_data) over [start, end). */
   def getData(sourceName: String, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
-    registered(sourceName) match {
-      case f: FileRegistered =>
-        // keyed dir layouts prune to ONE file when the selector pins
-        // every partition key — the dir layout's partition pruning
-        f.data.readSeries(spark, selector.tags) match {
-          case Some(one) => return TimeSeriesOps.filterRange(one, start, end)
-          case None      => ()
-        }
-        // Delta tables with timestamp partitions: derived partition
-        // IN-list from the range so the scan prunes DAY/MONTH/… dirs
-        // (tag partitions prune through filterTags below)
-        val all = f.data.readRangePruned(spark, start, end).getOrElse(readAll(sourceName))
-        // multi-field sources: a selector names ONE field of the series
-        // (kukur csv.py:313 picks row_data[selector.field])
-        val one =
-          if (all.columns.contains("field")) all.where(col("field") === lit(selector.field))
-          else all
-        TimeSeriesOps.filterRange(filterTags(one, selector), start, end)
-      case p: PluginRegistered =>
-        p.plugin.dataForKeys(spark, Seq(SeriesKey(selector.tags, selector.field)), start, end)
-      case i: InfluxRegistered => i.influx.getData(spark, selector, start, end)
-      case e: EsRegistered => e.es.getData(spark, selector, start, end)
-      case pi: PiRegistered => pi.pi.getData(spark, selector, start, end)
-      case af: PiAfRegistered => af.af.getData(spark, selector, start, end)
-      case a: AdxRegistered => a.adx.getData(spark, selector, start, end)
-      case d: DataFusionRegistered => d.df.getData(spark, selector, start, end)
-      case t: TdEngineRegistered => t.td.getData(spark, selector, start, end)
-      case r: RedshiftRegistered => r.rs.getData(spark, selector, start, end)
-      case s: SimulatorRegistered => simulatorData(s, selector, start, end)
-    }
+    source(sourceName).getData(spark, selector, start, end)
 
-  /** Plot-ready downsample (kukur get_plot_data). Plugins with
-    * `features.plot` serve pre-bucketed data via their `plot` action;
-    * other kinds bucket with the same min/max/first/last operator the
-    * reference's plot path uses.
+  /** Plot-ready downsample (kukur get_plot_data): the source's plot
+    * action, or the client-side min/max/first/last bucketing of its data.
     */
   def getPlotData(
       sourceName: String,
@@ -234,130 +88,28 @@ final class Graft(spark: SparkSession) {
       start: Timestamp,
       end: Timestamp,
       intervalCount: Int,
-  ): DataFrame = registered(sourceName) match {
-    case f: FileRegistered =>
-      // same single-file pruning AND selector-field slicing as getData
-      val slice = f.data.readSeries(spark, selector.tags).getOrElse {
-        val all = filterTags(readAll(sourceName), selector)
-        if (all.columns.contains("field")) all.where(col("field") === lit(selector.field)) else all
-      }
-      TimeSeriesOps.plotData(slice, f.dataConfig.tagColumns, start, end, intervalCount)
-    case p: PluginRegistered =>
-      p.plugin.plotData(spark, Seq(SeriesKey(selector.tags, selector.field)), start, end, intervalCount)
-    case i: InfluxRegistered =>
-      // influx has no server-side plot action: bucket the fetched range
-      // with the same operator the reference's plot fallback uses
-      TimeSeriesOps.plotData(
-        i.influx.getData(spark, selector, start, end).withColumn("value", col("value").cast("double"))
-          .withColumn("series_name", lit(selector.name)),
-        Seq("series_name"), start, end, intervalCount)
-    case e: EsRegistered =>
-      TimeSeriesOps.plotData(
-        e.es.getData(spark, selector, start, end).withColumn("value", col("value").cast("double"))
-          .withColumn("series_name", lit(selector.name)),
-        Seq("series_name"), start, end, intervalCount)
-    case pi: PiRegistered =>
-      // PI serves plot-reduced data itself (the PlotData stream with
-      // an intervals parameter) — no client-side bucketing needed
-      pi.pi.getPlotData(spark, selector, start, end, intervalCount)
-    case af: PiAfRegistered => af.af.getPlotData(spark, selector, start, end, intervalCount)
-    case a: AdxRegistered =>
-      // kusto has no plot action: bucket the fetched range client-side
-      TimeSeriesOps.plotData(
-        a.adx.getData(spark, selector, start, end).withColumn("value", col("value").cast("double"))
-          .withColumn("series_name", lit(selector.name)),
-        Seq("series_name"), start, end, intervalCount)
-    case d: DataFusionRegistered =>
-      TimeSeriesOps.plotData(
-        d.df.getData(spark, selector, start, end).withColumn("series_name", lit(selector.name)),
-        Seq("series_name"), start, end, intervalCount)
-    case t: TdEngineRegistered =>
-      // tdengine has no plot action: bucket the fetched range
-      // client-side like the other SQL-family kinds
-      TimeSeriesOps.plotData(
-        t.td.getData(spark, selector, start, end).withColumn("value", col("value").cast("double"))
-          .withColumn("series_name", lit(selector.name)),
-        Seq("series_name"), start, end, intervalCount)
-    case r: RedshiftRegistered =>
-      // SQL-family kinds have no plot action: bucket client-side
-      TimeSeriesOps.plotData(
-        r.rs.getData(spark, selector, start, end).withColumn("value", col("value").cast("double"))
-          .withColumn("series_name", lit(selector.name)),
-        Seq("series_name"), start, end, intervalCount)
-    case s: SimulatorRegistered =>
-      TimeSeriesOps.plotData(simulatorData(s, selector, start, end), Seq("series_name"), start, end, intervalCount)
-  }
+  ): DataFrame = source(sourceName).getPlotData(spark, selector, start, end, intervalCount)
 
-  /** Merged metadata for a source (kukur get_metadata): extra metadata
-    * sources in registration order take precedence, field by field.
-    * Plugin sources answer their `metadata` action for the selector.
+  /** Metadata for a series (kukur get_metadata). With `metadata_sources`
+    * extras, kukur's factory-wrapper merge ([[MetadataSource.layered]]):
+    * the source's own metadata first, then the extras in order. The own
+    * answer is for this one selector, so a tag it does not echo reads
+    * as the selector's.
     */
-  def getMetadata(sourceName: String, selector: SeriesSelector = SeriesSelector("", Map.empty)): DataFrame =
-    registered(sourceName) match {
-      case f: FileRegistered =>
-        require(f.metadata.nonEmpty, s"source $sourceName has no metadata sources")
-        val merged = MetadataSource.merge(f.dataConfig.tagColumns, f.metadata.map(_.read(spark)))
-        val tagged = filterTags(merged, selector)
-        // field-keyed metadata (metadata_field_column): a selector
-        // names one (tags, field) row (csv.py:221-228). Filter ONLY
-        // when every source is field-keyed — in a mixed merge `field`
-        // is an ordinary data column (null from the plain frames) and
-        // an equality filter would silently drop their rows
-        if (f.metadata.forall(_.fieldKeyed) && merged.columns.contains("field"))
-          tagged.where(col("field") === lit(selector.field))
-        else tagged
-      case p: PluginRegistered => p.plugin.metadata(spark, SeriesKey(selector.tags, selector.field))
-      case i: InfluxRegistered =>
-        // the influx source itself always answers empty metadata
-        // (influxdb.py:119), but kukur's factory wrapper layers
-        // metadata_sources extras over every source kind — the influx
-        // fixtures carry metadata_sources = ["noaa"]
-        if (i.metadata.nonEmpty) {
-          val mergeTags = i.metadata.head.tagColumns
-          filterTags(MetadataSource.merge(mergeTags, i.metadata.map(_.read(spark))), selector)
-        } else {
-          import spark.implicits._
-          selector.tags.toSeq.sortBy(_._1).toDF("tag", "value")
-        }
-      case e: EsRegistered => e.es.getMetadata(spark, selector)
-      case pi: PiRegistered => pi.pi.getMetadata(spark, selector)
-      case _: PiAfRegistered =>
-        // the reference's AF get_metadata raises NotImplementedError
-        // (piwebapi_af.py:55) — search carries the metadata instead
-        throw new UnsupportedOperationException("piwebapi-af sources answer metadata through search")
-      case a: AdxRegistered =>
-        // the reference returns empty metadata (azure_data_explorer.py:
-        // 236) — one row carrying only the selector's tags
-        import spark.implicits._
-        selector.tags.toSeq.sortBy(_._1).toDF("tag", "value")
-      case _: DataFusionRegistered =>
-        // the reference raises NotImplementedError (datafusion.py:119)
-        // — the list_query carries metadata through search instead
-        throw new UnsupportedOperationException("datafusion sources answer metadata through search")
-      case t: TdEngineRegistered =>
-        // the source's own metadata query first, metadata_sources
-        // extras layered over missing fields (the factory wrapper's
-        // merge precedence, source/__init__.py:205)
-        val own = t.td.metadata(spark, selector)
-        if (t.metadata.isEmpty) own
-        else filterTags(MetadataSource.merge(t.td.tagColumns, own +: t.metadata.map(_.read(spark))), selector)
-      case r: RedshiftRegistered =>
-        // same BaseSQLSource shape as tdengine: own metadata query
-        // first, metadata_sources extras layered over missing fields
-        val own = r.rs.metadata(spark, selector)
-        if (r.metadata.isEmpty) own
-        else filterTags(MetadataSource.merge(r.rs.tagColumns, own +: r.metadata.map(_.read(spark))), selector)
-      case _: SimulatorRegistered =>
-        throw new IllegalArgumentException(s"simulator source $sourceName has no metadata")
+  def getMetadata(sourceName: String, selector: SeriesSelector = SeriesSelector("", Map.empty)): DataFrame = {
+    val r = registered(sourceName)
+    val src = r.source
+    if (r.metadata.isEmpty) src.getMetadata(spark, selector)
+    else {
+      val own = src.ownMetadata(spark, selector).map { m =>
+        src.tagColumns.filterNot(m.columns.contains).foldLeft(m)((d, t) => d.withColumn(t, lit(selector.tags.get(t).orNull).cast("string")))
+      }
+      MetadataSource.layered(selector, own.map(src.tagColumns -> _).toSeq ++ r.metadata.map(x => x.tagColumns -> x.read(spark)))
     }
+  }
 
   /** Tag/field structure of a source (kukur get_source_structure). */
-  def getSourceStructure(sourceName: String): DataFrame = registered(sourceName) match {
-    case i: InfluxRegistered => i.influx.sourceStructure(spark)
-    case _ =>
-      val cfg = fileOnly(sourceName, "getSourceStructure").dataConfig
-      TimeSeriesOps.sourceStructure(readAll(sourceName), cfg.tagColumns, cfg.fieldColumns)
-  }
+  def getSourceStructure(sourceName: String): DataFrame = source(sourceName).sourceStructure(spark)
 
   /** Source connectivity diagnostic — the reference's `test` CLI
     * subcommand (kukur/subcommands/test_source.py + source/test.py):
@@ -380,15 +132,9 @@ final class Graft(spark: SparkSession) {
     // source's OWN tag columns — a config-declared source defaults to
     // kukur's spaced "series name" tag, and multi-tag sources need
     // every tag to name one series
-    val tagCols: Seq[String] = scala.util.Try(registered(sourceName)) match {
-      case scala.util.Success(f: FileRegistered) => f.dataConfig.tagColumns
-      case scala.util.Success(t: TdEngineRegistered) => t.td.tagColumns
-      case scala.util.Success(r: RedshiftRegistered) => r.rs.tagColumns
-      // unknown/unavailable sources still report per-probe failures
-      case _ => Seq("series_name")
-    }
     val selector: Option[SeriesSelector] =
       try {
+        val tagCols = source(sourceName).tagColumns
         val first = search(sourceName)
           .select(tagCols.map(c => col(c).cast("string")): _*)
           .orderBy(tagCols.map(col): _*)
@@ -418,6 +164,11 @@ object Graft {
 
   def apply(spark: SparkSession): Graft = new Graft(spark)
 
+  /** A registered source and its `metadata_sources` extras, in
+    * precedence order — kukur's SourceWrapper (kukur/source/__init__.py).
+    */
+  private final case class Registered(source: TimeSeriesSource, metadata: Seq[MetadataSource])
+
   /** Build a facade from a declarative config file — the reference's
     * primary UX (`Kukur.toml` + kukur/config.py): every source in the
     * file (plus its `include` fragments) is registered with its
@@ -431,17 +182,17 @@ object Graft {
     GraftConfig.load(configPath).foreach {
       case GraftConfig.DeclaredFile(name, data, metadata) => g.registerSource(name, data, metadata)
       case GraftConfig.DeclaredPlugin(name, cmd, configJson, source, qualityGood) =>
-        g.registerPluginSource(name, PluginSource(cmd, configJson, source, qualityGood))
+        g.register(name, PluginSource(cmd, configJson, source, qualityGood))
       case GraftConfig.DeclaredSimulator(name, signals) => g.registerSimulatorSource(name, signals)
-      case GraftConfig.DeclaredInflux(name, config, metadata) => g.registerInfluxSource(name, config, metadata)
-      case GraftConfig.DeclaredEs(name, config, options) => g.registerElasticsearchSource(name, config, options)
-      case GraftConfig.DeclaredPiWebApi(name, config) => g.registerPiWebApiSource(name, config)
-      case GraftConfig.DeclaredPiAf(name, config) => g.registerPiAfSource(name, config)
-      case GraftConfig.DeclaredAdx(name, config) => g.registerAdxSource(name, config)
-      case GraftConfig.DeclaredDataFusion(name, config) => g.registerDataFusionSource(name, config)
-      case GraftConfig.DeclaredTdEngine(name, config, metadata) => g.registerTdEngineSource(name, config, metadata)
-      case GraftConfig.DeclaredRedshift(name, config, metadata) => g.registerRedshiftSource(name, config, metadata)
-      case GraftConfig.DeclaredUnavailable(name, typ) => g.sources(name) = g.UnavailableRegistered(typ)
+      case GraftConfig.DeclaredInflux(name, config, metadata) => g.register(name, new InfluxSource(config), metadata)
+      case GraftConfig.DeclaredEs(name, config, options) => g.register(name, new ElasticsearchSource(config, options))
+      case GraftConfig.DeclaredPiWebApi(name, config) => g.register(name, new PiWebApiSource(config))
+      case GraftConfig.DeclaredPiAf(name, config) => g.register(name, new PiAfSource(config))
+      case GraftConfig.DeclaredAdx(name, config) => g.register(name, new AdxSource(config))
+      case GraftConfig.DeclaredDataFusion(name, config) => g.register(name, new DataFusionSource(config))
+      case GraftConfig.DeclaredTdEngine(name, config, metadata) => g.register(name, new TdEngineSource(config), metadata)
+      case GraftConfig.DeclaredRedshift(name, config, metadata) => g.register(name, new RedshiftSource(config), metadata)
+      case GraftConfig.DeclaredUnavailable(name, typ) => g.sources(name) = Left(typ)
     }
     g
   }

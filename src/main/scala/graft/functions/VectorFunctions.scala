@@ -1390,9 +1390,10 @@ object VectorFunctions {
     *     partial aggregation combines them before the shuffle, so
     *     shuffle volume is #partitions × d² summary rows, never n·d².
     *  2. eigendecomposition of the d×d covariance at the driver —
-    *     cyclic Jacobi sweeps in fixed (p,q) order, deterministic for
-    *     a deterministic input matrix; d = embedding dim, O(d³) work
-    *     on ~d² doubles (bounded like the Lloyd summaries).
+    *     cyclic Jacobi sweeps ([[jacobiEigSym]]) in fixed (p,q)
+    *     order, deterministic for a deterministic input matrix;
+    *     d = embedding dim, O(d³) work on ~d² doubles (bounded like
+    *     the Lloyd summaries).
     *  3. per-row projection onto the top-`k` components as literal
     *     column expressions (fixed left-fold order — deterministic),
     *     no shuffle, no driver data loop.
@@ -1410,10 +1411,10 @@ object VectorFunctions {
     val vecs = spreadVecs(df).cache()
     // one aggregate pass over the training frame: nothing to cache
     val (mean, cov) = pcaMeanCov(trainFrame(vecs, trainLimit), dim)
-    val (eigVals, eigVecs) = jacobiEigen(cov)
+    val (eigVals, eigVecs) = jacobiEigSym(cov)
     val order = (0 until dim).sortBy(i => (-eigVals(i), i)).take(k)
     val comps = order.map { i =>
-      val v = eigVecs(i)
+      val v = Array.tabulate(dim)(r => eigVecs(r)(i))
       val pivot = v.indices.minBy(j => (-math.abs(v(j)), j))
       if (v(pivot) < 0) v.map(x => -x) else v
     }
@@ -1469,58 +1470,6 @@ object VectorFunctions {
       sums((a, b))._1 / 1e12 / n - mean(i) * mean(j)
     }
     (mean, cov)
-  }
-
-  /** Cyclic Jacobi eigendecomposition of a symmetric matrix: fixed
-    * (p,q) sweep order, rotations applied until the off-diagonal mass
-    * is negligible (or a fixed sweep cap — 64-dim covariances converge
-    * in < 10 sweeps). Returns (eigenvalues, eigenvectors as rows),
-    * deterministic for a deterministic input.
-    */
-  private def jacobiEigen(m: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
-    val n = m.length
-    val a = Array.tabulate(n, n)((i, j) => m(i)(j))
-    val v = Array.tabulate(n, n)((i, j) => if (i == j) 1.0 else 0.0)
-    def offDiag: Double = {
-      var s = 0.0
-      for (i <- 0 until n; j <- i + 1 until n) s += a(i)(j) * a(i)(j)
-      s
-    }
-    var sweep = 0
-    while (sweep < 30 && offDiag > 1e-22) {
-      for (p <- 0 until n - 1; q <- p + 1 until n) {
-        val apq = a(p)(q)
-        if (math.abs(apq) > 1e-300) {
-          val theta = (a(q)(q) - a(p)(p)) / (2.0 * apq)
-          val t =
-            if (theta >= 0) 1.0 / (theta + math.sqrt(theta * theta + 1.0))
-            else -1.0 / (-theta + math.sqrt(theta * theta + 1.0))
-          val c = 1.0 / math.sqrt(t * t + 1.0)
-          val s = t * c
-          for (i <- 0 until n) {
-            val aip = a(i)(p)
-            val aiq = a(i)(q)
-            a(i)(p) = c * aip - s * aiq
-            a(i)(q) = s * aip + c * aiq
-          }
-          for (j <- 0 until n) {
-            val apj = a(p)(j)
-            val aqj = a(q)(j)
-            a(p)(j) = c * apj - s * aqj
-            a(q)(j) = s * apj + c * aqj
-          }
-          for (i <- 0 until n) {
-            val vip = v(i)(p)
-            val viq = v(i)(q)
-            v(i)(p) = c * vip - s * viq
-            v(i)(q) = s * vip + c * viq
-          }
-        }
-      }
-      sweep += 1
-    }
-    // v holds eigenvectors as COLUMNS; return them as rows
-    (Array.tabulate(n)(i => a(i)(i)), Array.tabulate(n, n)((c, r) => v(r)(c)))
   }
 
   /** Random-hyperplane LSH bucket id: `planes` sign bits of dot products

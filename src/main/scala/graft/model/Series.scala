@@ -29,6 +29,15 @@ final case class SeriesSelector(
     val base = (seriesName ++ rest).mkString(",")
     if (field == "value") base else s"$base::$field"
   }
+
+  /** The series name of a source keyed by name alone: kukur's spaced
+    * `series name` tag, or graft's `series_name`.
+    */
+  def seriesName: String =
+    tags.getOrElse(
+      SeriesSelector.SeriesNameTag,
+      tags.getOrElse("series_name", throw new IllegalArgumentException("selector needs a series name tag")),
+    )
 }
 
 object SeriesSelector {

@@ -25,6 +25,10 @@ object TimeSeriesOps {
   def filterRange(df: DataFrame, start: Timestamp, end: Timestamp): DataFrame =
     df.where(col("ts") >= lit(start) && col("ts") < lit(end))
 
+  /** Selector tag filter: each tag column, as a string, equals its value. */
+  def filterTags(df: DataFrame, tags: Map[String, String]): DataFrame =
+    tags.foldLeft(df) { case (d, (k, v)) => d.where(col(k).cast("string") === lit(v)) }
+
   /** Series discovery: distinct tag combinations × field names
     * (kukur/source/arrow.py:183 _search_row). One shuffle with map-side
     * partial distinct.

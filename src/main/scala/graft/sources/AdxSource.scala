@@ -60,9 +60,11 @@ final case class AdxConfig(
 ) extends Serializable
 
 class AdxSource(cfg: AdxConfig, sleepSeconds: Long => Unit = s => Thread.sleep(s * 1000L))
-    extends Serializable {
+    extends EmptyMetadata with Serializable {
 
   import AdxSource._
+
+  override def tagColumns: Seq[String] = cfg.tagColumns
 
   private val tokens = new TokenCache(cfg)
 

@@ -1,7 +1,12 @@
 package graft.sources
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.model.SeriesSelector
+import graft.operators.TimeSeriesOps
 
 /** Config-driven file source, mirroring the reference's source layer
   * (kukur/source/arrow.py BaseArrowSource + kukur/source/csv/csv.py):
@@ -624,6 +629,64 @@ final class ConfiguredSource(cfg: SourceConfig) {
           .crossJoin(broadcast(cfg.fieldColumns.toDF("field")))
     }
   }
+}
+
+/** A file-backed source: a [[ConfiguredSource]] plus its metadata
+  * sidecars (the file's own metadata, then its `metadata_sources`),
+  * which answer both its search and its metadata.
+  */
+final class FileSource(config: SourceConfig, metadata: Seq[MetadataConfig] = Nil) extends TimeSeriesSource {
+
+  val data = new ConfiguredSource(config)
+  private val sidecars = metadata.map(new MetadataSource(_))
+
+  override def tagColumns: Seq[String] = config.tagColumns
+
+  /** kukur's search answers FROM METADATA whenever the source has
+    * metadata configured (csv.py:130: one Metadata per metadata row)
+    * and scans the data only as the fallback — so a search carries the
+    * fields a quality screen needs without touching the corpus.
+    */
+  def search(spark: SparkSession): DataFrame =
+    if (sidecars.nonEmpty) MetadataSource.merge(MetadataSource.sharedTags(sidecars.map(_.tagColumns)), sidecars.map(_.read(spark)))
+    else data.search(spark)
+
+  override def ownMetadata(spark: SparkSession, selector: SeriesSelector): Option[DataFrame] =
+    if (sidecars.isEmpty) None
+    else Some(MetadataSource.layered(selector, sidecars.map(s => s.tagColumns -> s.read(spark))))
+
+  /** Tag filter + half-open time range, both pushed into the scan
+    * where the format allows.
+    */
+  def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
+    // keyed dir layouts prune to ONE file when the selector pins
+    // every partition key — the dir layout's partition pruning
+    data.readSeries(spark, selector.tags) match {
+      case Some(one) => TimeSeriesOps.filterRange(one, start, end)
+      case None =>
+        // Delta tables with timestamp partitions: derived partition
+        // IN-list from the range so the scan prunes DAY/MONTH/… dirs
+        // (tag partitions prune through filterTags below)
+        val all = data.readRangePruned(spark, start, end).getOrElse(data.read(spark))
+        // multi-field sources: a selector names ONE field of the series
+        // (kukur csv.py:313 picks row_data[selector.field])
+        val one =
+          if (all.columns.contains("field")) all.where(col("field") === lit(selector.field))
+          else all
+        TimeSeriesOps.filterRange(TimeSeriesOps.filterTags(one, selector.tags), start, end)
+    }
+
+  /** Buckets [[getData]]'s slice, keyed by this source's own tags. */
+  override def getPlotData(
+      spark: SparkSession,
+      selector: SeriesSelector,
+      start: Timestamp,
+      end: Timestamp,
+      intervalCount: Int,
+  ): DataFrame = TimeSeriesOps.plotData(getData(spark, selector, start, end), tagColumns, start, end, intervalCount)
+
+  override def sourceStructure(spark: SparkSession): DataFrame =
+    TimeSeriesOps.sourceStructure(data.read(spark), config.tagColumns, config.fieldColumns)
 }
 
 object ConfiguredSource {

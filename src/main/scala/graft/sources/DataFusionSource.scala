@@ -39,9 +39,11 @@ final case class DataFusionConfig(
     valueMapping: Map[String, Map[String, String]] = Map.empty,
 ) extends Serializable
 
-class DataFusionSource(cfg: DataFusionConfig) extends Serializable {
+class DataFusionSource(cfg: DataFusionConfig) extends TimeSeriesSource with Serializable {
 
   import DataFusionSource._
+
+  override def tagColumns: Seq[String] = cfg.tagColumns
 
   /** Register every configured table as a temp view — the reference
     * builds a fresh SessionContext per call (datafusion.py:142
@@ -89,6 +91,21 @@ class DataFusionSource(cfg: DataFusionConfig) extends Serializable {
       cfg.dataQueryNamedParameters.map { case (param, tagKey) => param -> selector.tags(tagKey) }
     spark.sql(dollarParamsToMarkers(quoteIdents(q)), args)
   }
+
+  /** The fallback bucketing over the query's own value type, uncast. */
+  override def getPlotData(
+      spark: SparkSession,
+      selector: SeriesSelector,
+      start: Timestamp,
+      end: Timestamp,
+      intervalCount: Int,
+  ): DataFrame = bucketed(getData(spark, selector, start, end), selector, start, end, intervalCount)
+
+  /** The reference raises NotImplementedError (datafusion.py:119) —
+    * the list_query carries metadata through search instead.
+    */
+  override def getMetadata(spark: SparkSession, selector: SeriesSelector): DataFrame =
+    throw new UnsupportedOperationException("datafusion sources answer metadata through search")
 }
 
 object DataFusionSource {

@@ -67,9 +67,12 @@ final case class EsOptions(
     mapping.collectFirst { case (k, v) if v == column => k }.getOrElse(column)
 }
 
-class ElasticsearchSource(cfg: EsConfig, opts: EsOptions) extends Serializable {
+class ElasticsearchSource(cfg: EsConfig, opts: EsOptions) extends TimeSeriesSource with Serializable {
 
   import ElasticsearchSource._
+
+  /** The tag columns under their kukur names, as [[search]] emits them. */
+  override def tagColumns: Seq[String] = opts.tagColumns.map(opts.fromSource)
 
   /** Series discovery (elasticsearch.py:135 `search`): one row per
     * (tags × field), with any configured metadata columns alongside.
@@ -157,7 +160,7 @@ class ElasticsearchSource(cfg: EsConfig, opts: EsOptions) extends Serializable {
     * or a DSL bool/term query on the metadata index. One wide row of
     * the doc's metadata columns (tags echoed).
     */
-  def getMetadata(spark: SparkSession, selector: SeriesSelector): DataFrame = {
+  override def ownMetadata(spark: SparkSession, selector: SeriesSelector): Option[DataFrame] = {
     val doc: Option[Map[String, String]] = opts.metadataQuery match {
       case Some(sql) =>
         val params = opts.tagColumns.map(t => selector.tags.getOrElse(opts.fromSource(t), "")) ++
@@ -191,10 +194,10 @@ class ElasticsearchSource(cfg: EsConfig, opts: EsOptions) extends Serializable {
       val name = opts.fromSource(t)
       name -> selector.tags.get(name).orNull
     }.toMap ++ row).toSeq.sortBy(_._1)
-    spark.createDataFrame(
+    Some(spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row.fromSeq(cols.map(_._2))), 1),
       StructType(cols.map(c => StructField(c._1, StringType))),
-    )
+    ))
   }
 }
 

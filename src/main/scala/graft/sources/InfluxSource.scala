@@ -33,15 +33,17 @@ final case class InfluxConfig(
     password: Option[String] = None,
 ) extends Serializable
 
-class InfluxSource(cfg: InfluxConfig) extends Serializable {
+class InfluxSource(cfg: InfluxConfig) extends EmptyMetadata with Serializable {
 
   import InfluxSource._
+
+  def search(spark: SparkSession): DataFrame = search(spark, SeriesSelector(""))
 
   /** Series discovery (influxdb.py:95 `search`): SHOW SERIES filtered
     * by the selector's measurement/tags, crossed with the measurement's
     * field keys. Columns: `series name`, every tag key seen, `field`.
     */
-  def search(spark: SparkSession, selector: SeriesSelector = SeriesSelector("")): DataFrame = {
+  def search(spark: SparkSession, selector: SeriesSelector): DataFrame = {
     val measurement = selector.tags.get(SeriesSelector.SeriesNameTag)
     val otherTags = selector.tags - SeriesSelector.SeriesNameTag
     val from = measurement.map(m => s""" FROM "${escape(m)}"""").getOrElse("")
@@ -112,7 +114,7 @@ class InfluxSource(cfg: InfluxConfig) extends Serializable {
   /** Tag keys, fields and tag values (influxdb.py:156
     * `get_source_structure`): one row per (kind, key, value).
     */
-  def sourceStructure(spark: SparkSession): DataFrame = {
+  override def sourceStructure(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val tagKeys = seriesFlat(query(cfg, "SHOW TAG KEYS")).map(_.asText()).distinct
     val fields = showFieldKeys().values.flatten.toSeq.distinct

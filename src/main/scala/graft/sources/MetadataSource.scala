@@ -3,6 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.SeriesSelector
+import graft.operators.TimeSeriesOps
+
 /** Sidecar metadata source (kukur/source/csv/csv.py metadata loader +
   * kukur/source/metadata.py MetadataMapper/MetadataValueMapper).
   *
@@ -58,11 +61,6 @@ final case class MetadataConfig(
 final class MetadataSource(cfg: MetadataConfig) {
 
   import MetadataSource._
-
-  /** Whether this source's rows are keyed by (tags, field) — set when
-    * the config declares a metadata_field_column.
-    */
-  def fieldKeyed: Boolean = cfg.fieldColumn.isDefined
 
   /** The tag columns this metadata table is keyed by. */
   def tagColumns: Seq[String] = cfg.tagColumns
@@ -305,6 +303,33 @@ object MetadataSource {
         }
         .drop(fields.map(f => s"__lo_$f"): _*)
     }
+  }
+
+  /** The tag columns every layer is keyed by, in the first layer's
+    * order: the merge key of layers keyed by different tag sets (an
+    * extra keyed by (series name, location) over a source keyed by
+    * series name joins on series name; two such extras on both).
+    */
+  def sharedTags(keys: Seq[Seq[String]]): Seq[String] = {
+    val shared = keys.reduce((a, b) => a.filter(b.contains))
+    require(shared.nonEmpty, s"metadata layers share no tag column: ${keys.map(_.mkString("(", ", ", ")")).mkString(" ")}")
+    shared
+  }
+
+  /** kukur's factory-wrapper merge for one selector (source/__init__.py:
+    * 205): `layers` in precedence order, each with the tag columns it is
+    * keyed by, merged on [[sharedTags]] and filtered to the selector's
+    * tags. Field-keyed metadata (metadata_field_column) names one
+    * (tags, field) row (csv.py:221-228), so the selector's field
+    * filters too — but only when every layer is field-keyed: in a mixed
+    * merge `field` is an ordinary data column, null in the plain
+    * layers, and an equality filter would silently drop their rows.
+    */
+  def layered(selector: SeriesSelector, layers: Seq[(Seq[String], DataFrame)]): DataFrame = {
+    val frames = layers.map(_._2)
+    val tagged = TimeSeriesOps.filterTags(merge(sharedTags(layers.map(_._1)), frames), selector.tags)
+    if (frames.forall(_.columns.contains("field"))) tagged.where(col("field") === lit(selector.field))
+    else tagged
   }
 
   /** Derived accuracy (kukur/metadata/fields.py:125-146

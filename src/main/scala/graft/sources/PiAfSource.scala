@@ -85,9 +85,12 @@ final case class PiAfConfig(
     dataConfig.copy(timeoutSeconds = metadataTimeoutSeconds)
 }
 
-class PiAfSource(cfg: PiAfConfig) extends Serializable {
+class PiAfSource(cfg: PiAfConfig) extends TimeSeriesSource with Serializable {
 
   import PiAfSource._
+
+  /** The stream id names a series; data reads need nothing else. */
+  override def tagColumns: Seq[String] = Seq("__id__")
 
   /** All attributes of the selected elements, one row per series —
     * dynamic schema over the union of metadata keys (the element
@@ -113,7 +116,7 @@ class PiAfSource(cfg: PiAfConfig) extends Serializable {
   def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
     pointsFrame(spark, PiWebApiSource.fetchData(cfg.dataConfig, dataUrl(selector, "recorded"), start, end, None))
 
-  def getPlotData(
+  override def getPlotData(
       spark: SparkSession,
       selector: SeriesSelector,
       start: Timestamp,
@@ -124,6 +127,12 @@ class PiAfSource(cfg: PiAfConfig) extends Serializable {
       spark,
       PiWebApiSource.fetchData(cfg.dataConfig, dataUrl(selector, "plot"), start, end, Some(intervalCount)),
     )
+
+  /** The reference's AF get_metadata raises NotImplementedError
+    * (piwebapi_af.py:55) — search carries the metadata instead.
+    */
+  override def getMetadata(spark: SparkSession, selector: SeriesSelector): DataFrame =
+    throw new UnsupportedOperationException("piwebapi-af sources answer metadata through search")
 
   /** Distributed multi-series read: the `__id__` tag is the stream id,
     * so each task fetches its stream directly — zero per-series

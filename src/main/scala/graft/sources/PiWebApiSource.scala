@@ -44,9 +44,11 @@ final case class PiWebApiConfig(
     password: Option[String] = None,
 ) extends Serializable
 
-class PiWebApiSource(cfg: PiWebApiConfig) extends Serializable {
+class PiWebApiSource(cfg: PiWebApiConfig) extends TimeSeriesSource with Serializable {
 
   import PiWebApiSource._
+
+  override def tagColumns: Seq[String] = Seq("series_name")
 
   /** All tags in the archive with their point metadata
     * (piwebapi_da.py:158 `search`): `startIndex` pagination, one row
@@ -82,15 +84,15 @@ class PiWebApiSource(cfg: PiWebApiConfig) extends Serializable {
   /** Metadata for one tag (piwebapi_da.py:200 `get_metadata`):
     * `nameFilter` lookup, first match, dictionary resolved.
     */
-  def getMetadata(spark: SparkSession, selector: SeriesSelector): DataFrame = {
+  override def ownMetadata(spark: SparkSession, selector: SeriesSelector): Option[DataFrame] = {
     val archive = get(cfg, cfg.dataArchiveUri, Map("selectedFields" -> "Links.Points;Links.EnumerationSets"))
     val pointsUrl = archive.path("Links").path("Points").asText()
-    val items = get(cfg, pointsUrl, Map("nameFilter" -> seriesName(selector))).path("Items")
+    val items = get(cfg, pointsUrl, Map("nameFilter" -> selector.seriesName)).path("Items")
     require(items.isArray && items.size() > 0, "Series not found")
     val dicts = new DictionaryLookup(cfg, archive)
     val row = metadataRow(items.get(0), dicts)
-      .getOrElse(Row(seriesName(selector), null, null, null, null, null, null, null))
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), MetadataSchema)
+      .getOrElse(Row(selector.seriesName, null, null, null, null, null, null, null))
+    Some(spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), MetadataSchema))
   }
 
   /** A digital set's value → label mapping, through the archive's
@@ -108,13 +110,13 @@ class PiWebApiSource(cfg: PiWebApiConfig) extends Serializable {
   def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
     pointsFrame(
       spark,
-      fetchData(cfg, streamUrl(cfg, pointsUrl(cfg), seriesName(selector), "RecordedData"), start, end, None),
+      fetchData(cfg, streamUrl(cfg, pointsUrl(cfg), selector.seriesName, "RecordedData"), start, end, None),
     )
 
   /** Server-side plot reduction (piwebapi_da.py:129 `get_plot_data`):
     * the point's PlotData stream with an `intervals` parameter.
     */
-  def getPlotData(
+  override def getPlotData(
       spark: SparkSession,
       selector: SeriesSelector,
       start: Timestamp,
@@ -123,7 +125,7 @@ class PiWebApiSource(cfg: PiWebApiConfig) extends Serializable {
   ): DataFrame =
     pointsFrame(
       spark,
-      fetchData(cfg, streamUrl(cfg, pointsUrl(cfg), seriesName(selector), "PlotData"), start, end, Some(intervalCount)),
+      fetchData(cfg, streamUrl(cfg, pointsUrl(cfg), selector.seriesName, "PlotData"), start, end, Some(intervalCount)),
     )
 
   /** Distributed multi-series read: one paginated stream read per
@@ -155,12 +157,6 @@ class PiWebApiSource(cfg: PiWebApiConfig) extends Serializable {
     spark.createDataFrame(
       spark.sparkContext.parallelize(pts.map { case (t, v, q) => Row(t, v, q) }, 1),
       StructType(DataSchema),
-    )
-
-  private def seriesName(selector: SeriesSelector): String =
-    selector.tags.getOrElse(
-      SeriesSelector.SeriesNameTag,
-      selector.tags.getOrElse("series_name", throw new IllegalArgumentException("selector needs a series name tag")),
     )
 }
 

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.model.SeriesSelector
+
 /** Configuration for an external-command ("plugin") source.
   *
   * @param cmd        command + fixed args; the action name is appended
@@ -68,8 +70,25 @@ object SeriesKey {
   * work — the documented last-resort case for dropping below the
   * DataFrame API.
   */
-class PluginSource(cfg: PluginSourceConfig) extends Serializable {
+class PluginSource(cfg: PluginSourceConfig) extends TimeSeriesSource with Serializable {
   import PluginSource._
+
+  override def tagColumns: Seq[String] = Seq("series_name")
+
+  def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
+    dataForKeys(spark, Seq(SeriesKey(selector.tags, selector.field)), start, end)
+
+  /** The plugin's `plot` action when it advertises `features.plot`. */
+  override def getPlotData(
+      spark: SparkSession,
+      selector: SeriesSelector,
+      start: Timestamp,
+      end: Timestamp,
+      intervalCount: Int,
+  ): DataFrame = plotData(spark, Seq(SeriesKey(selector.tags, selector.field)), start, end, intervalCount)
+
+  override def ownMetadata(spark: SparkSession, selector: SeriesSelector): Option[DataFrame] =
+    Some(metadata(spark, SeriesKey(selector.tags, selector.field)))
 
   /** Series discovery: parse the `series` selectors of the plugin's
     * `search` JSON to (source, series_name, field, tags_json) rows —

@@ -81,11 +81,13 @@ final case class RedshiftConfig(
     connection -- Seq("host", "port", "database", "jdbc_url", "jdbc_driver")
 }
 
-class RedshiftSource(cfg: RedshiftConfig) extends Serializable {
+class RedshiftSource(cfg: RedshiftConfig) extends TimeSeriesSource with Serializable {
 
   import RedshiftSource._
 
-  def tagColumns: Seq[String] = cfg.tagColumns
+  override def tagColumns: Seq[String] = cfg.tagColumns
+
+  override def ownMetadata(spark: SparkSession, selector: SeriesSelector): Option[DataFrame] = Some(metadata(spark, selector))
 
   /** Push one SQL text to the database (lower-cased column names — the
     * JdbcSource identifier-folding precedent).

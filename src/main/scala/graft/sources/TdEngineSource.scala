@@ -63,14 +63,13 @@ final case class TdEngineConfig(
     qualityGood: Seq[Any] = Nil,
 ) extends Serializable
 
-class TdEngineSource(cfg: TdEngineConfig) extends Serializable {
+class TdEngineSource(cfg: TdEngineConfig) extends TimeSeriesSource with Serializable {
 
   import TdEngineSource._
 
-  /** The configured tag vocabulary — the facade's test probe keys
-    * selectors on it.
-    */
-  def tagColumns: Seq[String] = cfg.tagColumns
+  override def tagColumns: Seq[String] = cfg.tagColumns
+
+  override def ownMetadata(spark: SparkSession, selector: SeriesSelector): Option[DataFrame] = Some(metadata(spark, selector))
 
   /** Series discovery (sql.py:134 `search`): nothing without a
     * `list_query`; bare tag tuples when `list_columns` is empty

@@ -4,11 +4,13 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.SeriesSelector
-import graft.sources.{Inspect, MetadataConfig, MetadataSource, SourceConfig}
+import graft.operators.TimeSeriesOps
+import graft.sources.{Inspect, MetadataConfig, MetadataSource, SourceConfig, TimeSeriesSource}
 
 class GraftFacadeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -111,6 +113,60 @@ class GraftFacadeSpec extends AnyFunSuite {
     assert(out("search") == ((true, 2L)))
     assert(out("data") == ((true, 1L))) // series "a", one point in range
     assert(out("plot")._1)
+  }
+
+  test("a source with only search and getData gets the plot fallback and metadata_sources layering") {
+    val points = Seq(
+      ("temp", t("2024-01-01T00:00:00Z"), 20L),
+      ("temp", t("2024-01-01T00:20:00Z"), 23L),
+      ("temp", t("2024-01-01T01:10:00Z"), 19L),
+      ("temp", t("2024-01-01T01:40:00Z"), 21L),
+      ("pressure", t("2024-01-01T00:30:00Z"), 1L),
+    ).toDF("series name", "ts", "value")
+    val memory = new TimeSeriesSource {
+      def search(spark: SparkSession): DataFrame = points.select("series name").distinct()
+      def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
+        TimeSeriesOps.filterRange(points.where(col("series name") === selector.seriesName), start, end).select("ts", "value")
+    }
+    val dir = Files.createTempDirectory("graft-memory-meta").toString
+    Files.writeString(
+      java.nio.file.Path.of(dir, "meta.csv"),
+      "series name,description,unit\ntemp,Temperature,degC\npressure,Pressure,bar\n",
+    )
+    val g = new Graft(spark).register("mem", memory, metadata = Seq(MetadataConfig(path = s"$dir/meta.csv", tagColumns = Seq("series name"))))
+    val sel = SeriesSelector("mem", Map("series name" -> "temp"))
+    val (start, end) = (t("2024-01-01T00:00:00Z"), t("2024-01-01T02:00:00Z"))
+
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val expected = TimeSeriesOps.plotData(
+      memory.getData(spark, sel, start, end).withColumn("value", col("value").cast("double")).withColumn("series_name", lit("temp")),
+      Seq("series_name"), start, end, 2)
+    val plot = g.getPlotData("mem", sel, start, end, 2)
+    assert(plot.schema("value").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(rows(plot) == rows(expected) && rows(plot).length == 8)
+
+    val md = g.getMetadata("mem", sel).collect()
+    assert(md.length == 1)
+    assert(md.head.getAs[String]("series name") == "temp")
+    assert(md.head.getAs[String]("description") == "Temperature" && md.head.getAs[String]("unit") == "degC")
+    // without extras the source has no metadata of its own
+    intercept[IllegalArgumentException](new Graft(spark).register("bare", memory).getMetadata("bare", sel))
+
+    // a source WITH metadata of its own is the first layer: its fields
+    // win, the extra fills what it leaves empty
+    val described = new TimeSeriesSource {
+      def search(spark: SparkSession): DataFrame = memory.search(spark)
+      def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
+        memory.getData(spark, selector, start, end)
+      override def ownMetadata(spark: SparkSession, selector: SeriesSelector): Option[DataFrame] =
+        Some(Seq((selector.seriesName, "Own", null.asInstanceOf[String])).toDF("series name", "description", "unit"))
+    }
+    val own = new Graft(spark)
+      .register("own", described, metadata = Seq(MetadataConfig(path = s"$dir/meta.csv", tagColumns = Seq("series name"))))
+      .getMetadata("own", sel)
+      .collect()
+    assert(own.length == 1)
+    assert(own.head.getAs[String]("description") == "Own" && own.head.getAs[String]("unit") == "degC")
   }
 
   test("metadata merge: earlier sources win, empty values fall through") {

@@ -257,4 +257,80 @@ class InfluxSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // data still answers from the server
     assert(g.getData("noaa", sel("coyote_creek"), Start, End).count() == 3L)
   }
+
+  test("two metadata_sources keyed on (series name, location) merge per location") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-influx-md2")
+    // the higher-precedence extra leaves coyote_creek's lower limit
+    // empty: it must fall through to coyote_creek's row of the second
+    // extra, never to santa_monica's
+    java.nio.file.Files.writeString(
+      dir.resolve("noaa-units.csv"),
+      """series name,location,unit,functional lower limit
+        |h2o_feet,coyote_creek,feet,
+        |h2o_feet,santa_monica,feet,0.5
+        |""".stripMargin,
+    )
+    java.nio.file.Files.writeString(
+      dir.resolve("noaa-limits.csv"),
+      """series name,location,functional lower limit,functional upper limit
+        |h2o_feet,coyote_creek,6,9
+        |h2o_feet,santa_monica,1,4
+        |""".stripMargin,
+    )
+    java.nio.file.Files.writeString(
+      dir.resolve("graft.toml"),
+      s"""[source.noaa]
+         |type = "influxdb"
+         |database = "NOAA_water_database"
+         |host = "127.0.0.1"
+         |port = $port
+         |metadata_sources = ["units", "limits"]
+         |
+         |[metadata.units]
+         |type = "csv"
+         |metadata = "noaa-units.csv"
+         |tag_columns = ["series name", "location"]
+         |
+         |[metadata.limits]
+         |type = "csv"
+         |metadata = "noaa-limits.csv"
+         |tag_columns = ["series name", "location"]
+         |""".stripMargin,
+    )
+    val g = Graft.fromConfig(spark, dir.resolve("graft.toml").toString)
+    val md = g.getMetadata("noaa", sel("coyote_creek")).collect()
+    assert(md.length == 1, md.mkString("; "))
+    assert(md.head.getAs[String]("location") == "coyote_creek")
+    assert(md.head.getAs[String]("unit") == "feet")
+    assert(md.head.getAs[Double]("limit_low_functional") == 6.0)
+    assert(md.head.getAs[Double]("limit_high_functional") == 9.0)
+  }
+
+  test("testSource probes influx with its own `series name` tag") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-influx-probe")
+    java.nio.file.Files.writeString(
+      dir.resolve("graft.toml"),
+      s"""[source.noaa]
+         |type = "influxdb"
+         |database = "NOAA_water_database"
+         |host = "127.0.0.1"
+         |port = $port
+         |""".stripMargin,
+    )
+    val g = Graft.fromConfig(spark, dir.resolve("graft.toml").toString)
+    val out = g
+      .testSource("noaa", Start, End)
+      .collect()
+      .map(r => r.getString(0) -> ((r.getBoolean(1), r.getLong(2), Option(r.getString(3)))))
+      .toMap
+    assert(out("search") == ((true, 2L, None)))
+    // the probe selects h2o_feet by measurement alone, so metadata
+    // echoes the one tag. Its data reads every location of the
+    // measurement (5 points, not one location's 2 or 3): a known
+    // defect of keying the probe on `series name` only, so only a
+    // successful non-empty read is pinned here
+    assert(out("metadata") == ((true, 1L, None)))
+    assert(out("data")._1 && out("data")._2 > 0L, out("data"))
+    assert(out("plot")._1 && out("plot")._2 > 0L, out("plot"))
+  }
 }

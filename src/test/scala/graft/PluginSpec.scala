@@ -6,7 +6,8 @@ import java.time.Instant
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ArrowIpcSource, PluginSource, SeriesKey}
+import graft.model.SeriesSelector
+import graft.sources.{ArrowIpcSource, MetadataConfig, PluginSource, SeriesKey}
 
 class PluginSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -52,6 +53,21 @@ class PluginSpec extends AnyFunSuite {
     val md = PluginSource(Seq(s"$pluginDir/plugin.sh")).metadata(spark, "a").collect().head
     assert(md.getAs[String]("description") == "demo series")
     assert(md.getAs[String]("unit") == "m/s")
+  }
+
+  test("plugin metadata is the first layer under metadata_sources extras") {
+    val dir = Files.createTempDirectory("graft-plugin-md").toString
+    Files.writeString(Paths.get(s"$dir/meta.csv"), "series_name,description,dictionary_name\na,extra,colors\nb,other,shapes\n")
+    // the plugin's metadata JSON carries no tags: the layer is keyed by
+    // the selector it answered for
+    val md = new Graft(spark)
+      .register("p", PluginSource(Seq(s"$pluginDir/plugin.sh")), Seq(MetadataConfig(path = s"$dir/meta.csv")))
+      .getMetadata("p", SeriesSelector("p", Map("series_name" -> "a")))
+      .collect()
+    assert(md.length == 1)
+    assert(md.head.getAs[String]("series_name") == "a")
+    assert(md.head.getAs[String]("description") == "demo series" && md.head.getAs[String]("unit") == "m/s")
+    assert(md.head.getAs[String]("dictionary_name") == "colors")
   }
 
   test("plugin data distributes one request per series and decodes arrow streams") {
