@@ -129,18 +129,19 @@ final class Graft(spark: SparkSession) {
     val searchRow = probe("search")(search(sourceName))
     // first series of the search result drives the per-series actions,
     // like test_source.py's --name argument. The probe key is the
-    // source's OWN tag columns — a config-declared source defaults to
+    // source's OWN series keys — a config-declared source defaults to
     // kukur's spaced "series name" tag, and multi-tag sources need
     // every tag to name one series
     val selector: Option[SeriesSelector] =
       try {
-        val tagCols = source(sourceName).tagColumns
-        val first = search(sourceName)
-          .select(tagCols.map(c => col(c).cast("string")): _*)
-          .orderBy(tagCols.map(col): _*)
+        val found = search(sourceName)
+        val keys = source(sourceName).seriesKeys(found)
+        val first = found
+          .select(keys.map(c => col(c).cast("string")): _*)
+          .orderBy(keys.map(col): _*)
           .limit(1)
           .collect()
-        first.headOption.map(r => SeriesSelector(sourceName, tagCols.zipWithIndex.map { case (c, i) => c -> r.getString(i) }.toMap))
+        first.headOption.map(r => SeriesSelector(sourceName, keys.indices.filterNot(r.isNullAt).map(i => keys(i) -> r.getString(i)).toMap))
       } catch { case _: Exception => None }
 
     val perSeries = selector match {

@@ -180,18 +180,23 @@ final class ConfiguredSource(cfg: SourceConfig) {
     }
 
   /** Canonical read: one distributed frame with all series. */
-  def read(spark: SparkSession): DataFrame = {
+  def read(spark: SparkSession): DataFrame = read(spark, Map.empty)
+
+  /** [[read]] for a caller that filters it to `tags`: a per-file keyed
+    * dir plans frames only for the files whose path names those tags.
+    * Every other layout reads as [[read]] does, and its scan prunes on
+    * the caller's filter itself.
+    */
+  private[sources] def read(spark: SparkSession, tags: Map[String, String]): DataFrame = {
     // metadata-only sources are searchable but carry no data
     // (kukur csv.py:299 InvalidSourceException)
     require(cfg.path.nonEmpty, "No data path configured.")
-    readData(spark)
-  }
-
-  private def readData(spark: SparkSession): DataFrame = cfg.dataFormat match {
-    case "row"   => readRow(spark)
-    case "pivot" => readPivot(spark)
-    case "dir"   => readDir(spark)
-    case other   => throw new IllegalArgumentException(s"unknown data format: $other")
+    cfg.dataFormat match {
+      case "row"   => readRow(spark)
+      case "pivot" => readPivot(spark)
+      case "dir"   => readDir(spark, tags)
+      case other   => throw new IllegalArgumentException(s"unknown data format: $other")
+    }
   }
 
   /** Row layout: tag columns + ts + one column per field; fields are
@@ -287,9 +292,9 @@ final class ConfiguredSource(cfg: SourceConfig) {
     * as a `series_name` column and single-series queries prune to one
     * directory (the 100 TB path: partition pruning, no full scan).
     */
-  private def readDir(spark: SparkSession): DataFrame = cfg.pathEncoding match {
-    case Some("base64") => readDirKeyed(spark, base64 = true)
-    case Some("name")   => readDirKeyed(spark, base64 = false)
+  private def readDir(spark: SparkSession, tags: Map[String, String]): DataFrame = cfg.pathEncoding match {
+    case Some("base64") => readDirKeyed(spark, base64 = true, tags)
+    case Some("name")   => readDirKeyed(spark, base64 = false, tags)
     case Some(other)    => throw new IllegalArgumentException(s"unknown path encoding: $other")
     case None =>
       val raw = SourceFrames.load(spark, cfg.fileFormat, readerOptions(spark) + ("basePath" -> cfg.path), cfg.path)
@@ -312,11 +317,12 @@ final class ConfiguredSource(cfg: SourceConfig) {
     if (cfg.partitions.nonEmpty) cfg.partitions
     else Seq(DirPartition(cfg.tagColumns.head, base64))
 
-  /** Filename-keyed dir layouts: one flat file per series, the series
-    * key in the path — plain (`<series>.<ext>`, the reference's
-    * default dir layout, csv.py:393), base64-encoded
-    * (kukur/source/arrow.py:205), or nested per-tag levels
-    * (`partitions`).
+  /** Filename-keyed dir layouts: one file per series, the series key
+    * in the path — plain (`<series>.<ext>`, the reference's default dir
+    * layout, csv.py:393), base64-encoded (kukur/source/arrow.py:205), or
+    * nested per-tag levels (`partitions`, `<tag 1>/…/<tag n>.<ext>`).
+    * [[SeriesFileIndex.list]] is the one rule for which files are
+    * series files and which tags each names, at any depth.
     *
     * Single-level dirs whose files share a schema by construction —
     * any CSV dir (headerless all-string columns can't conflict) and
@@ -332,14 +338,25 @@ final class ConfiguredSource(cfg: SourceConfig) {
     * Columnar containers of the "name" layout and nested layouts read
     * per file and promote-union: per-series schemas may genuinely
     * disagree (a string series beside a double series — the reference
-    * reads one file per selector and never sees the conflict). That
-    * per-file plan is the REFERENCE-COMPAT path for modest series
-    * counts; the Hive layout (`pathEncoding = None`) is the scale path.
-    * Arrow IPC formats and pyarrow's instant-typed ORC decode through
-    * RDDs, with no file index to key, so they read per file too.
+    * reads one file per selector and never sees the conflict). `tags`
+    * narrows the listing before any file's frame is planned, so a
+    * selector opens only its series' files, or none. That per-file
+    * plan is the REFERENCE-COMPAT path for modest series counts; the
+    * Hive layout (`pathEncoding = None`) is the scale path. Arrow IPC
+    * formats and pyarrow's instant-typed ORC decode through RDDs, with
+    * no file index to key, so they read per file too.
     */
-  private def readDirKeyed(spark: SparkSession, base64: Boolean): DataFrame = {
+  private def readDirKeyed(spark: SparkSession, base64: Boolean, tags: Map[String, String]): DataFrame = {
     val levels = dirLevels(base64)
+    // a tag value is matched against the decoded keys, never joined
+    // into a path, yet one shaped like a path escape is rejected up
+    // front, as the reference raises on traversal
+    // (tests/source/test_json.py test_metadata_directory_traversal)
+    for (l <- levels; v <- tags.get(l.key))
+      require(
+        !v.contains('/') && !v.contains('\\') && v != ".." && !v.startsWith("../") && !v.contains("/../"),
+        s"series tag ${l.key} value is not a valid path component: $v",
+      )
     val sparkNative = Set("csv", "parquet", "json", "orc").contains(cfg.fileFormat)
     if (
       levels.lengthCompare(1) == 0 && sparkNative && (cfg.fileFormat == "csv" || levels.head.base64) &&
@@ -351,90 +368,54 @@ final class ConfiguredSource(cfg: SourceConfig) {
         level.key,
       )
     } else {
-      val files = listSeriesFiles(spark, levels)
+      val files = SourceFrames.seriesFiles(spark, cfg.path, levels)
       require(files.nonEmpty, s"dir source at ${cfg.path} has no series files")
-      ConfiguredSource.promoteUnion(files.map { case (tags, p) => seriesFileFrame(spark, tags, p) })
+      val keys = levels.map(_.key)
+      val named = files.map { case (values, st) => keys.zip(values) -> st.getPath.toString }
+        .filter { case (kv, _) => kv.forall { case (k, v) => tags.get(k).forall(_ == v) } }
+      if (named.isEmpty) noSeries(spark, keys)
+      else ConfiguredSource.promoteUnion(named.map { case (kv, path) => seriesFileFrame(spark, kv, path) })
     }
   }
 
-  /** The canonical frame of a one-scan keyed dir: `loaded` holds the
-    * files' columns, then the decoded `tag` column. Headerless CSV
-    * columns are named by position — the reference's dir read contract
-    * (csv.py:378): ts, value [, quality], the series key lives only in
-    * the path.
+  /** The canonical frame of keyed dir files read by name: `loaded`
+    * holds the files' columns, then the decoded `tags` columns.
+    * Headerless CSV columns are named by position — the reference's dir
+    * read contract (csv.py:378): ts, value [, quality], the series key
+    * lives only in the path.
     */
-  private[graft] def canonicalKeyed(loaded: DataFrame, tag: String): DataFrame = {
+  private[graft] def canonicalKeyed(loaded: DataFrame, tags: String*): DataFrame = {
     val raw =
       if (cfg.fileFormat == "csv" && !cfg.csvHeader && cfg.columnMapping.isEmpty) {
         val names = Seq("ts", "value") ++ (if (cfg.qualityGood.nonEmpty) Seq("quality") else Nil)
-        val fileCols = loaded.columns.length - 1
+        val fileCols = loaded.columns.length - tags.length
         require(
           fileCols == names.length,
           s"headerless dir csv at ${cfg.path} has $fileCols columns; expected ${names.mkString(", ")}",
         )
-        loaded.toDF(names :+ tag: _*)
+        loaded.toDF(names ++ tags: _*)
       } else stripBom(loaded)
-    val cols = Seq(col(tag), normalizeTs(col(mapped("ts"))).as("ts"), dirValue(raw)) ++
+    val cols = tags.map(col) ++ Seq(normalizeTs(col(mapped("ts"))).as("ts"), dirValue(raw)) ++
       (if (cfg.qualityGood.nonEmpty) Seq(col("quality")) else Nil)
     withQuality(raw).select(cols: _*)
-  }
-
-  /** Enumerate `(tag values, file path)` for every series file under a
-    * keyed dir layout — a driver-side FILE LISTING (the same metadata
-    * walk Spark's own datasource does), one directory listing per
-    * partition node, never file contents.
-    */
-  private def listSeriesFiles(
-      spark: SparkSession,
-      levels: Seq[DirPartition],
-  ): Seq[(Map[String, String], String)] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(cfg.path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def dec(name: String, level: DirPartition): String =
-      if (level.base64) new String(java.util.Base64.getDecoder.decode(name), "UTF-8") else name
-    def walk(p: Path, rest: Seq[DirPartition], acc: Map[String, String]): Seq[(Map[String, String], String)] =
-      rest match {
-        case Seq(last) =>
-          fs.listStatus(p)
-            .filter(_.isFile)
-            .toSeq
-            .flatMap { st =>
-              val n = st.getPath.getName
-              val dot = n.lastIndexOf('.')
-              if (dot <= 0) None
-              else Some((acc + (last.key -> dec(n.substring(0, dot), last)), st.getPath.toString))
-            }
-        case head +: more =>
-          fs.listStatus(p)
-            .filter(_.isDirectory)
-            .toSeq
-            .flatMap(st => walk(st.getPath, more, acc + (head.key -> dec(st.getPath.getName, head))))
-      }
-    walk(root, levels, Map.empty).sortBy(_._2)
   }
 
   /** One series file as a canonical frame. Column resolution mirrors
     * the reference's split: headered CSV (or CSV with a column
     * mapping) resolves BY NAME with `column_mapping` applied
-    * (csv.py:375 `_read_directory_data` → `_map_columns`) — the same
-    * rules the whole-dir scan uses, so the pruned and unpruned paths
-    * agree; everything else renames BY POSITION (arrow.py:216
-    * `rename_columns` — a columnar file's own schema never matters),
-    * value as double unless the file holds strings
-    * (get_value_schema_type, arrow.py:235), tag values as literals.
+    * (csv.py:375 `_read_directory_data` → `_map_columns`) through
+    * [[canonicalKeyed]], as the one-scan layouts do; everything else
+    * renames BY POSITION (arrow.py:216 `rename_columns` — a columnar
+    * file's own schema never matters), value as double unless the file
+    * holds strings (get_value_schema_type, arrow.py:235). Tag values
+    * are literals.
     */
-  private def seriesFileFrame(spark: SparkSession, tags: Map[String, String], path: String): DataFrame = {
+  private def seriesFileFrame(spark: SparkSession, tags: Seq[(String, String)], path: String): DataFrame = {
     import org.apache.spark.sql.types.StringType
     val loaded = loadPath(spark, path, infer = cfg.valueType == "auto")
-    val tagLits = tags.toSeq.map { case (k, v) => lit(v).as(k) }
-    if (cfg.fileFormat == "csv" && (cfg.csvHeader || cfg.columnMapping.nonEmpty)) {
-      val raw = stripBom(loaded)
-      return withQuality(raw).select(
-        tagLits ++ Seq(normalizeTs(col(mapped("ts"))).as("ts"), dirValue(raw)) ++
-          (if (cfg.qualityGood.nonEmpty) Seq(col("quality")) else Nil): _*
-      )
-    }
+    if (cfg.fileFormat == "csv" && (cfg.csvHeader || cfg.columnMapping.nonEmpty))
+      return canonicalKeyed(tags.foldLeft(stripBom(loaded)) { case (d, (k, v)) => d.withColumn(k, lit(v)) }, tags.map(_._1): _*)
+    val tagLits = tags.map { case (k, v) => lit(v).as(k) }
     val names = Seq("ts", "value") ++ (if (cfg.qualityGood.nonEmpty) Seq("quality") else Nil)
     require(
       loaded.columns.length >= names.length,
@@ -455,48 +436,14 @@ final class ConfiguredSource(cfg: SourceConfig) {
       )
   }
 
-  /** Pruned single-series read for keyed dir layouts: the selector's
-    * tag values NAME the file, so exactly one file is opened — the dir
-    * layout's partition pruning (what the reference's per-selector
-    * `open_child` does, and the behavior that matters at scale: one
-    * file, not a full-source scan). Returns None when this source is
-    * not a keyed dir or the selector misses a partition key.
+  /** A per-file keyed dir's canonical frame for a selector that names
+    * none of its files: no rows, and no file opened.
     */
-  def readSeries(spark: SparkSession, tags: Map[String, String]): Option[DataFrame] = {
-    if (cfg.dataFormat != "dir" || cfg.pathEncoding.isEmpty || cfg.path.isEmpty) return None
-    val levels = dirLevels(cfg.pathEncoding.contains("base64"))
-    if (!levels.forall(l => tags.contains(l.key))) return None
-    def enc(v: String, level: DirPartition): String =
-      if (level.base64) java.util.Base64.getEncoder.encodeToString(v.getBytes("UTF-8")) else v
-    // the selector's tag values become PATH COMPONENTS: reject
-    // separators and parent refs so a hostile series name cannot
-    // escape the source dir (the reference raises on traversal too —
-    // tests/source/test_json.py test_metadata_directory_traversal)
-    levels.foreach { l =>
-      val v = tags(l.key)
-      require(
-        !v.contains('/') && !v.contains('\\') && v != ".." && !v.startsWith("../") && !v.contains("/../"),
-        s"series tag ${l.key} value is not a valid path component: $v",
-      )
-    }
-    val rel = levels.map(l => enc(tags(l.key), l)).mkString("/")
-    val exact = s"${cfg.path.stripSuffix("/")}/$rel.${cfg.fileFormat}"
-    // cheap driver-side existence probe (one namenode RPC — the same
-    // class of metadata call Spark's own file index makes): a missing
-    // file means the series either uses a different extension than the
-    // format's default or does not exist — fall back to the dir
-    // listing, then to the caller's unpruned path (which yields the
-    // empty result an unknown series always produced) instead of
-    // failing the plan with PATH_NOT_FOUND
-    val p = new org.apache.hadoop.fs.Path(exact)
-    val resolved =
-      if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) Some(exact)
-      else
-        scala.util
-          .Try(listSeriesFiles(spark, levels))
-          .getOrElse(Nil)
-          .collectFirst { case (t, f) if levels.forall(l => t(l.key) == tags(l.key)) => f }
-    resolved.map(f => seriesFileFrame(spark, levels.map(l => l.key -> tags(l.key)).toMap, f))
+  private def noSeries(spark: SparkSession, keys: Seq[String]): DataFrame = {
+    val value = if (cfg.valueType == "string") "string" else "double"
+    val ddl = keys.map(k => s"`$k` string").mkString("", ", ", s", ts timestamp, value $value") +
+      (if (cfg.qualityGood.nonEmpty) ", quality int" else "")
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), org.apache.spark.sql.types.StructType.fromDDL(ddl))
   }
 
   /** Range read with Delta timestamp-partition pruning (kukur
@@ -633,7 +580,8 @@ final class ConfiguredSource(cfg: SourceConfig) {
 
 /** A file-backed source: a [[ConfiguredSource]] plus its metadata
   * sidecars (the file's own metadata, then its `metadata_sources`),
-  * which answer both its search and its metadata.
+  * which answer both its search and its metadata. Its data is the
+  * source's one read, which [[getData]] narrows to a selector.
   */
 final class FileSource(config: SourceConfig, metadata: Seq[MetadataConfig] = Nil) extends TimeSeriesSource {
 
@@ -655,26 +603,26 @@ final class FileSource(config: SourceConfig, metadata: Seq[MetadataConfig] = Nil
     if (sidecars.isEmpty) None
     else Some(MetadataSource.layered(selector, sidecars.map(s => s.tagColumns -> s.read(spark))))
 
-  /** Tag filter + half-open time range, both pushed into the scan
-    * where the format allows.
+  /** One series over [start, end): the whole-source read narrowed to
+    * the selector's field, tags and half-open range — one read path for
+    * every layout, each filter reaching the scan where the layout
+    * allows. A keyed dir opens only the selector's series files (the
+    * one-scan index prunes on the tag filter; a per-file layout plans
+    * only the files its tags name), and a Delta table with timestamp
+    * partitions only the range's partitions.
     */
-  def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame =
-    // keyed dir layouts prune to ONE file when the selector pins
-    // every partition key — the dir layout's partition pruning
-    data.readSeries(spark, selector.tags) match {
-      case Some(one) => TimeSeriesOps.filterRange(one, start, end)
-      case None =>
-        // Delta tables with timestamp partitions: derived partition
-        // IN-list from the range so the scan prunes DAY/MONTH/… dirs
-        // (tag partitions prune through filterTags below)
-        val all = data.readRangePruned(spark, start, end).getOrElse(data.read(spark))
-        // multi-field sources: a selector names ONE field of the series
-        // (kukur csv.py:313 picks row_data[selector.field])
-        val one =
-          if (all.columns.contains("field")) all.where(col("field") === lit(selector.field))
-          else all
-        TimeSeriesOps.filterRange(TimeSeriesOps.filterTags(one, selector.tags), start, end)
-    }
+  def getData(spark: SparkSession, selector: SeriesSelector, start: Timestamp, end: Timestamp): DataFrame = {
+    // Delta tables with timestamp partitions: derived partition IN-list
+    // from the range so the scan prunes DAY/MONTH/… dirs (tag
+    // partitions prune through filterTags below)
+    val all = data.readRangePruned(spark, start, end).getOrElse(data.read(spark, selector.tags))
+    // multi-field sources: a selector names ONE field of the series
+    // (kukur csv.py:313 picks row_data[selector.field])
+    val one =
+      if (all.columns.contains("field")) all.where(col("field") === lit(selector.field))
+      else all
+    TimeSeriesOps.filterRange(TimeSeriesOps.filterTags(one, selector.tags), start, end)
+  }
 
   /** Buckets [[getData]]'s slice, keyed by this source's own tags. */
   override def getPlotData(

@@ -39,6 +39,11 @@ class InfluxSource(cfg: InfluxConfig) extends EmptyMetadata with Serializable {
 
   def search(spark: SparkSession): DataFrame = search(spark, SeriesSelector(""))
 
+  /** A measurement's tag keys are known only from `SHOW SERIES`: a
+    * search row keys its series by every column but `field`.
+    */
+  override def seriesKeys(found: DataFrame): Seq[String] = found.columns.toSeq.filterNot(_ == "field")
+
   /** Series discovery (influxdb.py:95 `search`): SHOW SERIES filtered
     * by the selector's measurement/tags, crossed with the measurement's
     * field keys. Columns: `series name`, every tag key seen, `field`.

@@ -21,6 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[listFiles]] hands the scan only the files whose key passes, and no
   * row ever decodes its path.
   *
+  * The companion owns the series-file rule of every keyed dir layout,
+  * at any depth: [[SeriesFileIndex.list]] names the series files and
+  * decodes their tags, one per path level. This index serves the
+  * one-level layouts read as one scan; the per-file layouts (nested
+  * levels, columnar `name` dirs) read the same listing.
+  *
   * Immutable: built by [[SourceFrames]] from the listing that also
   * forms its fingerprint, and replaced, never refreshed, when that
   * listing changes.
@@ -58,18 +64,39 @@ final class SeriesFileIndex private (roots: Seq[Path], tag: String, series: Seq[
 
 object SeriesFileIndex {
 
-  /** The index over `files`, the leaf files listed under `roots`. The
-    * series files are the data files directly under a root directory
-    * (or a root that is itself a file) — exactly the files Spark's own
-    * index scans for a plain load of that path. Empty files hold no
-    * rows, so they get no partition and their names are never decoded.
+  /** The index over `files`, the leaf files listed under `roots`, of a
+    * one-level keyed dir: the series files [[list]] finds, each keyed by
+    * its one tag value.
     */
-  def apply(roots: Seq[FileStatus], files: Seq[FileStatus], level: DirPartition): SeriesFileIndex = {
+  def apply(roots: Seq[FileStatus], files: Seq[FileStatus], level: DirPartition): SeriesFileIndex =
+    new SeriesFileIndex(roots.map(_.getPath), level.key, list(roots, files, Seq(level)).map { case (key, st) => key.head -> st })
+
+  /** The series files among `files`, the leaf files listed under
+    * `roots`, of a keyed dir whose paths hold one component per level —
+    * `<level 1>/…/<level n>.<ext>` below a root directory (a root that
+    * is itself a file is its own one-level path) — each with its tag
+    * values in `levels` order, in path order.
+    *
+    * One rule for every depth: each path component passes Spark's
+    * data-file rule, as in the listing Spark's own index makes, and the
+    * file is not empty — it holds no rows, so its path is never decoded.
+    * A directory level's key is its whole name; the leaf's is the stem
+    * of its file name.
+    */
+  def list(roots: Seq[FileStatus], files: Seq[FileStatus], levels: Seq[DirPartition]): Seq[(Seq[String], FileStatus)] = {
     val scanned = roots.map(_.getPath).toSet
-    val series = files.filter { st =>
-      (scanned(st.getPath) || scanned(st.getPath.getParent)) && isDataFile(st.getPath.getName) && st.getLen > 0
+    // the last `n` path names of `p`, when the path `n` levels up is a root
+    def below(p: Path, n: Int, names: List[String]): Option[List[String]] =
+      if (n == 0) Some(names).filter(_ => scanned(p))
+      else Option(p).flatMap(p => below(p.getParent, n - 1, p.getName :: names))
+    for {
+      st <- files
+      names <- (if (scanned(st.getPath)) Some(List(st.getPath.getName)) else below(st.getPath, levels.length, Nil)).toSeq
+      if names.lengthCompare(levels.length) == 0 && names.forall(isDataFile) && st.getLen > 0
+    } yield {
+      val stems = names.init :+ (names.last match { case Named(s) => s; case _ => "" })
+      levels.zip(stems).map { case (level, s) => key(s, level.base64, st.getPath) } -> st
     }
-    new SeriesFileIndex(roots.map(_.getPath), level.key, series.map(st => seriesKey(st.getPath.getName, level.base64) -> st))
   }
 
   /** Spark's data-file rule (PartitioningAwareFileIndex.isDataPath and
@@ -85,22 +112,17 @@ object SeriesFileIndex {
     */
   private val Named = "(?s)(.+)\\.[A-Za-z0-9]+".r
 
-  /** The series key a file name encodes: its stem, base64-decoded when
-    * the layout says so. Decoding is the MIME decoder Spark's `unbase64`
+  /** The tag value one path component encodes, base64-decoded when its
+    * level says so. Decoding is the MIME decoder Spark's `unbase64`
     * uses (characters outside the alphabet are skipped), and the bytes
     * must be valid UTF-8.
     */
-  private def seriesKey(name: String, base64: Boolean): String = {
-    val stem = name match {
-      case Named(s) => s
-      case _        => ""
-    }
-    if (!base64) stem
+  private def key(encoded: String, base64: Boolean, file: Path): String =
+    if (!base64) encoded
     else
-      try StandardCharsets.UTF_8.newDecoder().decode(ByteBuffer.wrap(java.util.Base64.getMimeDecoder.decode(stem))).toString
+      try StandardCharsets.UTF_8.newDecoder().decode(ByteBuffer.wrap(java.util.Base64.getMimeDecoder.decode(encoded))).toString
       catch {
         case e @ (_: IllegalArgumentException | _: CharacterCodingException) =>
-          throw new IllegalArgumentException(s"series file name $name is not a base64-encoded UTF-8 key", e)
+          throw new IllegalArgumentException(s"series key $encoded of $file is not a base64-encoded UTF-8 key", e)
       }
-  }
 }

@@ -31,7 +31,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   *     and modification time form the fingerprint. This is the listing
   *     Spark's file index would make for a fresh load, so a hit costs
   *     no more storage calls than a miss did before. A filename-keyed
-  *     dir's [[SeriesFileIndex]] is built from that same listing.
+  *     dir's [[SeriesFileIndex]] is built from that same listing, and
+  *     [[seriesFiles]] names a per-file keyed dir's series from it.
   *   - Same fingerprint: the kept relation is returned with fresh
   *     attribute ids, so two reads of one source still self-join like
   *     two independent loads. No Spark job runs.
@@ -89,6 +90,14 @@ object SourceFrames {
   def loadSeriesFiles(spark: SparkSession, format: String, options: Map[String, String], path: String, level: DirPartition): DataFrame =
     memoized(spark, format, options, path, Some(level))
 
+  /** The series files of a keyed dir under `path`, one path level per
+    * entry of `levels`, each with its tag values: [[SeriesFileIndex.list]]
+    * over the listing a [[load]] of `path` fingerprints. Empty when the
+    * path matches nothing.
+    */
+  def seriesFiles(spark: SparkSession, path: String, levels: Seq[DirPartition]): Seq[(Seq[String], FileStatus)] =
+    listing(spark, path).fold(Seq.empty[(Seq[String], FileStatus)])(l => SeriesFileIndex.list(l.roots, l.files, levels))
+
   /** `answer(path)`, kept while the listing fingerprint of `path` is
     * unchanged. `name` tells apart the probes of one path.
     */
@@ -124,7 +133,7 @@ object SourceFrames {
         synchronized(Option(memo.get(key))).filter(_.fingerprint == l.fingerprint) match {
           case Some(kept) => GraftSqlBridge.ofRows(spark, kept.relation.newInstance())
           case None =>
-            val df = level.fold(plain())(seriesFiles(spark, format, options, l, _))
+            val df = level.fold(plain())(indexed(spark, format, options, l, _))
             GraftSqlBridge.logicalPlan(df) match {
               case r: MultiInstanceRelation => remember(key, Entry(l.fingerprint, r))
               case _ =>
@@ -137,7 +146,7 @@ object SourceFrames {
   /** The relation a plain load of a spark-native `format` resolves,
     * over a [[SeriesFileIndex]] of the listing instead of Spark's own.
     */
-  private def seriesFiles(spark: SparkSession, format: String, options: Map[String, String], l: Listing, level: DirPartition): DataFrame = {
+  private def indexed(spark: SparkSession, format: String, options: Map[String, String], l: Listing, level: DirPartition): DataFrame = {
     val index = SeriesFileIndex(l.roots, l.files, level)
     val fileFormat: FileFormat = format match {
       case "csv"     => new CSVFileFormat

@@ -27,6 +27,11 @@ trait TimeSeriesSource {
     */
   def tagColumns: Seq[String] = Seq(SeriesSelector.SeriesNameTag)
 
+  /** The columns of `found`, a [[search]] result, whose non-null values
+    * in one row key that row's series. Default: [[tagColumns]].
+    */
+  def seriesKeys(found: DataFrame): Seq[String] = tagColumns
+
   /** All series in the source, one row per (tags × field). */
   def search(spark: SparkSession): DataFrame
 

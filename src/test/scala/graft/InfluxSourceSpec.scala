@@ -324,13 +324,12 @@ class InfluxSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getString(0) -> ((r.getBoolean(1), r.getLong(2), Option(r.getString(3)))))
       .toMap
     assert(out("search") == ((true, 2L, None)))
-    // the probe selects h2o_feet by measurement alone, so metadata
-    // echoes the one tag. Its data reads every location of the
-    // measurement (5 points, not one location's 2 or 3): a known
-    // defect of keying the probe on `series name` only, so only a
-    // successful non-empty read is pinned here
-    assert(out("metadata") == ((true, 1L, None)))
-    assert(out("data")._1 && out("data")._2 > 0L, out("data"))
+    // the probe keys the first search row's series by its measurement
+    // and the tag keys SHOW SERIES named (h2o_feet, coyote_creek), so
+    // metadata echoes both tags and data reads that one location's 3
+    // points, not santa_monica's 2 beside them
+    assert(out("metadata") == ((true, 2L, None)))
+    assert(out("data") == ((true, 3L, None)))
     assert(out("plot")._1 && out("plot")._2 > 0L, out("plot"))
   }
 }

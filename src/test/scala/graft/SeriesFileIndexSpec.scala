@@ -219,8 +219,8 @@ class SeriesFileIndexSpec extends AnyFunSuite {
         |""".stripMargin)
     val graft = Graft.fromConfig(spark, dir.resolve("graft.toml").toString)
     val (start, end) = (Timestamp.valueOf("2024-01-01 00:00:00"), Timestamp.valueOf("2024-01-02 00:00:00"))
-    // an unknown series has no file to open, so getData falls back to
-    // the whole-source read and its tag filter — which opens nothing
+    // an unknown series names no file, so getData's tag filter on the
+    // whole-source read opens nothing
     val (none, noFiles) = filesOpened(graft.getData("d", SeriesSelector("d", Map("series_name" -> "zz")), start, end))
     assert(none.isEmpty && noFiles == 0)
     val (one, _) = filesOpened(graft.getData("d", SeriesSelector("d", Map("series_name" -> "b")), start, end))

@@ -7,7 +7,8 @@ import java.time.Instant
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ConfiguredSource, Simulators, SimulatorSignal, SourceConfig}
+import graft.model.SeriesSelector
+import graft.sources.{ConfiguredSource, FileSource, Simulators, SimulatorSignal, SourceConfig}
 
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -16,11 +17,14 @@ class SourcesSpec extends AnyFunSuite {
   private def t(s: String): Timestamp = Timestamp.from(Instant.parse(s))
   private def tmp(): String = Files.createTempDirectory("graft-src").toString
 
-  test("readSeries prunes to ONE file: a corrupt neighbor never loads") {
-    // the dir layout's partition-pruning proof: a selector-pinned read
-    // must open only <series>.parquet — a deliberately corrupt file
-    // beside it stays untouched, while the whole-source read (which by
-    // design unions every file) trips over it
+  private val (day, dayEnd) = (t("2024-01-01T00:00:00Z"), t("2024-01-02T00:00:00Z"))
+  private def series(name: String) = SeriesSelector("d", Map("series_name" -> name))
+
+  test("getData opens only its series' file: a corrupt neighbor never loads") {
+    // the dir layout's partition-pruning proof: a selector's read must
+    // open only <series>.parquet — a deliberately corrupt file beside it
+    // stays untouched, while the whole-source read (which by design
+    // unions every file) trips over it
     val dir = tmp()
     // dir files carry (ts, value) positionally; the series key is the
     // file name only
@@ -32,7 +36,7 @@ class SourcesSpec extends AnyFunSuite {
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/data"))
     Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/data/good.parquet"))
     Files.write(java.nio.file.Paths.get(s"$dir/data/broken.parquet"), "not a parquet file".getBytes)
-    val src = new ConfiguredSource(
+    val src = new FileSource(
       SourceConfig(
         path = s"$dir/data",
         fileFormat = "parquet",
@@ -41,26 +45,29 @@ class SourcesSpec extends AnyFunSuite {
         pathEncoding = Some("name"),
       )
     )
-    val pruned = src.readSeries(spark, Map("series_name" -> "good")).get.orderBy("ts").collect()
+    val good = src.getData(spark, series("good"), day, dayEnd)
+    assert(good.inputFiles.map(new org.apache.hadoop.fs.Path(_).getName).toSeq == Seq("good.parquet"))
+    val pruned = good.orderBy("ts").collect()
     assert(pruned.map(_.getAs[Double]("value")).toSeq == Seq(1.0, 2.0))
     assert(pruned.forall(_.getAs[String]("series_name") == "good"))
-    intercept[Exception](src.read(spark).collect()) // whole-source read must hit the corrupt file
+    intercept[Exception](src.data.read(spark).collect()) // whole-source read must hit the corrupt file
     // a traversal-shaped series name must be rejected, not resolved
     // into a path outside the source dir (the reference raises too)
-    val e = intercept[IllegalArgumentException](src.readSeries(spark, Map("series_name" -> "../../../etc/passwd")))
+    val e = intercept[IllegalArgumentException](src.getData(spark, series("../../../etc/passwd"), day, dayEnd))
     assert(e.getMessage.contains("not a valid path component"))
-    // an unknown series is None (caller falls back to its empty
-    // filter), never a PATH_NOT_FOUND plan failure
-    assert(src.readSeries(spark, Map("series_name" -> "nope")).isEmpty)
+    // an unknown series reads 0 rows and opens no file: broken.parquet,
+    // which fails any read that opens it, stays unopened
+    val nope = src.getData(spark, series("nope"), day, dayEnd)
+    assert(nope.inputFiles.isEmpty && nope.collect().isEmpty)
   }
 
-  test("readSeries prunes headered dir csv BY NAME and odd extensions via the listing") {
+  test("getData reads headered dir csv BY NAME, and any alphanumeric extension") {
     val dir = tmp()
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/data"))
     // header order is value,ts — a positional rename would read the
     // timestamp column as the value (csv.py:375 resolves by name)
     Files.writeString(java.nio.file.Paths.get(s"$dir/data/s1.csv"), "value,ts\n7.5,2024-01-01T00:00:00Z\n8.5,2024-01-01T01:00:00Z\n")
-    val src = new ConfiguredSource(
+    val src = new FileSource(
       SourceConfig(
         path = s"$dir/data",
         fileFormat = "csv",
@@ -70,16 +77,15 @@ class SourcesSpec extends AnyFunSuite {
         csvHeader = true,
       )
     )
-    val pruned = src.readSeries(spark, Map("series_name" -> "s1")).get.orderBy("ts").collect()
+    val pruned = src.getData(spark, series("s1"), day, dayEnd).orderBy("ts").collect()
     assert(pruned.map(_.getAs[Double]("value")).toSeq == Seq(7.5, 8.5))
     assert(pruned.map(_.getAs[Timestamp]("ts").toInstant).head == Instant.parse("2024-01-01T00:00:00Z"))
-    // the unpruned scan agrees with the pruned read on the same source
-    val full = src.read(spark).orderBy("ts").collect()
+    // the whole-source read agrees with the series read on the same source
+    val full = src.data.read(spark).orderBy("ts").collect()
     assert(full.map(_.getAs[Double]("value")).toSeq == Seq(7.5, 8.5))
-    // a series file with a non-default extension still prunes (the
-    // search listing accepts any extension; the pruned path must too)
+    // a series file with a non-default extension reads under its stem
     Files.writeString(java.nio.file.Paths.get(s"$dir/data/s2.txt"), "value,ts\n1.0,2024-01-01T00:00:00Z\n")
-    val odd = src.readSeries(spark, Map("series_name" -> "s2")).get.collect()
+    val odd = src.getData(spark, series("s2"), day, dayEnd).collect()
     assert(odd.map(_.getAs[Double]("value")).toSeq == Seq(1.0))
   }
 
