@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.Materialize
+
 /** Benchmark entry: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are fully materialized through the
   * `noop` sink so the measurement covers the whole plan (a bare count()
@@ -198,8 +200,7 @@ object Bench {
                     false
                 }
               val el = (System.nanoTime() - t0) / 1e9
-              spark.catalog.clearCache()
-              spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+              Materialize.releaseAll(spark)
               if (ok) el else -1.0
             }
             val runs = Seq(oneRun(), oneRun())
@@ -291,8 +292,7 @@ object Bench {
                   false
               }
             val el = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+            Materialize.releaseAll(spark)
             if (ok) el else -1.0
           }
           // the N² exact audit at x10 runs ONCE: it costs ~2 min alone
@@ -468,8 +468,7 @@ object Bench {
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"[bench] warmup failed for $name: ${e.getMessage}") }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      Materialize.releaseAll(spark)
     }
     // Median of three timed runs: single-run timings on this box wobble
     // 2–4× on identical plans (q_events_window_agg r3↔r4), and min-of-2
@@ -488,8 +487,8 @@ object Bench {
             System.err.println(s"[bench] FAILED $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
             false
         }
-      // capture the elapsed time BEFORE cache teardown — clearCache
-      // of a query's cached frames is bookkeeping, not query latency
+      // capture the elapsed time BEFORE cache teardown — releasing a
+      // query's cached frames is bookkeeping, not query latency
       val elapsed = (System.nanoTime() - t0) / 1e9
       val gcSec = (gcMillis() - gc0) / 1e3
       val stealPct =
@@ -497,13 +496,12 @@ object Bench {
         else 100.0 * ((stealJiffies() - st0) / 100.0) / math.max(elapsed * hostCpus, 1e-9)
       // Release per-query cached frames (dedup shingle indexes etc.).
       // Leaving them resident starves later queries of execution
-      // memory — r02 showed 10–30× slowdowns. clearCache misses
-      // localCheckpoint RDDs (they live at the RDD layer, not in
-      // CacheManager): dedup_groups / clean_corpus each pin their
-      // final-round labels until ContextCleaner GCs them, which made
-      // the next query (q5_multijoin) 4× slower in r04.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      // memory — r02 showed 10–30× slowdowns. The sweep covers pinned
+      // RDDs too (they live at the RDD layer, not in CacheManager):
+      // dedup_groups / clean_corpus each return their pinned
+      // final-round labels, and leaving them to ContextCleaner made the
+      // next query (q5_multijoin) 4× slower in r04.
+      Materialize.releaseAll(spark)
       if (ok) Run(elapsed, gcSec, stealPct) else Run(-1.0, gcSec, stealPct)
     }
     var dirtyQueries = List.empty[String]

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.Materialize
 import graft.operators.TimeSeriesOps
 import graft.queries._
 import graft.queries.QueryFixtures._
@@ -29,8 +30,16 @@ object SparkEntry {
       TextQueries.specs ++ CorpusQueries.specs ++ MultimodalQueries.specs ++ PipelineQueries.specs
   )
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map { case (n, q) => n -> q.plan }
+  /** Each registry plan, run under one [[Materialize.scoped]]: what the
+    * plan pinned or cached and its result no longer reads is released
+    * as the plan returns. Names that share a plan share its wrapper.
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = {
+    val scoped = registry.values.map { q =>
+      q.plan -> ((s: SparkSession, dir: String) => Materialize.scoped(q.plan(s, dir)))
+    }.toMap
+    registry.map { case (n, q) => n -> scoped(q.plan) }
+  }
 
   val oracleSql: Map[String, String] =
     registry.collect { case (n, QuerySpec(_, _, Oracle(sql))) => n -> sql }

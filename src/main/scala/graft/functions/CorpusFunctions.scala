@@ -107,29 +107,28 @@ object CorpusFunctions {
     * words after normalization drop out (no tokens ⇒ no score),
     * mirroring the oracle's unnest semantics.
     */
-  def wordRarity(df: DataFrame, idCol: Column, text: Column, rareMax: Long = 2L, hotMin: Long = 1000L): DataFrame = {
-    val toks = DedupFunctions
-      .spread(df)
-      .select(idCol.as("doc_id"), explode(TextFunctions.words(text)).as("w"))
-      .where(col("w") =!= "")
-      .cache()
-    val freq = toks.groupBy(col("w")).agg(count(lit(1)).as("cf"))
-    val out = zipfSplitJoin(toks, freq, Seq("w"), "cf", hotMin)
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_words"),
-        sum(col("cf")).as("sum_cf"),
-        sum(when(col("cf") <= rareMax, 1L).otherwise(0L)).as("n_rare"),
-      )
-      .withColumn("avg_word_freq", col("sum_cf").cast("double") / col("n_words").cast("double"))
-      .withColumn("rare_ratio", col("n_rare").cast("double") / col("n_words").cast("double"))
-      .select(col("doc_id"), col("n_words"), col("avg_word_freq"), col("rare_ratio"))
-      // materialize the small per-doc result so the cached token frame
-      // (used by the freq aggregate and both join arms) releases NOW
-      .localCheckpoint()
-    toks.unpersist(blocking = true)
-    out
-  }
+  def wordRarity(df: DataFrame, idCol: Column, text: Column, rareMax: Long = 2L, hotMin: Long = 1000L): DataFrame =
+    Materialize.scoped {
+      val toks = DedupFunctions
+        .spread(df)
+        .select(idCol.as("doc_id"), explode(TextFunctions.words(text)).as("w"))
+        .where(col("w") =!= "")
+        .transform(Materialize.cache)
+      val freq = toks.groupBy(col("w")).agg(count(lit(1)).as("cf"))
+      zipfSplitJoin(toks, freq, Seq("w"), "cf", hotMin)
+        .groupBy(col("doc_id"))
+        .agg(
+          count(lit(1)).as("n_words"),
+          sum(col("cf")).as("sum_cf"),
+          sum(when(col("cf") <= rareMax, 1L).otherwise(0L)).as("n_rare"),
+        )
+        .withColumn("avg_word_freq", col("sum_cf").cast("double") / col("n_words").cast("double"))
+        .withColumn("rare_ratio", col("n_rare").cast("double") / col("n_words").cast("double"))
+        .select(col("doc_id"), col("n_words"), col("avg_word_freq"), col("rare_ratio"))
+        // pin the small per-doc result so the cached token frame (used
+        // by the freq aggregate and both join arms) releases NOW
+        .transform(Materialize.pin)
+    }
 
   /** Zipf-skew-resistant equi-join of a token/bigram stream against
     * its own frequency table. Word and bigram frequencies are Zipfian,
@@ -200,7 +199,7 @@ object CorpusFunctions {
     * one broadcast, so the plan survives a vocabulary that only a
     * 100 TB crawl produces.
     */
-  def bigramLm(df: DataFrame, idCol: Column, text: Column, hotMin: Long = 1000L): DataFrame = {
+  def bigramLm(df: DataFrame, idCol: Column, text: Column, hotMin: Long = 1000L): DataFrame = Materialize.scoped {
     val bgs = DedupFunctions
       .spread(df)
       .select(idCol.as("doc_id"), TextFunctions.words(text).as("w"))
@@ -212,14 +211,14 @@ object CorpusFunctions {
         ).as("bg"),
       )
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint()
+      .transform(Materialize.pin)
     val cb = bgs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     val c1 = bgs.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
     val v = bgs
       .select(col("w1").as("w"))
       .unionAll(bgs.select(col("w2").as("w")))
       .agg(countDistinct(col("w")).as("v"))
-    val out = zipfSplitJoin(zipfSplitJoin(bgs, cb, Seq("w1", "w2"), "cb", hotMin), c1, Seq("w1"), "c1", hotMin)
+    zipfSplitJoin(zipfSplitJoin(bgs, cb, Seq("w1", "w2"), "cb", hotMin), c1, Seq("w1"), "c1", hotMin)
       .crossJoin(broadcast(v))
       .withColumn(
         "p_scaled",
@@ -229,14 +228,9 @@ object CorpusFunctions {
       .agg(count(lit(1)).as("n_bigrams"), sum(col("p_scaled")).as("__sum_p"))
       .withColumn("lm_prob_ppm", floor(col("__sum_p").cast("double") / col("n_bigrams").cast("double")) / 1e6)
       .select(col("doc_id"), col("n_bigrams"), col("lm_prob_ppm"))
-      // materialize the small per-doc result so the checkpointed bigram
-      // stream (four consumers) releases NOW, not at ContextCleaner time
-      .localCheckpoint()
-    // Dataset.unpersist is a NO-OP on a localCheckpoint'd frame (it only
-    // clears CacheManager entries) — release through the RDD handle,
-    // exactly like dedupGroups.release
-    org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(bgs).foreach(_.unpersist(blocking = true))
-    out
+      // pin the small per-doc result so the pinned bigram stream (four
+      // consumers) releases NOW, not at ContextCleaner time
+      .transform(Materialize.pin)
   }
 
   /** Bucket-granular perplexity gate (the CCNet filtering step): score
@@ -343,7 +337,7 @@ object CorpusFunctions {
       text: Column,
       hotMin: Long = 1000L,
       pruneMin: Long = 1L,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     require(pruneMin >= 1L, "pruneMin is a count threshold; 1 keeps every type")
     val bgs = DedupFunctions
       .spread(df)
@@ -356,7 +350,7 @@ object CorpusFunctions {
         ).as("bg"),
       )
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint()
+      .transform(Materialize.pin)
     val cb = bgs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     // kept bigram types — the only table the scoring joins ever carry
     val cbK = if (pruneMin > 1L) cb.where(col("cb") >= pruneMin) else cb
@@ -384,24 +378,21 @@ object CorpusFunctions {
       greatest(coalesce(col("cb"), lit(0L)).cast("double") - lit(0.75), lit(0.0)) / col("c1").cast("double") +
         ((lit(0.75) * col("nkept").cast("double") + col("cpr").cast("double")) / col("c1").cast("double")) *
         (coalesce(col("cont"), lit(0L)).cast("double") / col("ntot").cast("double"))
-    val out =
-      zipfSplitJoin(
-        zipfSplitJoin(zipfSplitJoin(bgs, cbK, Seq("w1", "w2"), "cb", hotMin, "left"), c1f, Seq("w1"), "c1", hotMin),
-        ctf,
-        Seq("w2"),
-        "cont",
-        hotMin,
-        "left",
-      )
-        .crossJoin(broadcast(nt))
-        .withColumn("p_scaled", floor(lit(1e12) * p))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"), sum(col("p_scaled")).as("__sum_p"))
-        .withColumn("kn_prob_ppm", floor(col("__sum_p").cast("double") / col("n_bigrams").cast("double")) / 1e6)
-        .select(col("doc_id"), col("n_bigrams"), col("kn_prob_ppm"))
-        .localCheckpoint()
-    org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(bgs).foreach(_.unpersist(blocking = true))
-    out
+    zipfSplitJoin(
+      zipfSplitJoin(zipfSplitJoin(bgs, cbK, Seq("w1", "w2"), "cb", hotMin, "left"), c1f, Seq("w1"), "c1", hotMin),
+      ctf,
+      Seq("w2"),
+      "cont",
+      hotMin,
+      "left",
+    )
+      .crossJoin(broadcast(nt))
+      .withColumn("p_scaled", floor(lit(1e12) * p))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_bigrams"), sum(col("p_scaled")).as("__sum_p"))
+      .withColumn("kn_prob_ppm", floor(col("__sum_p").cast("double") / col("n_bigrams").cast("double")) / 1e6)
+      .select(col("doc_id"), col("n_bigrams"), col("kn_prob_ppm"))
+      .transform(Materialize.pin)
   }
 
   /** Deterministic corpus shuffle + sharding — the export step every
@@ -550,7 +541,7 @@ object CorpusFunctions {
       keepLang: String = "en",
       dropFrac: Double = 0.1,
       hotMin: Long = 1000L,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     val inLang = TextFunctions
       .langId(
         DedupFunctions
@@ -561,36 +552,28 @@ object CorpusFunctions {
         col("__text"),
       )
       .where(col("pred_lang") === keepLang)
-      .localCheckpoint()
+      .transform(Materialize.pin)
     val gated = lmGate(inLang, col("rep_id"), col("__text"), dropFrac, hotMin)
-    val out = inLang
+    inLang
       .select(col("rep_id"), col("fp"), col("n_copies"))
       .join(gated.withColumnRenamed("doc_id", "rep_id"), Seq("rep_id"))
       .select(col("rep_id"), col("fp"), col("n_copies"), col("n_bigrams"), col("lm_prob_ppm"))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(inLang).foreach(_.unpersist(blocking = true))
-    out
+      .transform(Materialize.pin)
   }
 
   /** A trained bigram LM as three reference tables: bigram counts,
     * first-word counts, and the vocabulary size — the CCNet usage
     * where the LM comes from a CLEAN reference corpus and scores new
-    * data. `cb`/`c1` are cached (corpus-vocabulary-sized, reused per
-    * scoring batch or microbatch); the CALLER owns the handles and
-    * unpersists them when done, the [[noveltyRef]] contract.
+    * data. `cb`/`c1` are corpus-vocabulary-sized and reused per scoring
+    * batch or microbatch: [[bigramLmRef]] pins them, [[bigramLmRefLoad]]
+    * caches them. The CALLER owns them and calls `unpersist()` when
+    * done, the [[noveltyRef]] contract.
     */
   case class BigramLmRef(cb: DataFrame, c1: DataFrame, v: DataFrame) {
-    def unpersist(): Unit = Seq(cb, c1).foreach { df =>
-      // trained tables are either localCheckpoint()ed (bigramLmRef — the
-      // RDD handle is the only release path) or cache()d (bigramLmRefLoad)
-      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(df) match {
-        case Some(rdd) => rdd.unpersist(blocking = false)
-        case None      => df.unpersist()
-      }
-    }
+    def unpersist(): Unit = Materialize.release(cb, c1)
   }
 
-  def bigramLmRef(refDf: DataFrame, text: Column): BigramLmRef = {
+  def bigramLmRef(refDf: DataFrame, text: Column): BigramLmRef = Materialize.scoped {
     val bgs = DedupFunctions
       .spread(refDf)
       .select(TextFunctions.words(text).as("w"))
@@ -601,34 +584,30 @@ object CorpusFunctions {
         ).as("bg")
       )
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint()
-    // localCheckpoint (not cache): truncates the lineage so releasing the
-    // bigram stream below cannot strand a recompute path — a cached block
-    // lost to executor failure mid-stream would otherwise re-root at the
-    // unpersisted checkpoint RDD and fail unrecoverably
-    val cb = bgs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")).localCheckpoint()
-    val c1 = bgs.groupBy(col("w1")).agg(count(lit(1)).as("c1")).localCheckpoint()
+      .transform(Materialize.pin)
+    // pinned (not cached): truncates the lineage so releasing the bigram
+    // stream cannot strand a recompute path — a cached block lost to
+    // executor failure mid-stream would otherwise re-root at the
+    // released checkpoint RDD and fail unrecoverably
+    val cb = Materialize.pin(bgs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")))
+    val c1 = Materialize.pin(bgs.groupBy(col("w1")).agg(count(lit(1)).as("c1")))
     // V collapses to one scalar — evaluate it NOW and rebuild it as a
-    // literal frame, so nothing in the returned ref still points at
-    // the checkpointed bigram stream once it is released below
+    // literal frame, so nothing in the returned ref still reads the
+    // bigram stream, and the scope releases it
     val vVal = bgs
       .select(col("w1").as("w"))
       .unionAll(bgs.select(col("w2").as("w")))
       .agg(countDistinct(col("w")).as("v"))
       .head()
       .getLong(0)
-    val v = refDf.sparkSession.range(1).select(lit(vVal).as("v"))
-    // both model tables are checkpointed (lineage-free) — the bigram
-    // stream can be released safely now
-    org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(bgs).foreach(_.unpersist(blocking = true))
-    BigramLmRef(cb, c1, v)
+    BigramLmRef(cb, c1, refDf.sparkSession.range(1).select(lit(vVal).as("v")))
   }
 
   /** Reference-LM persistence (the bloomSketch precedent): write the
     * trained tables once, load them for every scoring batch or
     * streaming gate without re-reading the reference corpus. The
-    * loader rebuilds the same cached-tables + literal-V shape
-    * [[bigramLmRef]] returns (caller owns the cache handles).
+    * loader rebuilds the [[bigramLmRef]] shape with cached tables and a
+    * literal V (the caller owns the tables).
     */
   def bigramLmRefSave(ref: BigramLmRef, path: String): Unit = {
     ref.cb.write.mode("overwrite").parquet(s"$path/cb")
@@ -637,8 +616,8 @@ object CorpusFunctions {
   }
 
   def bigramLmRefLoad(spark: org.apache.spark.sql.SparkSession, path: String): BigramLmRef = {
-    val cb = spark.read.parquet(s"$path/cb").cache()
-    val c1 = spark.read.parquet(s"$path/c1").cache()
+    val cb = Materialize.cache(spark.read.parquet(s"$path/cb"))
+    val c1 = Materialize.cache(spark.read.parquet(s"$path/c1"))
     val vVal = spark.read.parquet(s"$path/v").head().getLong(0)
     BigramLmRef(cb, c1, spark.range(1).select(lit(vVal).as("v")))
   }
@@ -653,41 +632,40 @@ object CorpusFunctions {
     * plain equi-joins — Spark picks broadcast vs shuffled-hash by
     * table size; the probe side never carries text.
     */
-  def bigramLmScoreAgainst(df: DataFrame, idCol: Column, text: Column, ref: BigramLmRef): DataFrame = {
-    // checkpoint the bigram stream: the nested zipf-split joins put it
-    // in four union arms (the bigramLm shape — shuffles dedupe via
-    // ReuseExchange, the narrow probe pass re-runs against storage)
-    val bgs = DedupFunctions
-      .spread(df)
-      .select(idCol.as("doc_id"), TextFunctions.words(text).as("w"))
-      .where(size(col("w")) >= 2)
-      .select(
-        col("doc_id"),
-        explode(
-          expr("transform(sequence(0, size(w) - 2), i -> named_struct('w1', w[i], 'w2', w[i + 1]))")
-        ).as("bg"),
-      )
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint()
-    val out = bgs
-      .transform(p => zipfSplitJoin(p, ref.cb, Seq("w1", "w2"), "cb", 1000L, "left"))
-      .transform(p => zipfSplitJoin(p, ref.c1, Seq("w1"), "c1", 1000L, "left"))
-      .crossJoin(broadcast(ref.v))
-      .withColumn(
-        "p_scaled",
-        floor(
-          lit(1e12) * ((coalesce(col("cb"), lit(0L)) + 1).cast("double") /
-            (coalesce(col("c1"), lit(0L)) + col("v")).cast("double"))
-        ),
-      )
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("p_scaled")).as("__sum_p"))
-      .withColumn("lm_prob_ppm", floor(col("__sum_p").cast("double") / col("n_bigrams").cast("double")) / 1e6)
-      .select(col("doc_id"), col("n_bigrams"), col("lm_prob_ppm"))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(bgs).foreach(_.unpersist(blocking = true))
-    out
-  }
+  def bigramLmScoreAgainst(df: DataFrame, idCol: Column, text: Column, ref: BigramLmRef): DataFrame =
+    Materialize.scoped {
+      // pin the bigram stream: the nested zipf-split joins put it
+      // in four union arms (the bigramLm shape — shuffles dedupe via
+      // ReuseExchange, the narrow probe pass re-runs against storage)
+      val bgs = DedupFunctions
+        .spread(df)
+        .select(idCol.as("doc_id"), TextFunctions.words(text).as("w"))
+        .where(size(col("w")) >= 2)
+        .select(
+          col("doc_id"),
+          explode(
+            expr("transform(sequence(0, size(w) - 2), i -> named_struct('w1', w[i], 'w2', w[i + 1]))")
+          ).as("bg"),
+        )
+        .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+        .transform(Materialize.pin)
+      bgs
+        .transform(p => zipfSplitJoin(p, ref.cb, Seq("w1", "w2"), "cb", 1000L, "left"))
+        .transform(p => zipfSplitJoin(p, ref.c1, Seq("w1"), "c1", 1000L, "left"))
+        .crossJoin(broadcast(ref.v))
+        .withColumn(
+          "p_scaled",
+          floor(
+            lit(1e12) * ((coalesce(col("cb"), lit(0L)) + 1).cast("double") /
+              (coalesce(col("c1"), lit(0L)) + col("v")).cast("double"))
+          ),
+        )
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_bigrams"), sum(col("p_scaled")).as("__sum_p"))
+        .withColumn("lm_prob_ppm", floor(col("__sum_p").cast("double") / col("n_bigrams").cast("double")) / 1e6)
+        .select(col("doc_id"), col("n_bigrams"), col("lm_prob_ppm"))
+        .transform(Materialize.pin)
+    }
 
   /** BM25 relevance of every document to a fixed query string
     * (Robertson & Zaragoza 2009, "The probabilistic relevance
@@ -1285,11 +1263,8 @@ object CorpusFunctions {
         * doc_id (a corpus-wide shuffle at 100 TB).
         */
       passthrough: Seq[String] = Nil,
-  ): DataFrame = {
-    val (out, perDoc) = dsirPlan(df, idCol, text, isTarget, tauPpm, passthrough)
-    val result = out.localCheckpoint()
-    org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(perDoc).foreach(_.unpersist(blocking = true))
-    result
+  ): DataFrame = Materialize.scoped {
+    Materialize.pin(dsirPlan(df, idCol, text, isTarget, tauPpm, passthrough)._1)
   }
 
   /** Un-checkpointed DSIR plan + the checkpointed per-(doc, bucket)
@@ -1371,7 +1346,7 @@ object CorpusFunctions {
       )
       .groupBy(Seq(col("doc_id"), col("__t"), substring(md5(col("__w")), 1, 2).as("__b")) ++ passCols: _*)
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .transform(Materialize.pin)
     val ratios = perDoc
       .groupBy(col("__b"))
       .agg(
@@ -1420,7 +1395,7 @@ object CorpusFunctions {
     * no float, bit-stable across engines and partitionings.
     *
     * EAGER: this call runs its Spark jobs at call time (the
-    * certificate, then the localCheckpoint that lets the cached gram
+    * certificate, then the pin that lets the cached gram
     * frame and the certified counts release immediately) and pins the
     * result to executor-local storage — no lineage recompute on
     * executor loss. Callers at cluster scale who need fault-tolerant
@@ -1428,15 +1403,11 @@ object CorpusFunctions {
     * materialization (reliable `checkpoint`, a parquet round-trip, …),
     * calling the returned release themselves once the plan is consumed.
     */
-  def ngramNovelty(df: DataFrame, idCol: Column, text: Column, n: Int = 3, hotMin: Long = 1000L): DataFrame = {
-    val (plan, release) = ngramNoveltyPlan(df, idCol, text, n, hotMin)
-    // materialize the small per-doc result so the cached gram frame
-    // (consumed by the df aggregate and both join arms) and the
-    // certified counts release NOW — in the finally so a failed
-    // checkpoint job can't pin them for the session's lifetime
-    try plan.localCheckpoint()
-    finally release()
-  }
+  def ngramNovelty(df: DataFrame, idCol: Column, text: Column, n: Int = 3, hotMin: Long = 1000L): DataFrame =
+    // pin the small per-doc result so the cached gram frame (consumed
+    // by the df aggregate and both join arms) and the certified counts
+    // release NOW — also when the pin's job fails
+    Materialize.scoped(Materialize.pin(ngramNoveltyPlan(df, idCol, text, n, hotMin)._1))
 
   /** Un-checkpointed [[ngramNovelty]] plan + the release of what it
     * rides on: the cached gram frame and the certified df counts.
@@ -1453,7 +1424,7 @@ object CorpusFunctions {
       text: Column,
       n: Int = 3,
       hotMin: Long = 1000L,
-  ): (DataFrame, () => Unit) = {
+  ): (DataFrame, () => Unit) = Materialize.scoped {
     // shingleIndex places the spread() barrier AFTER the word-split
     // projection (its documented rationale: an inlined `__w` re-runs
     // normalize+split per n-gram slot) — reuse it rather than drift
@@ -1461,13 +1432,11 @@ object CorpusFunctions {
       .shingleIndex(df.select(idCol.as("doc_id"), text.as("__text")), "doc_id", "__text", n)
       .withColumnRenamed("shingle", "g")
       .withColumn("gh", xxhash64(col("g")))
-      .cache()
+      .transform(Materialize.cache)
     // df aggregate and Zipf join keyed on the certified key: there is
     // no exact verification downstream, so merged counts would change
     // n_novel. The probe rows narrow to (doc_id, key).
-    val (dfreq, key) =
-      try DedupFunctions.certifiedCounts(grams, "g", "gh", "gdf")
-      catch { case e: Throwable => grams.unpersist(blocking = true); throw e }
+    val (dfreq, key) = DedupFunctions.certifiedCounts(grams, "g", "gh", "gdf")
     val out = zipfSplitJoin(grams.select(col("doc_id"), col(key)), dfreq, Seq(key), "gdf", hotMin)
       .groupBy(col("doc_id"))
       .agg(
@@ -1475,11 +1444,7 @@ object CorpusFunctions {
         sum(when(col("gdf") === 1L, 1L).otherwise(0L)).as("n_novel"),
       )
       .withColumn("novelty_ppm", expr("1000000 * n_novel div n_ngrams"))
-    val release = () => {
-      grams.unpersist(blocking = true)
-      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(dfreq).foreach(_.unpersist(blocking = true))
-    }
-    (out, release)
+    (out, () => Materialize.release(grams, dfreq))
   }
 
   /** Dedup-saturation curve — "how much NEW data does each crawl

@@ -49,27 +49,21 @@ object DedupFunctions {
     * Returns `(counts(key, cntCol), key)`, `key` being `hashCol` or
     * `valueCol`; callers key every downstream join, order and array on
     * `key`. EAGER: runs the aggregate job and the flag check at call
-    * time. The returned counts are a local checkpoint that the caller
-    * releases (through `GraftSqlBridge.checkpointedRdd`) or leaves to
-    * the query-level sweep of persistent RDDs, like the other
-    * checkpoints in this object; after a collision the hash-keyed one
-    * is released here.
+    * time. The returned counts are pinned ([[Materialize]]); after a
+    * collision the scope releases the hash-keyed ones.
     */
   private[graft] def certifiedCounts(
       frame: DataFrame,
       valueCol: String,
       hashCol: String,
       cntCol: String,
-  ): (DataFrame, String) = {
+  ): (DataFrame, String) = Materialize.scoped {
     val byHash = frame
       .groupBy(col(hashCol))
       .agg(count(lit(1)).as(cntCol), (min(col(valueCol)) =!= max(col(valueCol))).as("__collided"))
-      .localCheckpoint()
+      .transform(Materialize.pin)
     if (byHash.where(col("__collided")).isEmpty) (byHash.select(col(hashCol), col(cntCol)), hashCol)
-    else {
-      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(byHash).foreach(_.unpersist(blocking = true))
-      (frame.groupBy(col(valueCol)).agg(count(lit(1)).as(cntCol)).localCheckpoint(), valueCol)
-    }
+    else (frame.groupBy(col(valueCol)).agg(count(lit(1)).as(cntCol)).transform(Materialize.pin), valueCol)
   }
 
   /** Priority-aware exact dedup across sources: when the same
@@ -153,9 +147,9 @@ object DedupFunctions {
       numThreshold: Int = 4,
       denThreshold: Int = 5,
   ): DataFrame = {
-    // eager localCheckpoint, not cache: three consumers (sizes + both
-    // join sides) — see jaccardPairsPrefix for the rationale
-    val sh = shingleIndex(df, idCol, textCol, n).localCheckpoint()
+    // pinned, not cached: three consumers (sizes + both join sides) —
+    // see jaccardPairsPrefix for the rationale
+    val sh = Materialize.pin(shingleIndex(df, idCol, textCol, n))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val inter = sh
       .select(col("doc_id").as("doc_a"), col("shingle"))
@@ -200,8 +194,8 @@ object DedupFunctions {
     // set). Every caller uses 4/5.
     require(numThreshold >= 1, "jaccardPairsPrefix needs a positive numerator threshold")
     // The shingle index feeds THREE consumers (the df count+join, the
-    // verification arrays, the prefix projection). localCheckpoint
-    // (eager, MEMORY_AND_DISK) instead of cache: a lazy cache entry
+    // verification arrays, the prefix projection). Pinned (eager,
+    // MEMORY_AND_DISK) instead of cached: a lazy cache entry
     // under the repeated checkpoint/release cycles of the CC consumers
     // degrades into per-consumer recomputation of the whole shingling
     // (measured 8 s → 193 s on the second dedup_groups run in one
@@ -212,7 +206,7 @@ object DedupFunctions {
     // alone was 58 s of the 162 s cell).
     val sh = shingleIndex(df, idCol, textCol, n)
       .withColumn("h", xxhash64(col("shingle")))
-      .localCheckpoint()
+      .transform(Materialize.pin)
     // global rarity: document frequency per key, certified so that the
     // key is the 8-byte hash whenever it is injective over this run's
     // shingles (see certifiedCounts)
@@ -337,14 +331,13 @@ object DedupFunctions {
     */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String, n: Int = 3, perms: Int = 128, bands: Int = 32): DataFrame = {
     // The bucket frame is tiny (docs × bands rows of hashes) but its
-    // lineage carries the full signature computation. localCheckpoint
-    // (eager, MEMORY_AND_DISK) rather than cache: the frame feeds both
+    // lineage carries the full signature computation. Pinned (eager,
+    // MEMORY_AND_DISK) rather than cached: the frame feeds both
     // sides of the self-join, and a lazily-built cache under memory
     // pressure evicts and silently re-runs the perms×shingles hashing
     // per consumer (the ~30× bench collapse under load in r5); a
     // checkpointed partition spills to disk instead of recomputing.
-    // Bench/Verify release it via getPersistentRDDs after each query.
-    val buckets = lshBuckets(minhashSignatures(df, idCol, textCol, n, perms), perms, bands).localCheckpoint()
+    val buckets = Materialize.pin(lshBuckets(minhashSignatures(df, idCol, textCol, n, perms), perms, bands))
     buckets
       .select(col("band"), col("band_sig"), col("doc_id").as("doc_a"))
       .join(buckets.select(col("band"), col("band_sig"), col("doc_id").as("doc_b")), Seq("band", "band_sig"))
@@ -419,12 +412,12 @@ object DedupFunctions {
     // second inverted-index join: the shingle index then has exactly ONE
     // consumer (this aggregate), so nothing here needs a cache that
     // eviction could silently turn into a per-consumer re-run of the
-    // shingling — the r5 load-fragility. docSets is localCheckpoint'd
+    // shingling — the r5 load-fragility. docSets is pinned
     // (eager, disk-backed) because the candidate join reads it twice.
     val docSets = shingleIndex(df, idCol, textCol, n)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("shingle"))).as("shingles"), count(lit(1)).as("n_sh"))
-      .localCheckpoint()
+      .transform(Materialize.pin)
     cands
       .join(docSets.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"), col("n_sh").as("n_a")), "doc_a")
       .join(docSets.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"), col("n_sh").as("n_b")), "doc_b")
@@ -445,8 +438,8 @@ object DedupFunctions {
     * that changed), never touches data. Rounds needed = graph diameter
     * (near-dup components are tiny chains), capped defensively.
     */
-  def dedupGroups(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // localCheckpoint (eager) rather than cache: `labels` feeds BOTH the
+  def dedupGroups(pairs: DataFrame, maxIterations: Int = 20): DataFrame = Materialize.scoped {
+    // pinned rather than cached: `labels` feeds BOTH the
     // neighbor-min aggregate and the update join, so without lineage
     // truncation the logical plan doubles every round (2^rounds nodes —
     // analysis/optimization alone dominated the round-3 bench), and a
@@ -455,14 +448,8 @@ object DedupFunctions {
     // materialized RDD with a constant-size plan; on a cluster the same
     // call trades executor-loss recovery for truncation, exactly like
     // GraphX's periodic-checkpoint pattern for iterative algorithms.
-    // Dataset.unpersist is a NO-OP on localCheckpoint'd frames (it only
-    // clears CacheManager entries; the checkpoint persists at the RDD
-    // level), so stale rounds are released through the checkpointed RDD
-    // handle (GraftSqlBridge.checkpointedRdd) once superseded. Blocking:
-    // an async release racing the next round's structurally-identical
-    // checkpoint registration is the 10× variance class 97f5972 fixed.
-    def release(df: DataFrame): Unit =
-      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = true))
+    // Each round is released once the next one supersedes it; the
+    // scope releases the edges once the loop is done.
 
     // both directions from ONE scan of the pairs plan — a union of two
     // selects would evaluate the (expensive) candidate-pair join twice
@@ -476,8 +463,8 @@ object DedupFunctions {
         ).as("e")
       )
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint()
-    var checkpointed = edges.select(col("src").as("node")).distinct().withColumn("label", col("node")).localCheckpoint()
+      .transform(Materialize.pin)
+    var checkpointed = Materialize.pin(edges.select(col("src").as("node")).distinct().withColumn("label", col("node")))
     var labels = checkpointed
     var changed = true
     var iter = 0
@@ -491,20 +478,17 @@ object DedupFunctions {
       val updated = labels
         .join(neighborMin, Seq("node"), "left")
         .select(col("node"), col("label").as("old"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .localCheckpoint()
+        .transform(Materialize.pin)
       // full count, not limit(1): a limit can short-circuit after a few
       // partitions, and the convergence check must never release the
       // previous round before this one is completely materialized
-      // (localCheckpoint is eager, but keep the check unconditional)
+      // (a pin is eager, but keep the check unconditional)
       changed = updated.where(col("label") =!= col("old")).count() > 0
-      release(checkpointed)
+      Materialize.release(checkpointed)
       checkpointed = updated
       labels = updated.select(col("node"), col("label"))
       iter += 1
     }
-    // edges are dead once the loop converges; the final labels
-    // checkpoint stays resident — the returned frame reads from it
-    release(edges)
     labels.select(col("node").as("doc_id"), col("label").as("group_id"))
   }
 
@@ -551,11 +535,7 @@ object DedupFunctions {
     * the root's self-edge keeps singleton stars in the frame.
     * Output matches [[dedupGroups]] exactly: (doc_id, group_id).
     */
-  def dedupGroupsStar(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // blocking, same rationale as dedupGroups.release
-    def release(df: DataFrame): Unit =
-      org.apache.spark.sql.GraftSqlBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = true))
-
+  def dedupGroupsStar(pairs: DataFrame, maxIterations: Int = 20): DataFrame = Materialize.scoped {
     // canonical orientation: one row per undirected edge, src > dst.
     var edges = pairs
       .select(
@@ -564,7 +544,7 @@ object DedupFunctions {
       )
       .where(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize.pin)
 
     // large-star sees the FULL neighborhood of u — both directions,
     // re-derived from the one-directional canonical store every round
@@ -602,7 +582,7 @@ object DedupFunctions {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIterations) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val next = Materialize.pin(smallStar(largeStar(edges)))
       // fixpoint = the edge set is a star forest in canonical form:
       // no node is both a child and a root (no chains left), and no
       // child points at two roots. Both checks are bounded single-pass
@@ -619,7 +599,7 @@ object DedupFunctions {
         .limit(1)
         .count() > 0
       converged = !chained && !multiRoot
-      release(edges)
+      Materialize.release(edges)
       edges = next
       iter += 1
     }
@@ -661,10 +641,7 @@ object DedupFunctions {
         ).as(Seq("off", "gram")),
       )
       .select(col("doc_id"), (col("off") + 1).cast("long").as("start"), col("gram"), xxhash64(col("gram")).as("gh"))
-      // the checkpoint (and the certified counts) outlive this call:
-      // like repeatedSpansChar's, the caller releases them (Bench/Verify
-      // via getPersistentRDDs after the query)
-      .localCheckpoint()
+      .transform(Materialize.pin)
     val (counts, key) = certifiedCounts(grams, "gram", "gh", "cnt")
     val dupGrams = counts.where(col("cnt") > 1).select(col(key))
     val marked = grams
@@ -731,11 +708,9 @@ object DedupFunctions {
         posexplode(expr(s"graft_char_grams(__t, $k)")).as(Seq("off", "gram")),
       )
       .select(col("doc_id"), (col("off") + 1).cast("long").as("start"), col("gram"), xxhash64(col("gram")).as("gh"))
-      // two consumers (count aggregate + probe side): eager checkpoint,
-      // not cache — same rationale as jaccardPairsPrefix; Bench/Verify
-      // release it and the certified counts via getPersistentRDDs after
-      // the query
-      .localCheckpoint()
+      // two consumers (count aggregate + probe side): pinned, not
+      // cached — same rationale as jaccardPairsPrefix
+      .transform(Materialize.pin)
     // count aggregate and Zipf join keyed on the certified key (see
     // certifiedCounts): the repeated-mark decision is cnt > 1, so
     // merged counts would mark spans that never repeat. The probe rows
@@ -858,8 +833,8 @@ object DedupFunctions {
     // winnowing, the expensive scan) feeds both the df count and the
     // probe side of the cap join, then sizes and both self-join sides
     // downstream — same placement rationale as HammingJoin.pairs'
-    // banded checkpoint; Bench/Verify release via getPersistentRDDs
-    val all = TextFunctions.fingerprints(df, col(idCol), col(textCol), k, w).localCheckpoint()
+    // banded pin
+    val all = Materialize.pin(TextFunctions.fingerprints(df, col(idCol), col(textCol), k, w))
     val fps =
       if (maxDf <= 0) all
       else all.join(all.groupBy(col("fp")).agg(count(lit(1)).as("__df")).where(col("__df") <= maxDf), "fp").drop("__df")
@@ -915,9 +890,8 @@ object DedupFunctions {
         ).as(Seq("blk", "unit")),
       )
       .withColumn("__h", md5(col("unit")))
-      // two consumers (first-occurrence agg + join probe): eager
-      // checkpoint; Bench/Verify release via getPersistentRDDs
-      .localCheckpoint()
+      // two consumers (first-occurrence agg + join probe): pinned
+      .transform(Materialize.pin)
     val first = inst
       .groupBy(col("__h"))
       .agg(min(struct(col("doc_id"), col("blk"))).as("__first"))
@@ -1170,10 +1144,9 @@ object DedupFunctions {
         col("__c.e").cast("long").as("span_end"),
         md5(expr("substring(__t, __c.s, __c.e - __c.s + 1)")).as("__fp"),
       )
-      // two consumers (fp count + probe side): eager checkpoint, same
-      // rationale as repeatedSpansChar; Bench/Verify release it via
-      // getPersistentRDDs after the query
-      .localCheckpoint()
+      // two consumers (fp count + probe side): pinned, same rationale
+      // as repeatedSpansChar
+      .transform(Materialize.pin)
     val freq = chunks.groupBy(col("__fp")).agg(count(lit(1)).as("n_copies"))
     CorpusFunctions
       .zipfSplitJoin(chunks, freq, Seq("__fp"), "n_copies", hotMin)

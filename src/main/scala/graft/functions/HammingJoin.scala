@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * corpus; the cap bounds per-key fanout at a bounded recall cost (a
   * pair is missed only if EVERY band it shares is hot) — the same
   * trade `audioFpPairs` and `winnowPairs` make. The banded frame is
-  * consumed by both join sides (and the df cap), so it is eagerly
-  * localCheckpoint'd; Bench/Verify release via getPersistentRDDs.
+  * consumed by both join sides (and the df cap), so it is pinned
+  * ([[Materialize]]).
   *
   * Output: `(id_a, id_b, hamming)` with `id_a < id_b`, one row per
   * pair within `maxHamming`.
@@ -69,7 +69,7 @@ object HammingJoin {
         col("__sig"),
         posexplode(expr(bandArrayExpr("__sig", bands))).as(Seq("band", "band_val")),
       )
-      .localCheckpoint()
+      .transform(Materialize.pin)
     val kept =
       if (maxDf <= 0L) banded
       else

@@ -270,20 +270,19 @@ object TextFunctions {
         "__bi",
         expr("CASE WHEN size(__w) >= 2 THEN transform(sequence(1, size(__w) - 1), i -> concat_ws(' ', element_at(__w, i), element_at(__w, i + 1))) ELSE array() END"),
       )
-    // eager localCheckpoint, NOT cache: dupTri feeds BOTH the final
-    // join's left side and the bigram explode — uncached, the regex
-    // tokenization and n-gram builds would run twice per document, and
-    // a lazily-built cache under memory pressure evicts and silently
-    // re-runs them per consumer (the r5 30× bench collapse that moved
-    // jaccardPairs to checkpoints); Bench/Verify release the RDD via
-    // getPersistentRDDs like the other checkpointed operators
+    // pinned, NOT cached: dupTri feeds BOTH the final join's left side
+    // and the bigram explode — unpinned, the regex tokenization and
+    // n-gram builds would run twice per document, and a lazily-built
+    // cache under memory pressure evicts and silently re-runs them per
+    // consumer (the r5 30× bench collapse that moved jaccardPairs to
+    // checkpoints)
     val dupTri = base.select(
       col("doc_id"),
       when(size(col("__tri")) > 0,
         ratio6(size(col("__tri")) - size(array_distinct(col("__tri"))), size(col("__tri"))))
         .otherwise(lit(0.0)).as("dup_trigram_frac"),
       col("__bi"),
-    ).localCheckpoint()
+    ).transform(Materialize.pin)
     val topBigram = dupTri
       .select(col("doc_id"), explode(col("__bi")).as("bigram"))
       .groupBy(col("doc_id"), col("bigram"))

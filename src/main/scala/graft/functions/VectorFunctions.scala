@@ -161,10 +161,8 @@ object VectorFunctions {
     * cells — cells are disjoint, so a pair appears at most once
     * across the probe arms. `finish` shapes the scored frame
     * (query_id, qe, q_label, neighbor_id, ce, n_label, cosine); its
-    * result is localCheckpoint-materialized so BOTH cached embedding
-    * copies release before returning (blocking, as [[TrainSample]]
-    * releases — this lifecycle is the fragile part, kept in ONE
-    * place).
+    * result is pinned so the scope releases BOTH cached embedding
+    * copies before returning.
     */
   private def ivfScored(
       opName: String,
@@ -176,18 +174,18 @@ object VectorFunctions {
       trainLimit: Int,
       samePair: Boolean,
       pairPred: Column = lit(true),
-  )(finish: DataFrame => DataFrame): DataFrame = {
+  )(finish: DataFrame => DataFrame): DataFrame = Materialize.scoped {
     require(nCells >= 2, s"$opName needs at least 2 cells (least() argmin is binary-plus)")
     require(nProbe >= 1 && nProbe <= nCells, "nProbe must be in [1, nCells]")
     withFns(queries)
-    val cand = candidates.cache()
+    val cand = Materialize.cache(candidates)
     val centroids = trainKmeans(cand.select(col("vec_id"), col("embedding")), nCells, lloydIterations, trainLimit)
     // the candidate norm is materialized INTO the cache — computed once
     // per vector for the whole probe scan (see qcCosine)
     val indexed = withCNorm(
       assignCell(cand, centroids)
         .select(col("cell"), col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("label").as("n_label"))
-    ).cache()
+    ).transform(Materialize.cache)
     val probes = withQNorm(
       queries
         .withColumn("cell", explode(cellNearest(col("embedding"), centroids, nProbe)))
@@ -197,10 +195,7 @@ object VectorFunctions {
       .join(indexed, Seq("cell"))
       .where((if (samePair) lit(true) else col("query_id") =!= col("neighbor_id")) && pairPred)
       .withColumn("cosine", qcCosine)
-    val out = finish(scored).localCheckpoint()
-    cand.unpersist(blocking = true)
-    indexed.unpersist(blocking = true)
-    out
+    Materialize.pin(finish(scored))
   }
 
   /** Cell-scoped scale dual of [[knnLabelNoise]] — the IVF recipe
@@ -502,16 +497,16 @@ object VectorFunctions {
       trainLimit: Int = 100000,
       planesPerBand: Int = 4,
       bands: Int = 16,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     require(nCells >= 2, "semanticDedup needs at least 2 cells")
     require(planesPerBand * bands <= 64, "banded signature must fit in 64 bits")
     withFns(df)
     val spark = df.sparkSession
     val vecs = DedupFunctions.spread(df)
       .select(col("vec_id"), col("embedding"))
-      .cache()
+      .transform(Materialize.cache)
     val centroids = trainKmeans(vecs, nCells, lloydIterations, trainLimit)
-    val indexed = assignCell(vecs, centroids).select(col("cell"), col("vec_id"), col("embedding")).cache()
+    val indexed = Materialize.cache(assignCell(vecs, centroids).select(col("cell"), col("vec_id"), col("embedding")))
     // candidate pairs WITHIN a cell via banded hyperplane LSH: joining
     // all pairs per cell is Σ cell² — quadratic once the corpus
     // outgrows nCells (and the expression-literal argmin bounds how far
@@ -553,14 +548,11 @@ object VectorFunctions {
       .where(col("cosine") >= lit(threshold))
       .select(col("vec_b").as("vec_id"))
       .distinct()
-    val out = indexed
+    indexed
       .join(dupped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"))
-      // small survivor list; release the cached inputs immediately
-      .localCheckpoint()
-    vecs.unpersist(blocking = true)
-    indexed.unpersist(blocking = true)
-    out
+      // small survivor list; the scope releases the cached inputs now
+      .transform(Materialize.pin)
   }
 
   /** Self-supervised prototype pruning (Sorscher, Geirhos, Shekhar,
@@ -592,13 +584,13 @@ object VectorFunctions {
       lloydIterations: Int = 5,
       trainLimit: Int = 100000,
       exactRank: Boolean = true,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     require(pruneFrac >= 0.0 && pruneFrac < 1.0, "pruneFrac must be in [0, 1)")
     require(nCells >= 2, "prototypePrune needs at least 2 cells (least() argmin is binary-plus)")
     val spark = df.sparkSession
     val vecs = DedupFunctions.spread(df)
       .select(col("vec_id"), col("embedding"))
-      .cache()
+      .transform(Materialize.cache)
     val centroids = trainKmeans(vecs, nCells, lloydIterations, trainLimit)
     val assigned = vecs
       .withColumn("__a", cellAssign(col("embedding"), centroids))
@@ -625,9 +617,7 @@ object VectorFunctions {
           .where(col("proto_d2_nano") >= col("__cut"))
           .select(col("vec_id"), col("cell"), col("proto_d2_nano"))
       }
-    val result = out.localCheckpoint()
-    vecs.unpersist(blocking = true)
-    result
+    Materialize.pin(out)
   }
 
   /** Cluster-balanced diversity sampling — flatten the cluster-mass
@@ -652,13 +642,13 @@ object VectorFunctions {
       nCells: Int = 16,
       lloydIterations: Int = 5,
       trainLimit: Int = 100000,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     require(targetPerCell >= 1L, "targetPerCell must be positive")
     require(nCells >= 2, "clusterBalance needs at least 2 cells (least() argmin is binary-plus)")
     val spark = df.sparkSession
     val vecs = DedupFunctions.spread(df)
       .select(col("vec_id"), col("embedding"))
-      .cache()
+      .transform(Materialize.cache)
     val centroids = trainKmeans(vecs, nCells, lloydIterations, trainLimit)
     val assigned = assignCell(vecs, centroids).select(col("vec_id"), col("cell"))
     val counts = assigned.groupBy(col("cell")).agg(count(lit(1)).as("__n"))
@@ -673,13 +663,11 @@ object VectorFunctions {
       8,
       "0",
     )
-    val out = assigned
+    assigned
       .join(broadcast(counts), Seq("cell"))
       .where(col("__n") <= targetPerCell || digits < cut)
       .select(col("vec_id"), col("cell"))
-      .localCheckpoint()
-    vecs.unpersist(blocking = true)
-    out
+      .transform(Materialize.pin)
   }
 
   /** IVF (inverted-file) ANN — the coarse-quantizer alternative to
@@ -703,14 +691,14 @@ object VectorFunctions {
       nProbe: Int = 4,
       lloydIterations: Int = 5,
       trainLimit: Int = 100000,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     require(nCells >= 2, "ivfAnn needs at least 2 cells (least() argmin is binary-plus)")
     require(nProbe >= 1 && nProbe <= nCells, "nProbe must be in [1, nCells]")
     withFns(df)
     val spark = df.sparkSession
     val vecs = DedupFunctions.spread(df)
       .select(col("vec_id"), col("embedding"))
-      .cache()
+      .transform(Materialize.cache)
 
     val centroids = trainKmeans(vecs, nCells, lloydIterations, trainLimit)
 
@@ -719,7 +707,7 @@ object VectorFunctions {
     val indexed = assignCell(vecs, centroids)
       .select(col("cell"), col("vec_id"), col("embedding"))
       .withColumn("__nc", sqrt(expr("graft_dot12(embedding, embedding)").cast("double")))
-      .cache()
+      .transform(Materialize.cache)
     // probe list: each query's nProbe nearest cells
     val probes = withQNorm(
       vecs
@@ -731,18 +719,15 @@ object VectorFunctions {
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", dotInt("qe", "ce"))
       .withColumn("cosine", col("dot").cast("double") / (col("__nq") * col("__nc")))
-    val out = ranked
+    ranked
       .groupBy(col("query_id"))
       .agg(topK(k, asc = false, col("cosine"), col("neighbor_id")).as("__tk"))
       .select(col("query_id"), posexplode(col("__tk")).as(Seq("__r", "__e")))
       .select(col("query_id"), col("__e.id").as("neighbor_id"), col("__e.score").as("cosine"), (col("__r") + lit(1)).as("rank"))
-      // materialize the small result (|queries| × k rows) so the big
-      // cached inputs release NOW — without this every call pins two
+      // pin the small result (|queries| × k rows) so the scope releases
+      // the big cached inputs NOW — without this every call holds two
       // cached copies of the table until the caller drops the frame
-      .localCheckpoint()
-    vecs.unpersist(blocking = true)
-    indexed.unpersist(blocking = true)
-    out
+      .transform(Materialize.pin)
   }
 
   /** Product quantization with ADC search — the memory-scale ANN path
@@ -783,7 +768,7 @@ object VectorFunctions {
       trainLimit: Int = 100000,
       opq: Boolean = false,
       opqRotate: Int = 0,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     val spark = df.sparkSession
     val dim = df.select(size(col("embedding"))).first().getInt(0)
     require(dim % m == 0, s"embedding dim $dim must divide into $m subspaces")
@@ -791,7 +776,7 @@ object VectorFunctions {
     val dsub = dim / m
     val vecs = DedupFunctions.spread(df)
       .select(col("vec_id"), col("embedding"))
-      .cache()
+      .transform(Materialize.cache)
 
     // OPQ-lite: permute dimensions into balanced-variance subspaces
     // before training. A permutation is orthogonal, so true L2
@@ -820,9 +805,9 @@ object VectorFunctions {
     // projection collapse would otherwise inline the d²-op rotation
     // into all m×codebookSize codeword distances of the encode (the
     // production pipeline persists codes anyway — this is its
-    // in-session stand-in; Bench/Verify release via getPersistentRDDs)
+    // in-session stand-in, released by the scope)
     val pvecs =
-      if (opqRotate > 0) vecs.withColumn("embedding", applyT(col("embedding"))).localCheckpoint()
+      if (opqRotate > 0) Materialize.pin(vecs.withColumn("embedding", applyT(col("embedding"))))
       else vecs.withColumn("embedding", applyT(col("embedding")))
 
     // encode the whole corpus; codes are the only per-candidate state
@@ -842,9 +827,7 @@ object VectorFunctions {
       .agg(topK(k * rerankFactor, asc = true, col("approx_d2"), col("vec_id")).as("__tk"))
       .select(col("query_id"), explode(col("__tk.id")).as("neighbor_id"))
 
-    val out = rerankExact(shortlist, vecs, queries, k)
-    vecs.unpersist(blocking = true)
-    out
+    rerankExact(shortlist, vecs, queries, k)
   }
 
   /** OPQ-lite rotation: the balanced-variance dimension permutation —
@@ -1196,7 +1179,7 @@ object VectorFunctions {
       .agg(topK(k, asc = true, col("d2"), col("neighbor_id")).as("__tk"))
       .select(col("query_id"), posexplode(col("__tk")).as(Seq("__r", "__e")))
       .select(col("query_id"), col("__e.id").as("neighbor_id"), round(col("__e.score"), 6).as("d2"), (col("__r") + lit(1)).as("rank"))
-      .localCheckpoint()
+      .transform(Materialize.pin)
   }
 
   /** IVF-PQ — the composition the 100 TB path actually runs (Jégou et
@@ -1229,7 +1212,7 @@ object VectorFunctions {
       lloydIterations: Int = 5,
       trainLimit: Int = 100000,
       residual: Boolean = true,
-  ): DataFrame = {
+  ): DataFrame = Materialize.scoped {
     require(nCells >= 2 && nProbe >= 1 && nProbe <= nCells, "nProbe must be in [1, nCells], nCells >= 2")
     val spark = df.sparkSession
     val dim = df.select(size(col("embedding"))).first().getInt(0)
@@ -1237,7 +1220,7 @@ object VectorFunctions {
     val dsub = dim / m
     val vecs = DedupFunctions.spread(df)
       .select(col("vec_id"), col("embedding"))
-      .cache()
+      .transform(Materialize.cache)
 
     // ONE shared training sample for both quantizers
     val (centroids, books) = TrainSample.vectors(trainFrame(vecs, trainLimit)) { train =>
@@ -1303,9 +1286,7 @@ object VectorFunctions {
       .agg(topK(k * rerankFactor, asc = true, col("approx_d2"), col("vec_id")).as("__tk"))
       .select(col("query_id"), explode(col("__tk.id")).as("neighbor_id"))
 
-    val out = rerankExact(shortlist, vecs, queries, k)
-    vecs.unpersist(blocking = true)
-    out
+    rerankExact(shortlist, vecs, queries, k)
   }
 
   /** Per-dimension symmetric int8 quantization — the standard ANN
@@ -1405,10 +1386,10 @@ object VectorFunctions {
     * `trainLimit` lowest vec_ids (train small, project everything).
     * Emits (vec_id, pc0 … pc{k−1}).
     */
-  def pcaProject(df: DataFrame, k: Int = 8, trainLimit: Int = 100000): DataFrame = {
+  def pcaProject(df: DataFrame, k: Int = 8, trainLimit: Int = 100000): DataFrame = Materialize.scoped {
     val dim = df.select(size(col("embedding"))).first().getInt(0)
     require(k >= 1 && k <= dim, s"k=$k out of range for dim=$dim")
-    val vecs = spreadVecs(df).cache()
+    val vecs = Materialize.cache(spreadVecs(df))
     // one aggregate pass over the training frame: nothing to cache
     val (mean, cov) = pcaMeanCov(trainFrame(vecs, trainLimit), dim)
     val (eigVals, eigVecs) = jacobiEigSym(cov)
@@ -1424,10 +1405,7 @@ object VectorFunctions {
       val wArr = array(v.map(lit): _*)
       d.withColumn(s"pc$j", aggregate(zip_with(col("__c"), wArr, (a, b) => a * b), lit(0.0), (acc, x) => acc + x))
     }
-    val res = out.select(col("vec_id") +: comps.indices.map(j => round(col(s"pc$j"), 6).as(s"pc$j")): _*)
-    val materialized = res.localCheckpoint()
-    vecs.unpersist(blocking = true)
-    materialized
+    Materialize.pin(out.select(col("vec_id") +: comps.indices.map(j => round(col(s"pc$j"), 6).as(s"pc$j")): _*))
   }
 
   /** Respread helper shared by trainers: single-file inputs collapse

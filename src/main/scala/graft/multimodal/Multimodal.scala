@@ -1024,7 +1024,7 @@ object Multimodal {
     // same rationale as DedupFunctions.winnowPairs (the thin maxDf
     // filter on top re-evaluates cheaply; its shuffle dedups via
     // ReuseExchange)
-    val distinctFps = fps.select(col("asset_id"), col("fp")).distinct().localCheckpoint()
+    val distinctFps = graft.functions.Materialize.pin(fps.select(col("asset_id"), col("fp")).distinct())
     val kept =
       if (maxDf <= 0) distinctFps
       else

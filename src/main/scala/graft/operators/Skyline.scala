@@ -205,7 +205,7 @@ object Skyline {
       while (i < nDims) { v(i) = (rest % g).toInt; rest /= g; i += 1 }
       v
     }
-    val localCached = localSky.localCheckpoint(eager = true)
+    val localCached = graft.functions.Materialize.pin(localSky)
     val cellIds = localCached.select(col("__cell")).distinct().collect().map(_.getLong(0))
     // the driver step below is quadratic in NONEMPTY cells (pruning +
     // threat pairs), not merely a collect — bound it explicitly. 4096

@@ -428,19 +428,6 @@ object TimeSeriesOps {
       .select(tagCols.map(col) :+ col("ts") :+ col("value") :+ col("z"): _*)
   }
 
-  /** Skew-safe equi-join: salt the skewed (big) side's key into
-    * `saltFactor` sub-keys and explode the small side across all
-    * salts. Use when one series/user dominates the key distribution
-    * and AQE's size-based skew split isn't enough (e.g. a single hot
-    * series holding 30% of all points at 100 TB). Result is identical
-    * to `big.join(small, keys)`.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String], saltFactor: Int): DataFrame = {
-    val salted = big.withColumn("__salt", pmod(hash(keys.map(col) :+ monotonically_increasing_id(): _*), lit(saltFactor)))
-    val exploded = small.withColumn("__salt", explode(expr(s"sequence(0, ${saltFactor - 1})")))
-    salted.join(exploded, keys :+ "__salt").drop("__salt")
-  }
-
   /** Filter points outside [low, high] physical limits (metadata-driven
     * outlier screen; limits come from per-series metadata like
     * kukur/metadata/fields.py LimitLowPhysical/LimitHighPhysical).

@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CorpusFunctions, TextFunctions}
+import graft.functions.{CorpusFunctions, Materialize, TextFunctions}
 
 import QueryFixtures._
 
@@ -47,13 +47,13 @@ object CorpusQueries {
     QuerySpec("corpus_shard_export", { (s, dir) =>
       // fresh per-call directory (concurrent Verify/Bench on one host
       // must not race an overwrite against a re-read), manifest
-      // checkpointed so the files can be removed before returning
+      // pinned so the files can be removed before returning
       val tmp = java.nio.file.Files.createTempDirectory("graft_shard_export_q").toFile
       val manifest = CorpusFunctions
         .shardManifest(
           CorpusFunctions.shuffleShardsExport(Tables.documents(s, dir), "doc_id", nShards = 8, tmp.getAbsolutePath + "/out")
         )
-        .localCheckpoint()
+        .transform(Materialize.pin)
       def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }
       rm(tmp)
       manifest

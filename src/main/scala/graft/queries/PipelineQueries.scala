@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CorpusFunctions, DedupFunctions, TextFunctions}
+import graft.functions.{CorpusFunctions, DedupFunctions, Materialize, TextFunctions}
 
 import QueryFixtures._
 
@@ -66,7 +66,7 @@ object PipelineQueries {
       // kept feeds both the shingle index (via jaccardPairsPrefix) and
       // the final anti-join + chunking — cache the filtered frame so the
       // regex-heavy quality/langid scoring runs once
-      val kept = scored.where(col("quality_score") > 0.45 && col("pred_lang") === "en").cache()
+      val kept = Materialize.cache(scored.where(col("quality_score") > 0.45 && col("pred_lang") === "en"))
       val dupes = DedupFunctions
         .dedupGroups(DedupFunctions.jaccardPairsPrefix(kept, "doc_id", "text"))
         .where(col("doc_id") =!= col("group_id"))
@@ -247,7 +247,7 @@ object PipelineQueries {
         // plan's count aggregate, the mixed filter, the curriculum
         // docs + histogram, and the shard permutation; without the
         // cut it re-executes for each (measured 9.3 s vs ~4 s)
-        .localCheckpoint()
+        .transform(Materialize.pin)
       val mixed = CorpusFunctions
         .mixtureSampleJoined(train, col("doc_id"), col("lang"), col("text"), Map("en" -> 0.5, "zh" -> 0.25, "de" -> 0.25))
       val sched = CorpusFunctions.curriculumInterleave(

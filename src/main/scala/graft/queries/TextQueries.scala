@@ -435,9 +435,9 @@ object TextQueries {
     QuerySpec("text_lm_score_ref", { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val ref = CorpusFunctions.bigramLmRef(docs.where(col("lang") === "en"), col("text"))
-      val out = CorpusFunctions.bigramLmScoreAgainst(docs, col("doc_id"), col("text"), ref)
-      ref.unpersist() // out is materialized (localCheckpoint) before release
-      out
+      // the registry scope releases ref's tables: the pinned score no
+      // longer reads them
+      CorpusFunctions.bigramLmScoreAgainst(docs, col("doc_id"), col("text"), ref)
     }, Oracle(
       """WITH norm AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM documents),
          bgl AS (SELECT doc_id, unnest(generate_series(1, len(w) - 1)) AS i, w FROM norm WHERE len(w) >= 2),

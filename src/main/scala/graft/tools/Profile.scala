@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize
+
 /** Single dev-tool entry point for plan inspection and stage timing
   * (not part of the library surface). Replaces the one-off probes that
   * accumulated across rounds (BucketExplain, CcProfile, CurateProfile,
@@ -68,8 +70,7 @@ object Profile {
             .fold(System.err.println(s"[profile] unknown query: $name")) { q =>
               noop(q(spark, "/root/testdata/sf0.001")) // warm the IO + codegen path
               for (i <- 1 to 2) time(s"$name run$i")(noop(q(spark, sfDir)))
-              spark.catalog.clearCache()
-              spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+              Materialize.releaseAll(spark)
             }
         }
         spark.stop()
@@ -115,7 +116,7 @@ object Profile {
         val spark = session(32)
         val pairs = graft.functions.DedupFunctions
           .jaccardPairs(graft.Tables.documents(spark, sfDir), "doc_id", "text")
-          .localCheckpoint()
+          .transform(Materialize.pin)
         time("pairs")(pairs.count())
         time("dedupGroups")(noop(graft.functions.DedupFunctions.dedupGroups(pairs)))
         time("dedupGroupsStar")(noop(graft.functions.DedupFunctions.dedupGroupsStar(pairs)))
@@ -129,23 +130,19 @@ object Profile {
         docs.count()
         for (round <- 1 to 2) {
           println(s"--- round $round")
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+          Materialize.releaseAll(spark)
           val prefixPairs = graft.functions.DedupFunctions.jaccardPairsPrefix(docs, "doc_id", "text")
           time("prefix pairs eval")(noop(prefixPairs))
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+          Materialize.releaseAll(spark)
           val ckpt = graft.functions.DedupFunctions
             .jaccardPairsPrefix(docs, "doc_id", "text")
-            .localCheckpoint()
+            .transform(Materialize.pin)
           time("prefix pairs ckpt")(ckpt.count())
           time("dedupGroups on ckpt")(noop(graft.functions.DedupFunctions.dedupGroups(ckpt)))
           time("star on ckpt")(noop(graft.functions.DedupFunctions.dedupGroupsStar(ckpt)))
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+          Materialize.releaseAll(spark)
           time("dedupGroups lazy (query shape)")(noop(graft.SparkEntry.queries("dedup_groups")(spark, sfDir)))
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+          Materialize.releaseAll(spark)
           time("star lazy (query shape)")(noop(graft.SparkEntry.queries("dedup_groups_star")(spark, sfDir)))
         }
         spark.stop()
@@ -155,8 +152,7 @@ object Profile {
         graft.Tables.documents(spark, sfDir).count() // warm the IO path
         for (round <- 1 to 2) {
           println(s"--- round $round")
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+          Materialize.releaseAll(spark)
           time("pipeline_clean_corpus")(noop(graft.SparkEntry.queries("pipeline_clean_corpus")(spark, sfDir)))
           time("pipeline_curate")(noop(graft.SparkEntry.queries("pipeline_curate")(spark, sfDir)))
         }

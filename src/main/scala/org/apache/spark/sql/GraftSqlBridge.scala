@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
 import org.apache.spark.sql.classic.ClassicConversions._
 
 /** Bridge into `private[sql]` plan construction: turning a custom
@@ -21,15 +24,36 @@ object GraftSqlBridge {
     */
   def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 
-  /** The materialized RDD behind a `localCheckpoint()`ed frame, if any.
-    * `Dataset.unpersist` cannot release checkpoint storage (it only
-    * clears CacheManager entries), so iterative algorithms need the
-    * RDD handle to unpersist superseded rounds explicitly.
+  /** The checkpoint RDD behind a `localCheckpoint()`ed frame (or a view
+    * of one), if any. `Dataset.unpersist` cannot release checkpoint
+    * storage (it only clears CacheManager entries).
     */
-  def checkpointedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
+  def checkpointedRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+
+  /** Ids of every RDD behind a `LogicalRDD` in `df`'s analyzed plan,
+    * subqueries included, with their lineage: a frame built over
+    * `pinned.rdd` reads the checkpoint of `pinned`.
+    */
+  def rddReads(df: DataFrame): Set[Int] = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(rdd: RDD[_]): Unit = if (seen.add(rdd.id)) rdd.dependencies.foreach(d => walk(d.rdd))
+    df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd }.foreach(walk)
+    seen.toSet
+  }
+
+  /** The cache entry `df` is, if it is cached. */
+  def cacheEntry(df: DataFrame): Option[CachedRDDBuilder] =
+    df.sparkSession.sharedState.cacheManager.lookupCachedData(df).map(_.cachedRepresentation.cacheBuilder)
+
+  /** The cache entries `df`'s plan reads: every `InMemoryRelation` of
+    * its `withCachedData`, subqueries included. Computed apart from the
+    * frame's own query execution, so nothing is memoized there.
+    */
+  def cacheReads(df: DataFrame): Seq[CachedRDDBuilder] =
+    df.sparkSession.sharedState.cacheManager
+      .useCachedData(df.queryExecution.normalized.clone())
+      .collectWithSubqueries { case r: InMemoryRelation => r.cacheBuilder }
 
   /** A Column over a raw Catalyst expression — the doorway for graft's
     * native expressions whose model state (centroid/codebook matrices)

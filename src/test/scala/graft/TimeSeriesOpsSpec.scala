@@ -134,15 +134,6 @@ class TimeSeriesOpsSpec extends AnyFunSuite {
     assert(df.collect().map(_.getInt(1)).toSeq == Seq(1, 1, 0))
   }
 
-  test("saltedJoin equals plain join") {
-    val big = (1 to 100).map(i => (i % 3L, i.toDouble)).toDF("k", "v")
-    val small = Seq((0L, "a"), (1L, "b"), (2L, "c")).toDF("k", "name")
-    val plain = big.join(small, Seq("k")).groupBy("name").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = graft.operators.TimeSeriesOps.saltedJoin(big, small, Seq("k"), 8)
-      .groupBy("name").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
   test("dictionaryDecode joins labels via broadcast") {
     val df = Seq((1L, 0), (2L, 3), (3L, 9)).toDF("id", "code")
     val out = TimeSeriesOps
